@@ -37,11 +37,14 @@ import graft.core.{QueryDef, Tables}
   *    not just waste probe space, it would double-count that vector's
   *    ADC sub-terms and corrupt its serve distance.
   *  - [[search]] is q96's multi-probe ADC serve against the persisted
-  *    code table: per-query nprobe-cell LUT (broadcast), candidates
-  *    joined on (sub, code, cell) — the cell equi-key lines up with the
-  *    index's PARTITION column, so a real cluster dynamically prunes
-  *    the scan to probed cells; cost ∝ probed-cell sizes, over M-int
-  *    codes, never raw vectors.
+  *    code table, as IVFADC's single pass: the driver picks each
+  *    query's nprobe cells and residuals, the scan is statically pruned
+  *    to those `cell=` partitions, and one fused task per partition
+  *    builds the per-probe M×K LUTs, scores each code row as a sum of
+  *    M table lookups and keeps a k-bounded heap per query; one
+  *    single-partition exchange of ≤ tasks·queries·k rows merges the
+  *    heaps. Cost ∝ probed-cell sizes, over M-int codes, never raw
+  *    vectors.
   *  - [[compact]] is the q92/q95 maintenance op: committed runs
   *    collapse into the reserved `batch=-1` epoch at one file per cell,
   *    content-invariant, codebook meta carried by the shared
@@ -125,7 +128,7 @@ object IvfPqIndex {
   private def addFromGrid(spark: SparkSession, indexDir: String,
       eg: DataFrame, runId: Long): DataFrame = {
     require(runId >= 0, "runId -1 is reserved for the compacted epoch")
-    val (coarse, subcents) = readMeta(spark, indexDir)
+    val Codebooks(coarse, subcents) = readMeta(spark, indexDir)
     // residual + PQ codes, all frozen-codebook per-row argmins; codes
     // pack to one M-int array per vector (the FAISS code layout —
     // serve storage ∝ M ints, never the raw embedding)
@@ -148,9 +151,11 @@ object IvfPqIndex {
   /** Top-`k` ADC search of `queries` (vec_id, embedding) against the
     * persisted index at `nprobe` coarse cells per query — q96's serve
     * shape over frozen codebooks. Output (q_id, n_id, adist, rk),
-    * ordered. The (sub, code, p_cell) equi-join keys the broadcast LUT
-    * against the index's PARTITION column, so the scan prunes to probed
-    * cells (dynamic partition pruning on a real cluster). */
+    * ordered by (q_id, rk); ranks by (adist, n_id), a query never
+    * returns its own id. The probed-cell set is a static partition
+    * filter on the code scan, and the scan is one fused ADC pass
+    * (per-probe LUT, M lookups per code, per-query top-k heap) — no
+    * LUT join, candidate shuffle or window; see [[serve]]. */
   def search(spark: SparkSession, indexDir: String, queries: DataFrame,
       k: Int = 5, nprobe: Int = 2): DataFrame =
     serve(spark, indexDir, queries, k, nprobe, allowed = None)
@@ -245,57 +250,73 @@ object IvfPqIndex {
     if (nIds <= cutoff) df.join(broadcast(ids), Seq("vec_id"), joinType)
     else df.join(ids.hint("shuffle_hash"), Seq("vec_id"), joinType)
 
+  /** The serve every search flavor routes through — IVFADC's one pass
+    * (Jégou et al. §4): the driver grids the (small) query frame and
+    * picks each query's probes ([[AdcScan.plan]]); the code scan is
+    * [[probedCodes]] (pruned to the probed cells, tombstones and the
+    * allowed set applied); one fused task per scan partition builds
+    * the per-probe LUTs from the closure-captured residuals and flat
+    * sub-codebook, scores each row against the queries probing its
+    * cell and keeps a k-bounded heap per query ([[AdcScan.topK]]); a
+    * single-partition exchange of ≤ tasks·queries·k rows merges the
+    * heaps and ranks ([[AdcScan.merge]]). Every distance is the same
+    * exact integer sum as [[scoredCandidates]] with the same
+    * (adist, n_id) tie-break, so the rows equal its windowed top-k. */
   private def serve(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int,
-      allowed: Option[(DataFrame, Long)]): DataFrame =
-    topK(scoredCandidates(spark, indexDir, queries, nprobe, allowed), k)
-
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val wTop = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
-    scored
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("adist"),
-        col("rk").cast("long").as("rk"))
-      .orderBy("q_id", "rk")
+      allowed: Option[(DataFrame, Long)]): DataFrame = {
+    import spark.implicits._
+    val scan = AdcScan.plan(readMeta(spark, indexDir), queries, nprobe, k)
+    probedCodes(spark, indexDir, scan.cells, allowed)
+      .select(col("vec_id"), col("cell"), col("codes"))
+      .as[(Long, Int, Array[Int])]
+      .mapPartitions(rows => scan.topK(rows))
+      .repartition(1)
+      .mapPartitions(rows => AdcScan.merge(k, rows))
+      .toDF("q_id", "n_id", "adist", "rk")
   }
 
-  /** The ADC scoring stage shared by every serve flavor: (q_id, n_id,
-    * adist) for every candidate in a probed cell — exposed to q129 so
-    * the acceptance row can price candidate cost (rows scored) without
-    * re-deriving the serve algebra. `allowed` carries the id frame AND
-    * its counted size for [[idFilter]]'s gate. graft-private (not just
-    * ext) so tools.ScaleProbe can count candidates per query with the
-    * production construction. */
+  /** The relational ADC scoring stage: (q_id, n_id, adist) for every
+    * candidate in a probed cell, by a broadcast (sub, code, p_cell)
+    * LUT join and a (q_id, n_id) aggregate. Not a serve path: it is
+    * the candidate-count instrument (q129/q132, tools.ScaleProbe) and
+    * the reference form [[serve]] is tested against. `allowed` carries
+    * the id frame AND its counted size for [[idFilter]]'s gate. */
   private[graft] def scoredCandidates(spark: SparkSession, indexDir: String,
       queries: DataFrame, nprobe: Int,
       allowed: Option[(DataFrame, Long)]): DataFrame = {
-    val (coarse, subcents) = readMeta(spark, indexDir)
+    val Codebooks(coarse, subcents) = readMeta(spark, indexDir)
     // query-side grid, inline (≤ a handful of rows — no corpus spread)
     val qg = queries.select(col("vec_id"),
       expr(Similarity.gridSql).as("qa"))
-    // ONE execution of the probe-cell window (≤ queries·nprobe rows —
-    // bounded driver state) serves BOTH driver needs: the probed-cell
-    // IN-set below AND, fed back as a LOCAL relation, the ADC LUT's
-    // input — the LUT explode runs over the collected rows instead of
-    // re-running the probeCells scan+window inside the broadcast
-    // build. Same expressions, same arithmetic, one fewer query
-    // execution per serve (r18; the serve path was driver-analysis
-    // bound, not compute bound).
+    // one execution of the probe-cell window feeds both the probed-cell
+    // IN-set and, as a local relation, the LUT explode
     val pcPlan = Similarity.probeCells(qg, coarse, nprobe)
     val pcRows = pcPlan.collect()
     val pcLocal = spark.createDataFrame(
       java.util.Arrays.asList(pcRows: _*), pcPlan.schema)
     val lut = Similarity.probeLutOver(pcLocal, subcents)
-    // STATIC partition pruning on the cell= layout: the probed-cell set
-    // is known BEFORE the scan and the LUT join would drop
-    // unprobed-cell rows anyway, so put the IN-set where the file index
-    // can act on it: the scan lists only probed `cell=` directories
-    // instead of reading the whole code table and discarding at the
-    // join. Deterministic — unlike runtime DPP, which this composes
-    // with but does not depend on. ScanPruningSpec asserts the
-    // PartitionFilters line.
     val probedCells = pcRows.map(_.getAs[Int]("p_cell")).distinct.toSeq
+    probedCodes(spark, indexDir, probedCells, allowed)
+      .select(col("vec_id").as("n_id"), col("cell").as("p_cell"),
+        posexplode(col("codes")).as(Seq("sub", "code")))
+      .join(broadcast(lut), Seq("sub", "code", "p_cell"))
+      .filter(col("n_id") =!= col("q_id"))
+      .groupBy("q_id", "n_id")
+      .agg(sum("d2q").as("adist"))
+  }
+
+  /** The code rows a serve scores: the code table restricted to
+    * `probedCells`, minus tombstoned ids, semi-joined to the allowed
+    * ids when given. */
+  private def probedCodes(spark: SparkSession, indexDir: String,
+      probedCells: Seq[Int],
+      allowed: Option[(DataFrame, Long)]): DataFrame = {
+    // STATIC partition pruning on the cell= layout: the probed-cell set
+    // is known BEFORE the scan, so put the IN-set where the file index
+    // can act on it: the scan lists only probed `cell=` directories
+    // instead of reading the whole code table. Deterministic — unlike
+    // runtime DPP. ScanPruningSpec asserts the PartitionFilters line.
     val cutoff = idRowCutoff(spark)
     // lazily-forgotten ids vanish from the serve before any ranking
     // work; both the tombstone anti-join and the allowed-id semi-join
@@ -314,15 +335,9 @@ object IvfPqIndex {
             .getOrElse(tombs.count()), "left_anti", cutoff)
       case None => probed
     }
-    val cand = allowed.foldLeft(afterTombs) {
-        case (df, (ids, n)) => idFilter(df, ids, n, "left_semi", cutoff)
-      }
-      .select(col("vec_id").as("n_id"), col("cell").as("p_cell"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-    cand.join(broadcast(lut), Seq("sub", "code", "p_cell"))
-      .filter(col("n_id") =!= col("q_id"))
-      .groupBy("q_id", "n_id")
-      .agg(sum("d2q").as("adist"))
+    allowed.foldLeft(afterTombs) {
+      case (df, (ids, n)) => idFilter(df, ids, n, "left_semi", cutoff)
+    }
   }
 
   /** FORGET (tombstone) vectors from the persisted index — the FAISS
@@ -442,22 +457,17 @@ object IvfPqIndex {
     * (create throws if it exists; add/forget/compact never touch it —
     * rewriteAndSwap byte-copies it), so one parse per (JVM, indexDir)
     * suffices — a serve-heavy cell paid an FS read + ~17k-line parse
-    * per search before this. Bounded (LRU by insertion order, parsed
-    * codebooks are a few hundred KB each); invalidated by writeMeta so
-    * re-creating an index at a recycled path can never serve stale
-    * codebooks. */
+    * per search before this. Bounded at 32 indexes, evicting the least
+    * recently READ one (`accessOrder = true`; parsed codebooks are a
+    * few hundred KB each); invalidated by writeMeta so re-creating an
+    * index at a recycled path can never serve stale codebooks. */
   private val metaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String,
-        (Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])](
-        16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Codebooks](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            (Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])])])
-          : Boolean = size() > 32
+          e: java.util.Map.Entry[String, Codebooks]): Boolean = size() > 32
     })
 
-  private def readMeta(spark: SparkSession, indexDir: String)
-      : (Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])]) = {
+  private def readMeta(spark: SparkSession, indexDir: String): Codebooks = {
     val cached = metaCache.get(indexDir)
     if (cached != null) return cached
     val parsed = readMetaUncached(spark, indexDir)
@@ -465,8 +475,8 @@ object IvfPqIndex {
     parsed
   }
 
-  private def readMetaUncached(spark: SparkSession, indexDir: String)
-      : (Seq[(Int, Seq[Long])], Seq[(Int, Int, Seq[Long])]) = {
+  private def readMetaUncached(spark: SparkSession,
+      indexDir: String): Codebooks = {
     val path = new org.apache.hadoop.fs.Path(indexDir, "_graft_meta")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path))
@@ -485,7 +495,7 @@ object IvfPqIndex {
       val Array(_, sub, cell, vs) = l.split(" ", 4)
       (sub.toInt, cell.toInt, vs.split(",").map(_.toLong).toSeq)
     }
-    (coarse, subcents)
+    Codebooks(coarse, subcents)
   }
 
   // ---- registry -------------------------------------------------------
@@ -886,15 +896,16 @@ object IvfPqIndex {
           .getOrElse(readIndex(s, idx).count()))
       val queries = e.filter(col("vec_id") < 10)
         .select("vec_id", "embedding")
-      // one scoring pass per probe width feeds BOTH the candidate-cost
-      // count and the top-5 set (materialized once, q116's
-      // evaluation-order discipline)
+      // the served top-5 at each probe width, and the candidates the
+      // relational scoring stage counts at the same width
       val scoredF = scoredCandidates(s, idx, queries, 2,
-        Some((allowed, nAllowed))).localCheckpoint(true)
+        Some((allowed, nAllowed)))
       val scoredA = scoredCandidates(s, idx, queries, np,
-        Some((allowed, nAllowed))).localCheckpoint(true)
-      val servedF = topK(scoredF, 5).select("q_id", "n_id")
-      val servedA = topK(scoredA, 5).select("q_id", "n_id")
+        Some((allowed, nAllowed)))
+      val servedF = serve(s, idx, queries, 5, 2, Some((allowed, nAllowed)))
+        .select("q_id", "n_id")
+      val servedA = serve(s, idx, queries, 5, np, Some((allowed, nAllowed)))
+        .select("q_id", "n_id")
       val servedU = search(s, idx, queries, k = 5, nprobe = 2)
         .select("q_id", "n_id")
       val eg = Similarity.gridFrame(s, e)
@@ -1070,9 +1081,9 @@ object IvfPqIndex {
     * cand_adaptive ADC-scored rows and shortlist_fetched raw vectors
     * fetched by id (≤ 20·queries — the by-id tier's whole bill; a
     * post-hoc exact pass over the corpus would be |corpus|·queries).
-    * One scoring pass feeds the candidate count, the shortlist, and
-    * the serve (localCheckpoint, q116's evaluation-order discipline);
-    * ground truth is q129's exact filtered grid-L2 top-5. */
+    * The shortlist is the fused adaptive-width serve, the candidate
+    * count the relational scoring stage at the same width; ground truth
+    * is q129's exact filtered grid-L2 top-5. */
   private val q132FilteredRerankRecall = QueryDef(
     (s, dir) => {
       val idx = steadyIndex(s, dir)
@@ -1085,8 +1096,9 @@ object IvfPqIndex {
       val queries = e.filter(col("vec_id") < 10)
         .select("vec_id", "embedding")
       val scoredA = scoredCandidates(s, idx, queries, np,
-        Some((allowed, nAllowed))).localCheckpoint(true)
-      val shortlist = topK(scoredA, 20).select("q_id", "n_id")
+        Some((allowed, nAllowed)))
+      val shortlist = serve(s, idx, queries, 20, np,
+        Some((allowed, nAllowed))).select("q_id", "n_id")
       val eg = Similarity.gridFrame(s, e)
       val q = eg.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("qa").as("q_qa"))
@@ -1233,7 +1245,7 @@ object IvfPqIndex {
   /** STEADY-STATE serve row — what a 100×-deployment operator waits
     * on: five repeated q98 serves against the memoized index, each
     * FORCED eagerly (localCheckpoint) so every round pays the full
-    * scan→LUT-join→rank pipeline as its own job — exchange reuse
+    * scan→fused-ADC→merge pipeline as its own job — exchange reuse
     * cannot collapse the rounds into one, and the bench cell divided
     * by five IS the per-serve latency (min-of-passes never sees the
     * build, which the warmup's cache miss absorbed). Output is the
@@ -1276,4 +1288,171 @@ object IvfPqIndex {
     "q132_filtered_rerank_recall" -> q132FilteredRerankRecall,
     "q133_cell_balance" -> q133CellBalance,
   )
+}
+
+/** An index's parsed codebooks. `coarse` and `subcents` are the forms
+  * the relational encoders plant as literals; the flat arrays are what
+  * the fused serve ([[AdcScan]]) ships to its tasks:
+  *  - coarse cell `cellIds(i)` has centroid `cellCents(i·d until (i+1)·d)`;
+  *  - sub-codebook entries are sorted by (sub, code): sub m owns the
+  *    entries `subOff(m) until subOff(m+1)`, and entry e is code
+  *    `codeIds(e)` with centroid `subCents(e·PQ_SUBDIM until
+  *    (e+1)·PQ_SUBDIM)`. Code ids are the seed vectors' ids, not 0..K-1,
+  *    and a sub keeps only its non-empty cells, hence the search. */
+private[ext] final case class Codebooks(coarse: Seq[(Int, Seq[Long])],
+    subcents: Seq[(Int, Int, Seq[Long])]) {
+  val cellIds: Array[Int] = coarse.map(_._1).toArray
+  val cellCents: Array[Long] = coarse.flatMap(_._2).toArray
+  private val entries = subcents.sortBy(t => (t._1, t._2))
+  val codeIds: Array[Int] = entries.map(_._2).toArray
+  val subCents: Array[Long] = entries.flatMap(_._3).toArray
+  val subOff: Array[Int] =
+    Array.tabulate(Similarity.PQ_M + 1)(m => entries.count(_._1 < m))
+}
+
+/** The fused IVFADC serve of one query batch ([[IvfPqIndex.serve]]).
+  * Probe p belongs to query `probeQ(p)` (id `qIds(probeQ(p))`), probes
+  * cell `probeCell(p)`, and has residual `resid(p·d until (p+1)·d)`.
+  * A task ships only these and the flat sub-codebook: q·nprobe·d +
+  * M·K·subdim longs, never a LUT. */
+private[ext] final class AdcScan(qIds: Array[Long], probeQ: Array[Int],
+    probeCell: Array[Int], resid: Array[Long], d: Int, subdim: Int,
+    codeIds: Array[Int], subCents: Array[Long], subOff: Array[Int], k: Int)
+    extends Serializable {
+
+  /** The distinct probed cells: the code scan's partition filter. */
+  def cells: Seq[Int] = probeCell.distinct.toSeq
+
+  /** One scan task: each (vec_id, cell, codes) row is scored against
+    * the queries probing its cell as Σₘ LUT[m][codes(m)] — the same
+    * exact sum as the relational (sub, code, p_cell) join — skipping a
+    * query's own id, into a k-bounded heap per query. Emits the heaps
+    * as (q_id, n_id, adist). LUTs are built per probe on first use. */
+  def topK(rows: Iterator[(Long, Int, Array[Int])])
+      : Iterator[(Long, Long, Long)] = {
+    val byCell = probeCell.indices.groupBy(probeCell(_))
+      .map { case (c, ps) => c -> ps.toArray }
+    val luts = new Array[Array[Long]](probeCell.length)
+    val heaps = Array.fill(qIds.length)(new AdcScan.TopK(k))
+    val ent = new Array[Int](subOff.length - 1)
+    // the scan is pruned to the probed cells: every row's cell has probes
+    rows.foreach { case (nId, cell, codes) =>
+      var m = 0
+      while (m < codes.length) { ent(m) = entry(m, codes(m)); m += 1 }
+      byCell(cell).foreach { p =>
+        val q = probeQ(p)
+        if (nId != qIds(q)) {
+          if (luts(p) == null) luts(p) = lut(p)
+          val t = luts(p)
+          var s = 0L
+          m = 0
+          while (m < codes.length) { s += t(ent(m)); m += 1 }
+          heaps(q).offer(s, nId)
+        }
+      }
+    }
+    heaps.indices.iterator.flatMap(q =>
+      heaps(q).sorted.iterator.map { case (s, n) => (qIds(q), n, s) })
+  }
+
+  /** Probe p's LUT: entry e holds the squared grid distance between
+    * the probe residual's sub-vector and entry e's centroid. */
+  private def lut(p: Int): Array[Long] = {
+    val t = new Array[Long](codeIds.length)
+    var m = 0
+    while (m < subOff.length - 1) {
+      val r0 = p * d + m * subdim
+      var e = subOff(m)
+      while (e < subOff(m + 1)) {
+        var s = 0L
+        var j = 0
+        while (j < subdim) {
+          val x = resid(r0 + j) - subCents(e * subdim + j)
+          s += x * x
+          j += 1
+        }
+        t(e) = s
+        e += 1
+      }
+      m += 1
+    }
+    t
+  }
+
+  private def entry(m: Int, code: Int): Int = {
+    val e = java.util.Arrays.binarySearch(codeIds, subOff(m), subOff(m + 1),
+      code)
+    if (e < 0)
+      throw new IllegalStateException(
+        s"index code $code of sub-quantizer $m is not in its codebook")
+    e
+  }
+}
+
+private[ext] object AdcScan {
+
+  /** Driver half: grid the query frame with [[Similarity.gridSql]] and
+    * collect it, then take each query's `nprobe` cells by (grid d2,
+    * cell id) — [[Similarity.probeCells]]' ranking, in the same BIGINT
+    * arithmetic — with its residual against each probed centroid.
+    * Bounded driver state: queries·nprobe·d longs. */
+  def plan(cb: Codebooks, queries: DataFrame, nprobe: Int,
+      k: Int): AdcScan = {
+    val d = cb.cellCents.length / cb.cellIds.length
+    val qs = queries.select(col("vec_id").cast("long"),
+      expr(Similarity.gridSql).as("qa")).collect()
+    val probeQ = Array.newBuilder[Int]
+    val probeCell = Array.newBuilder[Int]
+    val resid = Array.newBuilder[Long]
+    val qIds = qs.zipWithIndex.map { case (r, qi) =>
+      require(!r.isNullAt(0) && !r.isNullAt(1),
+        "query vec_id and embedding must be non-null")
+      val qa = r.getSeq[Long](1).toArray
+      require(qa.length == d,
+        s"query ${r.getLong(0)} has ${qa.length} dims, the index $d")
+      def diff(i: Int) = Array.tabulate(d)(j => qa(j) - cb.cellCents(i * d + j))
+      cb.cellIds.indices
+        .map(i => (diff(i).map(x => x * x).sum, cb.cellIds(i), i))
+        .sorted.take(nprobe)
+        .foreach { case (_, cell, i) =>
+          probeQ += qi
+          probeCell += cell
+          resid ++= diff(i)
+        }
+      r.getLong(0)
+    }
+    new AdcScan(qIds, probeQ.result(), probeCell.result(), resid.result(),
+      d, Similarity.PQ_SUBDIM, cb.codeIds, cb.subCents, cb.subOff, k)
+  }
+
+  /** The merge after the single-partition exchange: per query, the k
+    * smallest (adist, n_id) of all task heaps, ranked 1..k, emitted in
+    * (q_id, rk) order as (q_id, n_id, adist, rk). */
+  def merge(k: Int, rows: Iterator[(Long, Long, Long)])
+      : Iterator[(Long, Long, Long, Long)] = {
+    val heaps = scala.collection.mutable.HashMap.empty[Long, TopK]
+    rows.foreach { case (q, n, s) =>
+      heaps.getOrElseUpdate(q, new TopK(k)).offer(s, n)
+    }
+    heaps.keys.toSeq.sorted.iterator.flatMap { q =>
+      heaps(q).sorted.iterator.zipWithIndex.map { case ((s, n), i) =>
+        (q, n, s, i + 1L)
+      }
+    }
+  }
+
+  /** The k smallest (adist, n_id) pairs offered, in that order. */
+  final class TopK(k: Int) {
+    // max-heap: the head is the worst pair kept
+    private val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Long)]
+
+    def offer(s: Long, n: Long): Unit =
+      if (heap.size < k) heap.enqueue((s, n))
+      else if (k > 0 && Ordering[(Long, Long)].lt((s, n), heap.head)) {
+        heap.dequeue()
+        heap.enqueue((s, n))
+      }
+
+    def sorted: Seq[(Long, Long)] = heap.toSeq.sorted
+  }
 }

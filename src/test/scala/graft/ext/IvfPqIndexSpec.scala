@@ -1,11 +1,22 @@
 package graft.ext
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-class IvfPqIndexSpec extends SparkSpec {
+class IvfPqIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // 64-dim vectors (PQ_M=32 × PQ_SUBDIM=2 — the codebook geometry)
   private def vec(seed: Int): Array[Float] = {
@@ -295,5 +306,135 @@ class IvfPqIndexSpec extends SparkSpec {
     val plain = IvfPqIndex.search(spark, idx, q, k = 3, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(adaptiveAll.toSeq == plain.toSeq)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+
+  /** The relational top-k: every scored candidate ranked by a window
+    * on (adist, n_id) — the form the fused serve must reproduce. */
+  private def windowTopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))))
+      .filter(col("rk") <= k)
+      .select(col("q_id"), col("n_id"), col("adist"),
+        col("rk").cast("long").as("rk"))
+      .orderBy("q_id", "rk")
+
+  test("the fused serve equals the relational scoring + window top-k " +
+      "row for row: ties by n_id, self-exclusion, tombstones, allowed " +
+      "ids, k above a cell's population, and an index with no adds") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("ivfpq-fused").toString + "/index"
+    val c = corpus(40)
+    IvfPqIndex.create(spark, idx, c)
+    IvfPqIndex.add(spark, idx, c.filter(col("vec_id") % 2 === 0), runId = 0L)
+    IvfPqIndex.add(spark, idx, c.filter(col("vec_id") % 2 === 1), runId = 1L)
+    // ids 100..103 duplicate id 3's embedding: same cell, same codes,
+    // so equal adist to any query — ranked by n_id
+    IvfPqIndex.add(spark, idx,
+      df((100L to 103L).map(_ -> vec(4)): _*), runId = 2L)
+    IvfPqIndex.forget(spark, idx, Seq(101L, 7L).toDF("vec_id"))
+    // 3 is indexed (self-exclusion); 1000 ties with 3, 100, 102, 103
+    val q = df(3L -> vec(4), 1000L -> vec(4), 1001L -> vec(50), 5L -> vec(6))
+    val allowed = ((0L until 40L by 2) ++ Seq(3L, 100L, 101L, 103L))
+      .toDF("vec_id")
+    val nAllowed = allowed.count()
+    val corpusRows = IvfPqIndex.readIndex(spark, idx).count()
+
+    def check(k: Int, nprobe: Int): Seq[(Long, Long, Long, Long)] = {
+      def ref(np: Int, a: Option[(DataFrame, Long)]) = rowsOf(windowTopK(
+        IvfPqIndex.scoredCandidates(spark, idx, q, np, a), k))
+      val plain = rowsOf(IvfPqIndex.search(spark, idx, q, k, nprobe))
+      assert(plain == ref(nprobe, None), s"search k=$k nprobe=$nprobe")
+      assert(rowsOf(IvfPqIndex.searchFiltered(spark, idx, q, allowed, k,
+          nprobe)) == ref(nprobe, Some((allowed, nAllowed))),
+        s"searchFiltered k=$k nprobe=$nprobe")
+      val np = IvfPqIndex.adaptiveNprobe(nprobe, nAllowed, corpusRows)
+      assert(rowsOf(IvfPqIndex.searchFilteredAdaptive(spark, idx, q,
+          allowed, k, nprobe)) == ref(np, Some((allowed, nAllowed))),
+        s"searchFilteredAdaptive k=$k nprobe=$nprobe")
+      plain
+    }
+    val top5 = check(k = 5, nprobe = 2)
+    // the fixture exercises what it claims
+    val of1000 = top5.filter(_._1 == 1000L)
+    assert(of1000.take(3).map(_._2) == Seq(3L, 100L, 102L) &&
+      of1000.take(3).map(_._3).distinct.size == 1, s"ties: $of1000")
+    assert(!top5.exists(r => r._1 == r._2), "a query served its own id")
+    assert(!top5.exists(r => r._2 == 101L || r._2 == 7L),
+      "a tombstoned id was served")
+    // k far above a probed cell's population: every candidate comes back
+    val all1 = check(k = 60, nprobe = 1)
+    assert(all1.groupBy(_._1).values.forall(_.size < 60))
+    check(k = 3, nprobe = 8)
+
+    val schemaOf = (d: DataFrame) => d.schema.map(f => f.name -> f.dataType)
+    assert(schemaOf(IvfPqIndex.search(spark, idx, q, 5, 2)) ==
+      schemaOf(windowTopK(
+        IvfPqIndex.scoredCandidates(spark, idx, q, 2, None), 5)))
+
+    val empty = Files.createTempDirectory("ivfpq-noadds").toString + "/index"
+    IvfPqIndex.create(spark, empty, c)
+    assert(IvfPqIndex.search(spark, empty, q, k = 5).collect().isEmpty)
+    assert(IvfPqIndex.searchFiltered(spark, empty, q, allowed, k = 5)
+      .collect().isEmpty)
+  }
+
+  /** Spark jobs started by `body`, counted by a listener; a fenced job
+    * after the body guarantees the listener has seen every event. */
+  private def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "ivfpq-guard"
+    val fence = "ivfpq-guard-fence"
+    val started = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet(): Unit
+          case Some(`fence`) => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener fence timed out")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a warmed search is one fused scan: at most 2 Spark jobs, the " +
+      "cell partition filter on the file scan, and no broadcast hash " +
+      "join, window or range exchange in the executed plan") {
+    val idx = Files.createTempDirectory("ivfpq-guard").toString + "/index"
+    val c = corpus(40)
+    IvfPqIndex.create(spark, idx, c)
+    IvfPqIndex.add(spark, idx, c, runId = 0L)
+    val q = df(1000L -> vec(6), 1001L -> vec(9))
+    IvfPqIndex.search(spark, idx, q, k = 3).collect()
+    var served: DataFrame = null
+    val jobs = jobsRunBy {
+      served = IvfPqIndex.search(spark, idx, q, k = 3)
+      assert(served.collect().length == 6)
+    }
+    assert(jobs <= 2, s"search ran $jobs Spark jobs")
+    val plan = served.queryExecution.executedPlan
+    val scans = collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.exists(_.partitionFilters.exists(
+        _.references.exists(_.name == "cell"))),
+      s"no cell partition filter on the code scan:\n$plan")
+    assert(collect(plan) {
+      case j: BroadcastHashJoinExec => j
+      case w: WindowExec => w
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.isEmpty, s"relational serve operators in the plan:\n$plan")
   }
 }
