@@ -132,10 +132,9 @@ object IvfPqIndex {
     // residual + PQ codes, all frozen-codebook per-row argmins; codes
     // pack to one M-int array per vector (the FAISS code layout —
     // serve storage ∝ M ints, never the raw embedding)
-    val coded = Similarity.pqWithBest(
+    val coded = Similarity.pqCodes(
         Similarity.residualFrame(coarse, eg), subcents)
-      .select(col("vec_id"),
-        expr("transform(ba, b -> b.cell)").as("codes"), col("cell"))
+      .select("vec_id", "codes", "cell")
       // the index write and the caller must agree; materialize once
       .localCheckpoint(true)
     // cluster by cell before the dynamic-partition write (NearDupIndex's
@@ -259,21 +258,19 @@ object IvfPqIndex {
     * sub-codebook, scores each row against the queries probing its
     * cell and keeps a k-bounded heap per query ([[AdcScan.topK]]); a
     * single-partition exchange of ≤ tasks·queries·k rows merges the
-    * heaps and ranks ([[AdcScan.merge]]). Every distance is the same
-    * exact integer sum as [[scoredCandidates]] with the same
-    * (adist, n_id) tie-break, so the rows equal its windowed top-k. */
+    * heaps and ranks ([[AdcScan.merge]]). Queries and code rows carry
+    * their own id as the exclusion key, so a query never returns
+    * itself. Every distance is the same exact integer sum as
+    * [[scoredCandidates]] with the same (adist, n_id) tie-break, so the
+    * rows equal its windowed top-k. */
   private def serve(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int,
       allowed: Option[(DataFrame, Long)]): DataFrame = {
-    import spark.implicits._
-    val scan = AdcScan.plan(readMeta(spark, indexDir), queries, nprobe, k)
-    probedCodes(spark, indexDir, scan.cells, allowed)
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions(rows => scan.topK(rows))
-      .repartition(1)
-      .mapPartitions(rows => AdcScan.merge(k, rows))
-      .toDF("q_id", "n_id", "adist", "rk")
+    val qg = queries.select(col("vec_id"),
+      expr(Similarity.gridSql).as("qa"), col("vec_id").as("ex"))
+    val scan = AdcScan.plan(readMeta(spark, indexDir), qg, nprobe, k)
+    scan.serve(probedCodes(spark, indexDir, scan.cells, allowed)
+      .withColumn("ex", col("vec_id")))
   }
 
   /** The relational ADC scoring stage: (q_id, n_id, adist) for every
@@ -1310,25 +1307,45 @@ private[ext] final case class Codebooks(coarse: Seq[(Int, Seq[Long])],
     Array.tabulate(Similarity.PQ_M + 1)(m => entries.count(_._1 < m))
 }
 
-/** The fused IVFADC serve of one query batch ([[IvfPqIndex.serve]]).
-  * Probe p belongs to query `probeQ(p)` (id `qIds(probeQ(p))`), probes
-  * cell `probeCell(p)`, and has residual `resid(p·d until (p+1)·d)`.
-  * A task ships only these and the flat sub-codebook: q·nprobe·d +
-  * M·K·subdim longs, never a LUT. */
-private[ext] final class AdcScan(qIds: Array[Long], probeQ: Array[Int],
-    probeCell: Array[Int], resid: Array[Long], d: Int, subdim: Int,
-    codeIds: Array[Int], subCents: Array[Long], subOff: Array[Int], k: Int)
+/** The fused IVFADC serve of one query batch — the only ADC serve:
+  * [[IvfPqIndex.serve]] runs it over the persisted code table and the
+  * in-query serves ([[Similarity]]'s q93 family) over their own code
+  * rows. Query q has id `qIds(q)` and exclusion key `qEx(q)`; probe p
+  * belongs to query `probeQ(p)`, probes cell `probeCell(p)`, and has
+  * residual `resid(p·d until (p+1)·d)`. A task ships only these and
+  * the flat sub-codebook: q·nprobe·d + M·K·subdim longs, never a LUT. */
+private[ext] final class AdcScan(qIds: Array[Long], qEx: Array[Long],
+    probeQ: Array[Int], probeCell: Array[Int], resid: Array[Long], d: Int,
+    subdim: Int, codeIds: Array[Int], subCents: Array[Long],
+    subOff: Array[Int], k: Int)
     extends Serializable {
 
   /** The distinct probed cells: the code scan's partition filter. */
   def cells: Seq[Int] = probeCell.distinct.toSeq
 
-  /** One scan task: each (vec_id, cell, codes) row is scored against
+  /** Top-k of every query over `codes` (vec_id, cell, codes, ex), rows
+    * restricted to [[cells]]: one fused [[topK]] per scan partition, then
+    * a single-partition exchange of ≤ tasks·queries·k rows into
+    * [[AdcScan.merge]]. Output (q_id, n_id, adist, rk) in (q_id, rk)
+    * order. */
+  def serve(codes: DataFrame): DataFrame = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    codes.select(col("vec_id"), col("cell"), col("codes"), col("ex"))
+      .as[(Long, Int, Array[Int], Long)]
+      .mapPartitions(rows => topK(rows))
+      .repartition(1)
+      .mapPartitions(rows => AdcScan.merge(k, rows))
+      .toDF("q_id", "n_id", "adist", "rk")
+  }
+
+  /** One scan task: each (vec_id, cell, codes, ex) row is scored against
     * the queries probing its cell as Σₘ LUT[m][codes(m)] — the same
     * exact sum as the relational (sub, code, p_cell) join — skipping a
-    * query's own id, into a k-bounded heap per query. Emits the heaps
-    * as (q_id, n_id, adist). LUTs are built per probe on first use. */
-  def topK(rows: Iterator[(Long, Int, Array[Int])])
+    * query whose exclusion key equals the row's, into a k-bounded heap
+    * per query. Emits the heaps as (q_id, n_id, adist). LUTs are built
+    * per probe on first use. */
+  def topK(rows: Iterator[(Long, Int, Array[Int], Long)])
       : Iterator[(Long, Long, Long)] = {
     val byCell = probeCell.indices.groupBy(probeCell(_))
       .map { case (c, ps) => c -> ps.toArray }
@@ -1336,12 +1353,12 @@ private[ext] final class AdcScan(qIds: Array[Long], probeQ: Array[Int],
     val heaps = Array.fill(qIds.length)(new AdcScan.TopK(k))
     val ent = new Array[Int](subOff.length - 1)
     // the scan is pruned to the probed cells: every row's cell has probes
-    rows.foreach { case (nId, cell, codes) =>
+    rows.foreach { case (nId, cell, codes, ex) =>
       var m = 0
       while (m < codes.length) { ent(m) = entry(m, codes(m)); m += 1 }
       byCell(cell).foreach { p =>
         val q = probeQ(p)
-        if (nId != qIds(q)) {
+        if (ex != qEx(q)) {
           if (luts(p) == null) luts(p) = lut(p)
           val t = luts(p)
           var s = 0L
@@ -1391,22 +1408,22 @@ private[ext] final class AdcScan(qIds: Array[Long], probeQ: Array[Int],
 
 private[ext] object AdcScan {
 
-  /** Driver half: grid the query frame with [[Similarity.gridSql]] and
-    * collect it, then take each query's `nprobe` cells by (grid d2,
-    * cell id) — [[Similarity.probeCells]]' ranking, in the same BIGINT
-    * arithmetic — with its residual against each probed centroid.
-    * Bounded driver state: queries·nprobe·d longs. */
+  /** Driver half: collect the gridded (vec_id, qa, ex) query frame,
+    * then take each query's `nprobe` cells by (grid d2, cell id) —
+    * [[Similarity.probeCells]]' ranking, in the same BIGINT arithmetic
+    * — with its residual against each probed centroid. Bounded driver
+    * state: queries·nprobe·d longs. */
   def plan(cb: Codebooks, queries: DataFrame, nprobe: Int,
       k: Int): AdcScan = {
     val d = cb.cellCents.length / cb.cellIds.length
-    val qs = queries.select(col("vec_id").cast("long"),
-      expr(Similarity.gridSql).as("qa")).collect()
+    val qs = queries.select(col("vec_id").cast("long"), col("qa"),
+      col("ex").cast("long")).collect()
     val probeQ = Array.newBuilder[Int]
     val probeCell = Array.newBuilder[Int]
     val resid = Array.newBuilder[Long]
     val qIds = qs.zipWithIndex.map { case (r, qi) =>
-      require(!r.isNullAt(0) && !r.isNullAt(1),
-        "query vec_id and embedding must be non-null")
+      require(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2),
+        "query vec_id, embedding and exclusion key must be non-null")
       val qa = r.getSeq[Long](1).toArray
       require(qa.length == d,
         s"query ${r.getLong(0)} has ${qa.length} dims, the index $d")
@@ -1421,8 +1438,9 @@ private[ext] object AdcScan {
         }
       r.getLong(0)
     }
-    new AdcScan(qIds, probeQ.result(), probeCell.result(), resid.result(),
-      d, Similarity.PQ_SUBDIM, cb.codeIds, cb.subCents, cb.subOff, k)
+    new AdcScan(qIds, qs.map(_.getLong(2)), probeQ.result(),
+      probeCell.result(), resid.result(), d, Similarity.PQ_SUBDIM,
+      cb.codeIds, cb.subCents, cb.subOff, k)
   }
 
   /** The merge after the single-partition exchange: per query, the k

@@ -22,9 +22,6 @@ object Similarity {
   private def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity.cosineSim(a, b)
 
-  /** Exact brute-force cosine top-5 for each query vector (vec_id < 10):
-    * broadcast the query set, score every vector with the fused codegen
-    * cosine, take the per-query top-k with a window over the scan. */
   /** Metadata-FILTERED exact KNN — vector search constrained by a
     * document predicate (here lang = 'en'; the fixtures align
     * embeddings.vec_id with documents.doc_id), the query every
@@ -81,6 +78,9 @@ object Similarity {
       |         ORDER BY dot/(nq*nn) DESC, n_id) AS rk
       |FROM p QUALIFY rk <= 5 ORDER BY q_id, rk""")
 
+  /** Exact brute-force cosine top-5 for each query vector (vec_id < 10):
+    * broadcast the query set, score every vector with the fused codegen
+    * cosine, take the per-query top-k with a window over the scan. */
   private val q34KnnBrute = QueryDef(
     (s, dir) => {
       val e = Tables(s, dir, "embeddings")
@@ -170,16 +170,6 @@ object Similarity {
       |         ORDER BY cos_raw DESC, n_id) AS rk
       |FROM c QUALIFY rk <= 5 ORDER BY q_id, rk""")
 
-  /** IVF-style ANN — the codebook-partitioned scale path: every vector is
-    * assigned to its nearest of k coarse centroids (one broadcast of the
-    * k-row codebook, N·k scoring, linear); queries then probe ONLY their
-    * own cell via an equi-join on the centroid id. With real k-means
-    * centroids this is textbook IVF-Flat; here the codebook is the first
-    * 8 vectors (deterministic), which keeps the whole operator — argmax
-    * assignment included — exactly oracle-checkable in DuckDB since the
-    * cosine form and tiebreakers are the proven q34 ones. At 100 TB the
-    * assignment is a map-side broadcast join and the probe shuffles on
-    * cell id, so no stage touches the N² pair space. */
   /** The FIXED-codebook IVF assignment (codebook = first 8 vectors,
     * cosine-argmax cell) — q59's index, reused by q87's recall compare. */
   private def fixedAssignment(s: SparkSession, dir: String): DataFrame = {
@@ -196,6 +186,16 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("c_id").as("cell"))
   }
 
+  /** IVF-style ANN — the codebook-partitioned scale path: every vector is
+    * assigned to its nearest of k coarse centroids (one broadcast of the
+    * k-row codebook, N·k scoring, linear); queries then probe ONLY their
+    * own cell via an equi-join on the centroid id. With real k-means
+    * centroids this is textbook IVF-Flat; here the codebook is the first
+    * 8 vectors (deterministic), which keeps the whole operator — argmax
+    * assignment included — exactly oracle-checkable in DuckDB since the
+    * cosine form and tiebreakers are the proven q34 ones. At 100 TB the
+    * assignment is a map-side broadcast join and the probe shuffles on
+    * cell id, so no stage touches the N² pair space. */
   private val q59KnnIvf = QueryDef(
     (s, dir) => {
       val assigned = fixedAssignment(s, dir)
@@ -660,11 +660,6 @@ object Similarity {
   private[ext] def trainedAssignment(s: SparkSession, dir: String): DataFrame =
     trainedModel(s, dir)._1
 
-  /** The checkpointed (vec_id, qa) grid frame over a (vec_id,
-    * embedding) relation: round(x·1000) longs, spread across the
-    * cluster and materialized once — seed, every update round and the
-    * final assignment all read this 2-column frame instead of
-    * re-scanning + re-transforming the parquet per round. */
   /** The float→integer-grid transform (round(x·1000) longs) every
     * trained operator quantizes through — kept as one SQL string so the
     * grid definition cannot drift between the corpus-side [[gridFrame]]
@@ -673,6 +668,11 @@ object Similarity {
   private[ext] val gridSql =
     "transform(embedding, x -> cast(round(cast(x as double) * 1000, 0) as bigint))"
 
+  /** The checkpointed (vec_id, qa) grid frame over a (vec_id,
+    * embedding) relation: round(x·1000) longs, spread across the
+    * cluster and materialized once — seed, every update round and the
+    * final assignment all read this 2-column frame instead of
+    * re-scanning + re-transforming the parquet per round. */
   private[ext] def gridFrame(s: SparkSession, vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), expr(gridSql).as("qa"))
       .repartition(s.sparkContext.defaultParallelism)
@@ -1071,6 +1071,14 @@ object Similarity {
     eg.withColumn("ba",
       graft.functions.PqArgmin.argmin(col("qa"), cents, PQ_M, PQ_SUBDIM))
 
+  /** The index code rows (vec_id, cell, codes) of a (vec_id, cell, qa)
+    * residual frame: one M-int array of per-subspace code ids per
+    * vector — the layout IvfPqIndex.add writes and [[AdcScan]] scores. */
+  private[ext] def pqCodes(resid: DataFrame,
+      cents: Seq[(Int, Int, Seq[Long])]): DataFrame =
+    pqWithBest(resid, cents).select(col("vec_id"), col("cell"),
+      expr("transform(ba, b -> b.cell)").as("codes"))
+
   /** Two PQ Lloyd rounds from an explicit per-(sub, cell) seed —
     * coarseLloyd's loop with (sub, cell, sdim) keys: one map-side-
     * combinable shuffle per round over bounded M·K·subdim driver
@@ -1104,23 +1112,6 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("ba")).as(Seq("sub", "bc")))
       .select(col("vec_id"), col("sub"),
         col("bc.cell").as("code"), col("bc.d2").as("d2"))
-
-  /** The serve-side ADC candidate frame (n_id, <cellAlias>, sub, code)
-    * in ONE pass over the checkpointed residual frame (guide §2.4): the
-    * coarse cell already rides every resid row — residualFrame derives
-    * it from the same argmin the assignment frame holds — so encoding
-    * over `resid` directly replaces the former
-    * pqEncode(resid)⋈assignment join-by-vec_id (a corpus-wide join per
-    * serve; at cluster scale a full shuffle of the code rows). The ba
-    * argmin depends only on qa, so the code values are bit-identical to
-    * the joined form. */
-  private def candFrame(resid: DataFrame,
-      cents: Seq[(Int, Int, Seq[Long])], cellAlias: String): DataFrame =
-    pqWithBest(resid, cents)
-      .select(col("vec_id").as("n_id"), col("cell").as(cellAlias),
-        posexplode(col("ba")).as(Seq("sub", "bc")))
-      .select(col("n_id"), col(cellAlias), col("sub"),
-        col("bc.cell").as("code"))
 
   /** PQ training over an arbitrary checkpointed (vec_id, qa) grid frame
     * — factored out so q93 can train sub-codebooks on coarse-cell
@@ -1323,24 +1314,6 @@ object Similarity {
       |         ORDER BY adist, n_id) AS rk
       |FROM adc QUALIFY rk <= 5 ORDER BY q_id, rk""")
 
-  /** IVF-PQ end-to-end — the production vector index (FAISS's IVFPQ):
-    * q81's trained coarse codebook partitions the corpus into cells;
-    * each vector's RESIDUAL (vector − its cell centroid) is compressed
-    * with q89's product quantizer; and the serve path probes the query's
-    * own cell (nprobe=1), ranking candidates by the ADC sum over the
-    * query's residual lookup table. Residuals stay on the integer grid
-    * (both the point and the trained centroid are grid longs), so the
-    * ENTIRE composition — coarse training → residuals → sub-codebook
-    * training → code assignment → ADC ranking with tie-breaks — is
-    * oracle-exact. This is why residual-PQ works at all here: subtraction
-    * closes over the grid, where a float pipeline would have to re-round.
-    *
-    * Scale shape: coarse+PQ training are bounded-driver-state Lloyd
-    * loops (one map-side-combinable shuffle per round); the serve scans
-    * the M-int code table, joins the broadcast M·K residual lookup
-    * table, and partial-aggs the per-sub terms before one
-    * (q_id, n_id) exchange — candidates ∝ the probed cell, cost ∝
-    * codes, never raw vectors. */
   /** The (vec_id, cell, qa=residual) frame over the coarse model — each
     * vector minus its own trained cell centroid, closed over the integer
     * grid; checkpointed because the PQ trainer and the serve paths both
@@ -1405,19 +1378,13 @@ object Similarity {
       .filter(col("p_rank") <= nprobe)
       .drop("pd2")
 
-  /** The nprobe-cell ADC lookup table: for each (query, probed cell),
-    * the M·K LUT over the query's per-probe residual. Output: (q_id,
-    * p_cell, p_rank, sub, code, d2q); ≤ 10 · nprobe · M·K rows, always
-    * broadcast. The serve joins it on (sub, code) and keeps only
-    * candidates whose OWN cell is the probed one (p_cell = n_cell), so
-    * each candidate's ADC sum uses exactly the LUT of the cell it was
-    * encoded against. */
-  /** The LUT explode over an already-built probe-cell frame — split
-    * out so a serve that has COLLECTED the (tiny) probe-cell set can
-    * feed it back as a local relation instead of re-running the
-    * probeCells window inside the broadcast build (same expressions,
-    * same arithmetic, one fewer execution of the corpus-side scan
-    * per serve; see IvfPqIndex.scoredCandidates). */
+  /** The nprobe-cell ADC lookup table over a [[probeCells]] frame:
+    * for each (query, probed cell), the M·K LUT over the query's
+    * per-probe residual. Output: (q_id, p_cell, p_rank, sub, code,
+    * d2q). Joined on (sub, code, p_cell) with the posexploded code rows
+    * of each candidate's OWN cell, it is the relational ADC scoring
+    * ([[IvfPqIndex.scoredCandidates]], the reference the fused
+    * [[AdcScan]] serve is tested against). */
   private[ext] def probeLutOver(pc: DataFrame,
       subcents: Seq[(Int, Int, Seq[Long])]): DataFrame =
     pc.withColumn("__pc", typedLit(subcents))
@@ -1427,59 +1394,60 @@ object Similarity {
         col("t.sub").as("sub"), col("t.code").as("code"),
         col("t.d2q").as("d2q"))
 
-  private[ext] def probeLut(q: DataFrame, coarse: Seq[(Int, Seq[Long])],
-      subcents: Seq[(Int, Int, Seq[Long])], nprobe: Int): DataFrame =
-    probeLutOver(probeCells(q, coarse, nprobe), subcents)
-
-  /** [[probeLut]] with the probe-cell window COLLECTED and fed back as
-    * a local relation (IvfPqIndex.scoredCandidates' r18 pattern, applied
-    * to the in-query serves): the probeCells frame is ≤ queries·nprobe
-    * rows — bounded driver state — but as a plan subtree it plants an
-    * Exchange + Window at the BOTTOM of the broadcast LUT build, so the
-    * serve's broadcast chain serializes a 2-stage shuffle job before the
-    * LUT explode can even start. Executing it once up front (one tiny
-    * job) and planting the rows as a LocalTableScan removes that nested
-    * stage from every downstream broadcast build. Same expressions,
-    * same arithmetic — the q94/q96/q100/q113/q121 oracles pin the
-    * served rows. */
-  private[ext] def probeLutCollected(s: SparkSession, q: DataFrame,
-      coarse: Seq[(Int, Seq[Long])], subcents: Seq[(Int, Int, Seq[Long])],
-      nprobe: Int): DataFrame = {
-    val pcPlan = probeCells(q, coarse, nprobe)
-    val pcRows = pcPlan.collect()
-    val pcLocal = s.createDataFrame(
-      java.util.Arrays.asList(pcRows: _*), pcPlan.schema)
-    probeLutOver(pcLocal, subcents)
+  /** q93's trained IVF-PQ model over the fixture's embeddings: the
+    * checkpointed grid frame, the residual frame, and both codebooks
+    * (the trained coarse centroids and the residual PQ sub-codebook). */
+  private[ext] def ivfPqModel(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Codebooks) = {
+    val (_, coarse, eg) = trainedModel(s, dir)
+    val resid = residualFrame(coarse, eg)
+    val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
+    (eg, resid, Codebooks(coarse, subcents))
   }
 
+  /** The in-query IVF-PQ serve: top-`k` ADC of the gridded (vec_id, qa)
+    * `queries` at `nprobe` cells through [[AdcScan]], the persisted
+    * index's serve, over the code rows of the residual frame `resid` —
+    * restricted to the probed cells and encoded by [[pqCodes]], as
+    * IvfPqIndex.add writes them. A query never scores a row whose
+    * exclusion key equals its own: its vec_id, or the `ex` column of
+    * `keys` (vec_id, ex) when given, joined to both sides by vec_id. Output
+    * (q_id, n_id, adist, rk), ranked by (adist, n_id). */
+  private[ext] def adcServe(cb: Codebooks, resid: DataFrame,
+      queries: DataFrame, nprobe: Int, k: Int,
+      keys: Option[DataFrame] = None): DataFrame = {
+    def keyed(df: DataFrame): DataFrame =
+      keys.fold(df.withColumn("ex", col("vec_id")))(
+        df.join(_, Seq("vec_id")))
+    val scan = AdcScan.plan(cb, keyed(queries), nprobe, k)
+    scan.serve(keyed(pqCodes(
+      resid.filter(col("cell").isin(scan.cells: _*)), cb.subcents)))
+  }
+
+  /** IVF-PQ end-to-end — the production vector index (FAISS's IVFPQ):
+    * q81's trained coarse codebook partitions the corpus into cells;
+    * each vector's RESIDUAL (vector − its cell centroid) is compressed
+    * with q89's product quantizer; and the serve path probes the query's
+    * own cell (nprobe=1), ranking candidates by the ADC sum over the
+    * query's residual lookup table. Residuals stay on the integer grid
+    * (both the point and the trained centroid are grid longs), so the
+    * ENTIRE composition — coarse training → residuals → sub-codebook
+    * training → code assignment → ADC ranking with tie-breaks — is
+    * oracle-exact. This is why residual-PQ works at all here: subtraction
+    * closes over the grid, where a float pipeline would have to re-round.
+    *
+    * Scale shape: coarse+PQ training are bounded-driver-state Lloyd
+    * loops (one map-side-combinable shuffle per round); the serve is
+    * [[adcServe]]'s fused scan of the M-int codes in the probed cell
+    * (per-probe LUT, M lookups per code, per-query top-5 heap) and one
+    * single-partition merge of the heaps — no LUT join, candidate
+    * shuffle or window; cost ∝ codes, never raw vectors. */
   private val q93IvfPqTopk = QueryDef(
     (s, dir) => {
-      val (af, coarse, eg) = trainedModel(s, dir)
-      val resid = residualFrame(coarse, eg)
-      val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
-      // candidate cell aliased to the LUT's q_cell so the cell sits IN
-      // the broadcast-hash-join KEY: a candidate's lookup hits only the
-      // queries probing ITS cell, instead of every query sharing a
-      // (sub, code) and a post-join cell filter — map-side work stays
-      // bounded by cell membership as the query batch grows
-      val cand = candFrame(resid, subcents, "q_cell")
-      // query-side ADC lookup table over the query's own residual
-      val qd = resid.filter(col("vec_id") < 10)
-        .withColumn("__pc", typedLit(subcents))
-        .select(col("vec_id").as("q_id"), col("cell").as("q_cell"),
-          explode(expr(adcLutSql)).as("t"))
-        .select(col("q_id"), col("q_cell"), col("t.sub").as("sub"),
-          col("t.code").as("code"), col("t.d2q").as("d2q"))
-      val wTop = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
-      cand.join(broadcast(qd), Seq("sub", "code", "q_cell"))
-        .filter(col("n_id") =!= col("q_id"))
-        .groupBy("q_id", "n_id")
-        .agg(sum("d2q").as("adist"))
-        .withColumn("rk", row_number().over(wTop))
-        .filter(col("rk") <= 5)
-        .select(col("q_id"), col("n_id"), col("adist"),
-          col("rk").cast("long").as("rk"))
-        .orderBy("q_id", "rk")
+      val (eg, resid, cb) = ivfPqModel(s, dir)
+      // nprobe=1: the first probe by (d2, cell) IS the assignment's
+      // argmin, so each query scores its own cell's residual codes
+      adcServe(cb, resid, eg.filter(col("vec_id") < 10), nprobe = 1, k = 5)
     },
     s"""WITH $trainedAssignmentSql,
       |$pqResidualTrainSql,
@@ -1552,35 +1520,18 @@ object Similarity {
     * (candidates are residual-encoded against their OWN cell — see
     * [[probeCells]]), and ranks the union of both cells' candidates by
     * the ADC sum through the matching per-probe LUT. A candidate lives
-    * in exactly one cell, so the probe union is disjoint and the
-    * (q_id, n_id) exchange shape is identical to q93's — candidate cost
-    * simply doubles with the second cell (q94's cand_cells2 column
+    * in exactly one cell, so the probe union is disjoint — candidate
+    * cost simply doubles with the second cell (q94's cand_cells2 column
     * measures it).
     *
-    * Scale shape: the LUT is ≤ queries · nprobe · M·K rows, broadcast;
-    * the scan side still touches only M-int codes, partial-aggs the
-    * per-sub terms map-side, and exchanges one (q_id, n_id) pair per
-    * candidate — cost ∝ probed-cell sizes, never raw vectors. */
+    * Scale shape: q93's fused scan over both probed cells — per-probe
+    * LUTs built in-task from ≤ queries · nprobe residuals, M-int codes
+    * only, a per-query top-5 heap, one single-partition merge; cost ∝
+    * probed-cell sizes, never raw vectors. */
   private val q96IvfPqMultiprobe = QueryDef(
     (s, dir) => {
-      val (af, coarse, eg) = trainedModel(s, dir)
-      val resid = residualFrame(coarse, eg)
-      val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
-      val lut = probeLutCollected(s, eg.filter(col("vec_id") < 10), coarse, subcents,
-        nprobe = 2)
-      // cell in the join KEY (q93's discipline): lookups bounded by the
-      // queries probing the candidate's own cell
-      val cand = candFrame(resid, subcents, "p_cell")
-      val wTop = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
-      cand.join(broadcast(lut), Seq("sub", "code", "p_cell"))
-        .filter(col("n_id") =!= col("q_id"))
-        .groupBy("q_id", "n_id")
-        .agg(sum("d2q").as("adist"))
-        .withColumn("rk", row_number().over(wTop))
-        .filter(col("rk") <= 5)
-        .select(col("q_id"), col("n_id"), col("adist"),
-          col("rk").cast("long").as("rk"))
-        .orderBy("q_id", "rk")
+      val (eg, resid, cb) = ivfPqModel(s, dir)
+      adcServe(cb, resid, eg.filter(col("vec_id") < 10), nprobe = 2, k = 5)
     },
     s"""WITH $trainedAssignmentSql,
       |$pqResidualTrainSql,
@@ -1602,25 +1553,14 @@ object Similarity {
     * (the truth it was refined with) — so the gap per rank is readable
     * off the row.
     *
-    * Scale shape: identical to q96 up to the shortlist (cell-keyed
-    * broadcast LUT join, one (q_id, n_id) exchange), then the ≤
+    * Scale shape: q96's fused scan with a top-20 heap, then the ≤
     * queries·20-row shortlist BROADCASTS against the corpus for the
     * id-equi fetch — exact-distance work ∝ shortlist, never corpus. */
   private val q100IvfPqRerank = QueryDef(
     (s, dir) => {
-      val (af, coarse, eg) = trainedModel(s, dir)
-      val resid = residualFrame(coarse, eg)
-      val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
-      val lut = probeLutCollected(s, eg.filter(col("vec_id") < 10), coarse, subcents,
-        nprobe = 2)
-      val cand = candFrame(resid, subcents, "p_cell")
-      val wAdc = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
-      val shortlist = cand.join(broadcast(lut), Seq("sub", "code", "p_cell"))
-        .filter(col("n_id") =!= col("q_id"))
-        .groupBy("q_id", "n_id")
-        .agg(sum("d2q").as("adist"))
-        .withColumn("ark", row_number().over(wAdc))
-        .filter(col("ark") <= 20)
+      val (eg, resid, cb) = ivfPqModel(s, dir)
+      val shortlist = adcServe(cb, resid, eg.filter(col("vec_id") < 10),
+          nprobe = 2, k = 20)
         .select("q_id", "n_id", "adist")
       val q = eg.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("qa").as("q_qa"))
@@ -1660,46 +1600,30 @@ object Similarity {
     * (q80's transitive near-dup closure), but the candidate arm is
     * q100's IVF-PQ ADC serve + exact re-rank instead of the exact
     * corpus scan — the shape that survives when the corpus is 100 TB
-    * and a per-query full scan is off the table. The component filter
-    * applies to the ADC SHORTLIST before the top-20 window (the
-    * cheapest place: positives are pruned before any exact-distance
-    * work, and the window refills their slots with true negatives); it
-    * also subsumes the self-exclusion, since a query shares its own
-    * component. Like q100, recall is bounded by the shortlist — a
-    * positive-heavy neighborhood costs candidates, which is exactly
-    * the trade a production miner accepts.
+    * and a per-query full scan is off the table. The component label is
+    * the serve's exclusion key, so positives drop out inside the ADC
+    * scan before the top-20 cut (the cheapest place: they are pruned
+    * before any exact-distance work, and the heap refills their slots
+    * with true negatives); it also subsumes the self-exclusion, since a
+    * query shares its own component. Like q100, recall is bounded by
+    * the shortlist — a positive-heavy neighborhood costs candidates,
+    * which is exactly the trade a production miner accepts.
     *
-    * Scale shape: q100's serve (cell-keyed broadcast LUT join, one
-    * (q_id, n_id) exchange) + one vec_id-keyed label join; component
-    * labels arrive through q79's bucket equi-join + q67's closure,
-    * never a theta join. */
+    * Scale shape: q100's fused serve + a vec_id-keyed label join on
+    * each side of it; component labels arrive through q79's bucket
+    * equi-join + q67's closure, never a theta join. */
   private val q121ServedHardNegatives = QueryDef(
     (s, dir) => {
-      val (af, coarse, eg) = trainedModel(s, dir)
-      val resid = residualFrame(coarse, eg)
-      val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
-      val lut = probeLutCollected(s, eg.filter(col("vec_id") < 10), coarse, subcents,
-        nprobe = 2)
+      val (eg, resid, cb) = ivfPqModel(s, dir)
       val comp = Dedup.connectedComponents(Dedup.multiProbePairs(s, dir)
           .select(col("a_id").as("doc_a"), col("b_id").as("doc_b")))
         .withColumnRenamed("doc_id", "vec_id")
       val lbl = eg.select(col("vec_id"))
         .join(comp.select("vec_id", "component_id"), Seq("vec_id"), "left")
         .select(col("vec_id"),
-          coalesce(col("component_id"), col("vec_id")).as("comp"))
-      val qlbl = lbl.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("comp").as("q_comp"))
-      val cand = candFrame(resid, subcents, "p_cell")
-      val wAdc = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
-      val shortlist = cand.join(broadcast(lut), Seq("sub", "code", "p_cell"))
-        .groupBy("q_id", "n_id")
-        .agg(sum("d2q").as("adist"))
-        .join(lbl.select(col("vec_id").as("n_id"), col("comp").as("n_comp")),
-          Seq("n_id"))
-        .join(broadcast(qlbl), Seq("q_id"))
-        .filter(col("n_comp") =!= col("q_comp"))
-        .withColumn("ark", row_number().over(wAdc))
-        .filter(col("ark") <= 20)
+          coalesce(col("component_id"), col("vec_id")).as("ex"))
+      val shortlist = adcServe(cb, resid, eg.filter(col("vec_id") < 10),
+          nprobe = 2, k = 20, keys = Some(lbl))
         .select("q_id", "n_id", "adist")
       val q = eg.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("qa").as("q_qa"))
@@ -1766,24 +1690,14 @@ object Similarity {
     * scanned corpus-wide. Rows carry all three beliefs (adist, d2sq8,
     * d2) so the instrument shows what each tier corrected.
     *
-    * Scale shape: tier 1 is q96's serve unchanged (cell-keyed LUT join);
+    * Scale shape: tier 1 is q96's fused serve with a top-50 heap;
     * tiers 2 and 3 fetch by id against broadcast shortlists (≤ 50·q and
     * ≤ 20·q rows) — code and vector traffic ∝ shortlist, never corpus. */
   private val q113TieredServe = QueryDef(
     (s, dir) => {
-      val (af, coarse, eg) = trainedModel(s, dir)
-      val resid = residualFrame(coarse, eg)
-      val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
-      val lut = probeLutCollected(s, eg.filter(col("vec_id") < 10), coarse, subcents,
-        nprobe = 2)
-      val cand = candFrame(resid, subcents, "p_cell")
-      val wAdc = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
-      val shortlist = cand.join(broadcast(lut), Seq("sub", "code", "p_cell"))
-        .filter(col("n_id") =!= col("q_id"))
-        .groupBy("q_id", "n_id")
-        .agg(sum("d2q").as("adist"))
-        .withColumn("ark", row_number().over(wAdc))
-        .filter(col("ark") <= 50)
+      val (eg, resid, cb) = ivfPqModel(s, dir)
+      val shortlist = adcServe(cb, resid, eg.filter(col("vec_id") < 10),
+          nprobe = 2, k = 50)
         .select("q_id", "n_id", "adist")
       val cd = sq8Codes(s, dir)
       val q8 = cd.filter(col("vec_id") < 10)
@@ -1855,16 +1769,14 @@ object Similarity {
     * is oracle-exact. */
   private val q94IvfPqRecall = QueryDef(
     (s, dir) => {
-      val (af, coarse, eg) = trainedModel(s, dir)
-      val resid = residualFrame(coarse, eg)
-      val (_, subcents) = pqTrainOn(resid.select("vec_id", "qa"))
+      val (eg, resid, cb) = ivfPqModel(s, dir)
       // ONE tagged frame (q87's shape): exact grid-L2 within the cell
       // for src=f, own-cell ADC for src=p, two-cell ADC for src=m.
       // Cell tag re-derived per-row from the planted codebook instead
       // of joining the assignment frame back by vec_id — the same
       // one-pass identity residualFrame uses (the argmin is
       // deterministic integer arithmetic over the same eg/coarse).
-      val egc = coarseWithBest(eg, coarse)
+      val egc = coarseWithBest(eg, cb.coarse)
         .select(col("vec_id"), col("qa"), col("best.cell").as("cell"))
         .localCheckpoint(true)
       val q = egc.filter(col("vec_id") < 10)
@@ -1873,43 +1785,25 @@ object Similarity {
       // native kernel: the flat arm scans every same-cell (corpus row,
       // query) pair — corpus-hot, not query-side
       val d2 = graft.functions.LongVec.l2(col("qa"), col("q_qa"))
-      val wTop = Window.partitionBy("src", "q_id")
-        .orderBy(asc("adist"), asc("n_id"))
+      val wTop = Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))
       val flat = egc.select(col("vec_id").as("n_id"), col("qa"), col("cell"))
         .join(broadcast(q), col("cell") === col("q_cell") &&
           col("n_id") =!= col("q_id"))
-        .select(lit("f").as("src"), col("q_id"), col("n_id"), d2.as("adist"))
-      // ONE nprobe=2 LUT serves both PQ rows: its p_rank=1 slice IS the
-      // own-cell (nprobe=1) LUT — the probe ranking is the assignment's
-      // own (d2, cell) argmin, so the two serves can't drift apart.
-      val lut = probeLutCollected(s, eg.filter(col("vec_id") < 10), coarse, subcents,
-        nprobe = 2)
-      // cell in the join KEY (q93's discipline): lookups bounded by the
-      // queries probing the candidate's own cell
-      val cand = candFrame(resid, subcents, "p_cell")
-      // ONE joined+aggregated frame yields BOTH PQ serves: a candidate
-      // matches the LUT only through its OWN cell, so each (q_id, n_id)
-      // group carries exactly one p_rank — the nprobe=1 serve is the
-      // p_rank=1 slice of the nprobe=2 aggregation, with identical
-      // adist (same single-cell LUT rows), not a second scan+join+agg.
-      val adc2 = cand.join(broadcast(lut), Seq("sub", "code", "p_cell"))
-        .filter(col("n_id") =!= col("q_id"))
-        .groupBy("q_id", "n_id")
-        .agg(sum("d2q").as("adist"), min("p_rank").as("p_rank"))
-        .localCheckpoint(true) // both slices + the window read this
-      def adcServe(np: Int, srcTag: String): DataFrame =
-        adc2.filter(col("p_rank") <= np)
-          .select(lit(srcTag).as("src"), col("q_id"), col("n_id"),
-            col("adist"))
-      val serve = flat.unionByName(adcServe(1, "p")).unionByName(adcServe(2, "m"))
+        .select(col("q_id"), col("n_id"), d2.as("adist"))
         .withColumn("rk", row_number().over(wTop))
         .filter(col("rk") <= 5)
-        .select(col("src"), col("q_id"), col("n_id"))
+        .select(lit("f").as("src"), col("q_id"), col("n_id"))
+      // the PQ rows are two ADC serves: at nprobe=1 the one probe is the
+      // assignment's own cell (same (d2, cell) argmin), so src=p scores
+      // exactly the cell the flat arm scans
+      def pq(np: Int, srcTag: String): DataFrame =
+        adcServe(cb, resid, eg.filter(col("vec_id") < 10), np, k = 5)
+          .select(lit(srcTag).as("src"), col("q_id"), col("n_id"))
+      val serve = flat.unionByName(pq(1, "p")).unionByName(pq(2, "m"))
       val exact = egc.select(col("vec_id").as("n_id"), col("qa"))
         .join(broadcast(q), col("n_id") =!= col("q_id"))
         .select(col("q_id"), col("n_id"), d2.as("adist"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))))
+        .withColumn("rk", row_number().over(wTop))
         .filter(col("rk") <= 5)
         .select(col("q_id"), col("n_id"))
       val hits = serve.join(exact, Seq("q_id", "n_id"), "left_semi")
@@ -1926,8 +1820,8 @@ object Similarity {
         .agg(sum(col("__n") - 1).as("cand_cells"))
       // nprobe=2 candidate cost: every (query, candidate) pair across
       // both probed cells, self excluded — what the second probe costs.
-      val cost2 = af.select(col("vec_id").as("n_id"), col("cell"))
-        .join(broadcast(probeCells(eg.filter(col("vec_id") < 10), coarse,
+      val cost2 = egc.select(col("vec_id").as("n_id"), col("cell"))
+        .join(broadcast(probeCells(eg.filter(col("vec_id") < 10), cb.coarse,
             nprobe = 2).select(col("q_id"), col("p_cell"))),
           col("cell") === col("p_cell"))
         .filter(col("n_id") =!= col("q_id"))

@@ -1,8 +1,14 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("q70: widening nprobe never loses recall, and the mean reflects it") {
     val rows = graft.SparkEntry
@@ -488,5 +494,77 @@ class SimilaritySpec extends SparkSpec {
         r.getSeq[Long](2).toSeq)).sortBy(_._1)
     assert(fused.length == joined.length && fused.nonEmpty)
     assert(fused.toSeq == joined.toSeq)
+  }
+
+  test("adcServe equals the relational ADC scoring + window top-k row " +
+      "for row at nprobe 1/2/8 and k 5/50, with self-exclusion and with " +
+      "a shared exclusion key") {
+    val (eg, resid, cb) =
+      Similarity.ivfPqModel(spark, "/root/testdata/sf0.001")
+    val queries = eg.filter(col("vec_id") < 10)
+    // ids with the same last digit share a key: a query must lose every
+    // such row, not only its own id
+    val keys = eg.select(col("vec_id"), (col("vec_id") % 10).as("ex"))
+    val codeRows = Similarity.pqCodes(resid, cb.subcents)
+      .select(col("vec_id").as("n_id"), col("cell").as("p_cell"),
+        posexplode(col("codes")).as(Seq("sub", "code")))
+    def rowsOf(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+      df.select(col("q_id"), col("n_id"), col("adist"),
+          col("rk").cast("long"))
+        .collect().map(r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSeq.sorted
+    def reference(nprobe: Int, k: Int, keyed: Boolean) = {
+      val lut = Similarity.probeLutOver(
+        Similarity.probeCells(queries, cb.coarse, nprobe), cb.subcents)
+      val scored = codeRows.join(broadcast(lut), Seq("sub", "code", "p_cell"))
+        .groupBy("q_id", "n_id").agg(sum("d2q").as("adist"))
+      val kept =
+        if (!keyed) scored.filter(col("n_id") =!= col("q_id"))
+        else scored
+          .join(keys.toDF("n_id", "n_ex"), Seq("n_id"))
+          .join(keys.toDF("q_id", "q_ex"), Seq("q_id"))
+          .filter(col("n_ex") =!= col("q_ex"))
+      rowsOf(kept.withColumn("rk", row_number().over(
+          Window.partitionBy("q_id").orderBy(asc("adist"), asc("n_id"))))
+        .filter(col("rk") <= k))
+    }
+    var sameKeyServed = false
+    for (nprobe <- Seq(1, 2, 8); k <- Seq(5, 50)) {
+      val own = rowsOf(Similarity.adcServe(cb, resid, queries, nprobe, k))
+      assert(own.nonEmpty && own == reference(nprobe, k, keyed = false),
+        s"self-excluded serve, nprobe=$nprobe k=$k")
+      assert(!own.exists(r => r._1 == r._2))
+      val keyed = rowsOf(Similarity.adcServe(cb, resid, queries, nprobe, k,
+        Some(keys)))
+      assert(keyed == reference(nprobe, k, keyed = true),
+        s"key-excluded serve, nprobe=$nprobe k=$k")
+      assert(!keyed.exists(r => r._1 % 10 == r._2 % 10),
+        s"a row sharing the query's key was served, nprobe=$nprobe k=$k")
+      sameKeyServed ||= own.exists(r => r._1 != r._2 && r._1 % 10 == r._2 % 10)
+    }
+    // the fixture exercises the key: without it, other-id same-key rows
+    // make the top-k
+    assert(sameKeyServed)
+  }
+
+  test("the in-query IVF-PQ serves run no join keyed on sub or code, " +
+      "and q93/q96 no window") {
+    val dir = "/root/testdata/sf0.001"
+    for (name <- Seq("q93_ivfpq_topk", "q94_ivfpq_recall",
+        "q96_ivfpq_multiprobe", "q100_ivfpq_rerank", "q113_tiered_serve",
+        "q121_served_hard_negatives")) {
+      val out = graft.SparkEntry.queries(name)(spark, dir)
+      out.collect()
+      val plan = out.queryExecution.executedPlan
+      val joinKeys = collect(plan) { case j: BaseJoinExec =>
+        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+      }.flatten
+      assert(!joinKeys.exists(Set("sub", "code")),
+        s"$name joins on sub/code:\n$plan")
+      if (name == "q93_ivfpq_topk" || name == "q96_ivfpq_multiprobe")
+        assert(collect(plan) { case w: WindowExec => w }.isEmpty,
+          s"$name runs a window:\n$plan")
+    }
   }
 }
