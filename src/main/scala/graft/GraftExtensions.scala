@@ -20,6 +20,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // point-lookup partition pruning on MergeTable scans: `key = lit`
     // implies `bucket = md5prefix(lit)` (contract in the footers)
     e.injectOptimizerRule(_ => graft.plans.KeyToBucketPruning)
+    // ...and a lookup so pruned to ONE bucket collects on the driver
+    // (DriverLookupExec: no job, no per-literal codegen). Injected as
+    // a columnar rule's pre-transition pass: the post-planner strategy
+    // hook runs only inside adaptive execution, which a plan without
+    // an exchange never enters
+    e.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = graft.plans.DriverLookup
+    })
     // value-predicate FILE pruning on MergeTable scans: manifest #st=
     // per-file min/max stats drop files a pushed range can never match
     e.injectOptimizerRule(_ => graft.plans.StatsFilePruning)

@@ -2247,26 +2247,69 @@ object MergeTable {
     * the relation per action — the round-19 driver-floor fix. The PLAN
     * object is cached, never data: every action still executes from
     * the parquet files. [[vacuum]] (the only path that deletes data
-    * files) sweeps the table's entries. */
-  private val relationCaches = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      BoundedCache[(String, Seq[String], String), DataFrame]]())
+    * files) sweeps the table's entries.
+    *
+    * Beside it, under the same bound and the same sweep, sit the
+    * driver point-lookup READERS ([[lookupReader]]). */
+  private final class SessionCaches {
+    val relations =
+      new BoundedCache[(String, Seq[String], String), DataFrame](64)
+    val readers = new BoundedCache[(String, AnyRef), LookupReader](64)
+  }
 
-  private def relationCacheFor(spark: SparkSession)
-      : BoundedCache[(String, Seq[String], String), DataFrame] =
-    relationCaches.synchronized {
-      var c = relationCaches.get(spark)
+  /** A parquet reader function as Spark's file scan builds it. */
+  private[graft] type LookupReader = org.apache.spark.sql.execution
+    .datasources.PartitionedFile =>
+      Iterator[org.apache.spark.sql.catalyst.InternalRow]
+
+  private val sessionCaches = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SessionCaches]())
+
+  private def cachesFor(spark: SparkSession): SessionCaches =
+    sessionCaches.synchronized {
+      var c = sessionCaches.get(spark)
       if (c == null) {
-        c = new BoundedCache[(String, Seq[String], String), DataFrame](64)
-        relationCaches.put(spark, c)
+        c = new SessionCaches
+        sessionCaches.put(spark, c)
       }
       c
     }
 
-  private def invalidateRelationCache(dir: String): Unit =
-    relationCaches.synchronized {
-      val it = relationCaches.values().iterator()
-      while (it.hasNext) it.next().removeIf(_._1 == dir)
+  private def invalidateTableCaches(dir: String): Unit =
+    sessionCaches.synchronized {
+      val it = sessionCaches.values().iterator()
+      while (it.hasNext) {
+        val c = it.next()
+        c.relations.removeIf(_._1 == dir)
+        c.readers.removeIf(_._1 == dir)
+      }
+    }
+
+  /** The reader function of [[graft.plans.DriverLookupExec]] for one
+    * snapshot relation and required schema, built on the first lookup
+    * and reused after. Building it broadcasts the scan's Hadoop
+    * configuration — the per-scan fixed cost a lookup must not pay
+    * again — and the function depends only on the relation's schemas,
+    * its options and the session's SQL conf, never on its file list
+    * (bucket, stats and bloom pruning change the files, not the
+    * reader) nor on a query literal (the lookup filters row by row).
+    * Keyed by the table dir, taken from the scan's `basePath`, so
+    * [[vacuum]] sweeps it with the relations; a relation without one
+    * gets a fresh, uncached reader. */
+  private[graft] def lookupReader(
+      relation: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
+      requiredSchema: org.apache.spark.sql.types.StructType,
+      build: () => LookupReader): LookupReader =
+    relation.options.get("basePath") match {
+      case Some(base) if base.endsWith("/data") =>
+        val spark = relation.sparkSession
+        val key: AnyRef = (relation.dataSchema, relation.partitionSchema,
+          requiredSchema, relation.options.filter { case (k, _) =>
+            !k.equalsIgnoreCase("path") && !k.equalsIgnoreCase("paths") },
+          spark.sessionState.conf.getAllConfs)
+        cachesFor(spark).readers.computeIfAbsent(
+          (base.stripSuffix("/data"), key), _ => build())
+      case _ => build()
     }
 
   private def scanEntriesRaw(spark: SparkSession, dir: String,
@@ -2294,7 +2337,7 @@ object MergeTable {
     val schemaKey = wides.toSeq.sortBy(_._1)
       .map { case (c, t) => s"$c:${t.json}" }.mkString(",") + "#" +
       schemaDigest
-    relationCacheFor(spark).computeIfAbsent((dir, entries, schemaKey),
+    cachesFor(spark).relations.computeIfAbsent((dir, entries, schemaKey),
       _ => scanEntriesUncached(spark, dir, entries, eschs, wides))
   }
 
@@ -2925,7 +2968,11 @@ object MergeTable {
     * [[readTable]] prunes the same partitions through Catalyst); this
     * API form needs no rule registration and returns exactly the
     * matched rows. Integral and string keys only — the types whose
-    * toString equals Spark's CAST AS STRING. */
+    * toString equals Spark's CAST AS STRING. Keys confined to one
+    * bucket of a snapshot without tombstones collect on the driver,
+    * with no Spark job ([[graft.plans.DriverLookup]]); more buckets,
+    * or a bucket read through deletion vectors, run a scheduled
+    * scan. */
   def readKeys(spark: SparkSession, dir: String, keys: Seq[Any],
       version: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "readKeys needs at least one key")
@@ -4503,7 +4550,7 @@ object MergeTable {
     }
     // cached scan relations may reference just-deleted files; sweep
     // the whole table's entries (a vacuum is rare next to the reads)
-    if (doomed.nonEmpty) invalidateRelationCache(dir)
+    if (doomed.nonEmpty) invalidateTableCaches(dir)
     parMeta(doomed)(rel =>
       fs.delete(new Path(s"$dir/data/$rel"), false)): Unit
     // deletion-vector files sweep under the same contract: referenced

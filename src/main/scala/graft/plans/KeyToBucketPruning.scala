@@ -19,7 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * keys AT PLAN TIME and conjoins `bucket IN (<prefixes>)`, which the
   * file-source strategy then turns into an ordinary partition filter —
   * a point lookup on a 100 TB table reads ONE bucket's files instead
-  * of every file in the snapshot.
+  * of every file in the snapshot. A lookup so pruned to a single
+  * bucket then collects on the DRIVER, without a Spark job
+  * ([[DriverLookup]]): one bucket's files are too small to pay for
+  * scheduling a task.
   *
   * The key ↔ bucket contract travels IN THE PARQUET FOOTERS: the
   * table's write path stamps the key column's field metadata with the

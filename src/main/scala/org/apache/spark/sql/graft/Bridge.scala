@@ -34,4 +34,19 @@ object Bridge {
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
+
+  /** The error a scheduled file scan raises when reading `path` fails
+    * with `e` (FileScanRDD's mapping: a missing file, an upgrade
+    * error passed through, anything else as a failed read). */
+  def fileReadError(e: Throwable, path: String): Throwable = e match {
+    case f: java.io.FileNotFoundException =>
+      org.apache.spark.sql.errors.QueryExecutionErrors
+        .fileNotExistError(path, f)
+    case u: org.apache.spark.SparkUpgradeException => u
+    case _ => e.getCause match {
+      case u: org.apache.spark.SparkUpgradeException => u
+      case _ => org.apache.spark.sql.errors.QueryExecutionErrors
+        .cannotReadFilesError(e, path)
+    }
+  }
 }

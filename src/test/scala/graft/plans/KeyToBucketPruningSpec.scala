@@ -1,8 +1,12 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.ext.MergeTable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -243,5 +247,210 @@ class KeyToBucketPruningSpec extends SparkSpec {
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("bucket IN"),
       s"rule must stay silent on a data-column bucket:\n$plan")
+  }
+
+  // ---- driver-side collect of single-bucket lookups (DriverLookup) ----
+
+  /** The lookup's rows through BOTH paths — the driver collect
+    * (`executeCollect` of the DriverLookupExec root) and the scheduled
+    * scan (`toRdd`, which runs the wrapped child) — asserted equal row
+    * for row, as Catalyst values. */
+  private def driverVsScheduled(df: DataFrame): Seq[Seq[Any]] = {
+    val plan = df.queryExecution.executedPlan
+    assert(plan.isInstanceOf[DriverLookupExec],
+      s"single-bucket lookup did not plan a driver collect:\n$plan")
+    val types = df.schema.map(_.dataType)
+    def vals(r: InternalRow): Seq[Any] = types.zipWithIndex.map {
+      case (t, i) => if (r.isNullAt(i)) null else r.get(i, t)
+    }
+    val driver = plan.executeCollect().toSeq.map(vals)
+    val scheduled = df.queryExecution.toRdd.map(_.copy()).collect()
+      .toSeq.map(vals)
+    assert(driver === scheduled)
+    driver
+  }
+
+  private def keyValue(df: DataFrame): Seq[(Long, String)] =
+    df.select("key", "value").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  private def bucket2(k: Any): String =
+    KeyToBucketPruning.bucketOf(k.toString, 2)
+
+  test("driver collect equals the scheduled scan row for row: present, " +
+      "absent-in-live-bucket and absent-bucket keys, an IN-list inside " +
+      "one bucket, a subset projection with an extra predicate, readKeys") {
+    val dir = mkTable()
+    val t = MergeTable.readTable(spark, dir)
+    val present = driverVsScheduled(
+      t.filter(col("key") === 7L).select("key", "value"))
+    assert(present.map(r => (r(0), r(1).toString)) === Seq((7L, "v7")))
+    assert(keyValue(t.filter(col("key") === 7L)) === Seq((7L, "v7")))
+
+    val live = (1 to 500).map(bucket2).toSet
+    val absentLive = (501L to 5000L).find(k => live.contains(bucket2(k))).get
+    assert(driverVsScheduled(t.filter(col("key") === absentLive)).isEmpty)
+
+    val pair = (1L to 500L).groupBy(bucket2).values
+      .find(_.size >= 2).get.take(2)
+    val inOne = t.filter(col("key").isin(pair: _*))
+    assert(driverVsScheduled(inOne.select("key", "value"))
+      .map(_.head).toSet === pair.toSet)
+
+    val sub = t.filter(col("key") === 42L && col("value").startsWith("v"))
+      .select("value")
+    assert(driverVsScheduled(sub).map(_.head.toString) === Seq("v42"))
+    assert(driverVsScheduled(t.filter(col("key") === 42L &&
+      col("value") =!= "v42").select("value")).isEmpty)
+
+    val api = MergeTable.readKeys(spark, dir, Seq(13L))
+    assert(driverVsScheduled(api.select("key", "value"))
+      .map(r => (r(0), r(1).toString)) === Seq((13L, "v13")))
+
+    // a key hashing to a bucket the (one-row) table does not hold
+    import spark.implicits._
+    val one = java.nio.file.Files.createTempDirectory("graft-kbp-dl")
+      .resolve("t").toString
+    MergeTable.create(Seq((1L, "one")).toDF("key", "value"), one, "key")
+    val far = (100L to 200L).find(k => bucket2(k) != bucket2(1L)).get
+    assert(driverVsScheduled(MergeTable.readTable(spark, one)
+      .filter(col("key") === far)).isEmpty)
+  }
+
+  test("driver collect equals the scheduled scan on a string key, SQL " +
+      "time travel, a renamed column and an int->long widened column") {
+    import spark.implicits._
+    val sdir = java.nio.file.Files.createTempDirectory("graft-kbp-ds")
+      .resolve("t").toString
+    MergeTable.create(
+      (1 to 300).map(i => (s"id-$i", i)).toDF("key", "n"), sdir, "key")
+    assert(driverVsScheduled(MergeTable.readTable(spark, sdir)
+      .filter(col("key") === "id-7").select("n")) === Seq(Seq(7)))
+
+    val dir = mkTable()
+    MergeTable.upsert(spark, dir, Seq((7L, "SEVEN")).toDF("key", "value"))
+    val sql = (v: String) => spark.sql(
+      s"SELECT key, value FROM merge_table('$dir'$v) WHERE key = 7")
+    assert(driverVsScheduled(sql(", 1")).map(_(1).toString) === Seq("v7"))
+    assert(driverVsScheduled(sql("")).map(_(1).toString) === Seq("SEVEN"))
+
+    MergeTable.renameColumn(spark, dir, "value", "label"): Unit
+    val renamed = MergeTable.readTable(spark, dir)
+      .filter(col("key") === 9L).select("label")
+    assert(driverVsScheduled(renamed).map(_.head.toString) === Seq("v9"))
+
+    val wdir = java.nio.file.Files.createTempDirectory("graft-kbp-dw")
+      .resolve("t").toString
+    MergeTable.create(
+      (1 to 200).map(i => (i.toLong, i * 3)).toDF("key", "qty"), wdir, "key")
+    MergeTable.widenColumn(spark, wdir, "qty", "bigint"): Unit
+    val wide = MergeTable.readTable(spark, wdir).filter(col("key") === 11L)
+      .select("qty")
+    assert(wide.schema.head.dataType === org.apache.spark.sql.types.LongType)
+    assert(driverVsScheduled(wide) === Seq(Seq(33L)))
+  }
+
+  test("a data file deleted under the snapshot fails the driver " +
+      "collect and the scheduled scan alike") {
+    val dir = mkTable()
+    val q = MergeTable.readTable(spark, dir).filter(col("key") === 7L)
+    assert(q.queryExecution.executedPlan.isInstanceOf[DriverLookupExec])
+    val victim = scanOf(q).selectedPartitions.filePartitionIterator
+      .flatMap(_.files).toSeq.head.getPath
+    new java.io.File(victim.toUri).delete(): Unit
+    def chain(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    val driver = chain(intercept[Exception](q.collect()))
+    val scheduled = chain(intercept[Exception](
+      q.queryExecution.toRdd.map(_.copy()).collect()))
+    for (c <- Seq(driver, scheduled)) {
+      assert(c.exists(_.isInstanceOf[java.io.FileNotFoundException]), c)
+      assert(c.exists(e => String.valueOf(e.getMessage)
+        .contains(victim.getName)), c)
+    }
+  }
+
+  /** Jobs started while `body` runs: the count between two fence jobs,
+    * each awaited on the listener bus, so no event is missed or
+    * borrowed from a neighbour. */
+  private def jobsDuring(body: => Unit): Int = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    def fence(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count(): Unit
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(tag) && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(seen.contains(tag), s"fence $tag never reached the listener")
+    }
+    try {
+      fence("kbp-fence-a")
+      body
+      fence("kbp-fence-b")
+      val js = seen.asScala.toSeq
+      js.indexOf("kbp-fence-b") - js.indexOf("kbp-fence-a") - 1
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a warmed single-bucket lookup runs no Spark job (SQL and " +
+      "readKeys); two-bucket IN-lists and DV-bearing snapshots keep the " +
+      "scheduled scan; the plan and the scan metrics read as before") {
+    import spark.implicits._
+    val dir = mkTable()
+    val sql = (k: Long) => spark.sql(
+      s"SELECT key, value FROM merge_table('$dir') WHERE key = $k")
+    keyValue(sql(3L)): Unit // warm: relation and reader caches
+    var rows = Seq.empty[(Long, String)]
+    val q = sql(7L)
+    assert(jobsDuring {
+      rows = q.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    } === 0)
+    assert(rows === Seq((7L, "v7")))
+    // the collected plan keeps the pruned scan, and its metrics count
+    val scan = scanOf(q)
+    assert(scan.partitionFilters.exists(_.references.exists(
+      _.name == KeyToBucketPruning.BucketColName)), scan.partitionFilters)
+    assert(scan.metrics("numFiles").value === 1L)
+
+    MergeTable.readKeys(spark, dir, Seq(13L)).collect(): Unit
+    assert(jobsDuring {
+      rows = keyValue(MergeTable.readKeys(spark, dir, Seq(13L)))
+    } === 0)
+    assert(rows === Seq((13L, "v13")))
+
+    val two = (1L to 500L).groupBy(bucket2).values.toSeq
+      .sortBy(_.head).take(2).map(_.head)
+    val multi = MergeTable.readTable(spark, dir).filter(col("key").isin(two: _*))
+    assert(!multi.queryExecution.executedPlan.isInstanceOf[DriverLookupExec])
+    assert(jobsDuring { rows = keyValue(multi) } > 0)
+    assert(rows.toSet === two.map(k => (k, s"v$k")).toSet)
+
+    // q181's shape: a merge-on-read delete leaves tombstones, and the
+    // lookup reads through the DV union + anti-join
+    val dv = java.nio.file.Files.createTempDirectory("graft-kbp-dv")
+      .resolve("t").toString
+    MergeTable.create((1 to 500).map(i => (i.toLong, s"v$i"))
+      .toDF("key", "value"), dv, "key", hexDigits = 1)
+    val b7 = KeyToBucketPruning.bucketOf("7", 1)
+    val dead = (1L to 500L).find(k => k != 7L &&
+      KeyToBucketPruning.bucketOf(k.toString, 1) == b7).get
+    MergeTable.deleteKeysMor(spark, dv, Seq(dead).toDF("key")): Unit
+    val dvq = (k: Long) => spark.sql(
+      s"SELECT key, value FROM merge_table('$dv') WHERE key = $k")
+    assert(!dvq(7L).queryExecution.executedPlan
+      .isInstanceOf[DriverLookupExec])
+    keyValue(dvq(7L)): Unit
+    assert(jobsDuring { rows = keyValue(dvq(7L)) } > 0)
+    assert(rows === Seq((7L, "v7")))
+    assert(keyValue(dvq(dead)).isEmpty)
   }
 }
