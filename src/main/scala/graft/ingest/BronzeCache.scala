@@ -1,7 +1,10 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Read-through bronze layer — the engine form of the reference's
   * response cache (S3/S4, reference src/extract_github_data.py:293-344):
@@ -10,9 +13,13 @@ import org.apache.spark.sql.functions._
   * (cache hit ≙ scan elision) and only the misses go to the expensive
   * fetch, whose results are appended for the next run.
   *
-  * The cache check is an anti-join on the key — a hash shuffle at worst,
-  * a broadcast when the requested set is small — never a per-key lookup
-  * loop like the reference's one-file-per-id cache.
+  * A run's request set is one keyset page, bounded by the run budget
+  * (the reference's MAX_REQUESTS_PER_RUN), so it is collected once and
+  * bronze is probed with its ids as one pushed-down `IN` predicate: row
+  * group min/max stats skip the files that hold none of them, and the
+  * declared schema spares the footer-merge job that schema inference
+  * would run. Never a per-key lookup loop like the reference's
+  * one-file-per-id cache.
   */
 object BronzeCache {
 
@@ -24,33 +31,36 @@ object BronzeCache {
 
   /** Serve `requested` (any DataFrame with an `id` column describing the
     * keys wanted this run) through the bronze cache at `bronzeDir`.
+    * `requested` is evaluated once, the miss fetch at most once.
     *
+    * @param schema    the bronze record schema, id column included
     * @param fetchMiss given the missed subset of `requested`, produce the
-    *                  fetched raw records (same schema as bronze)
+    *                  fetched raw records in `schema`'s column order
     * @return (batch, hits, misses): the full batch of raw records for the
-    *         requested keys, plus hit/miss counts for run metrics
-    *         (cache_hits in the reference's envelope, :739)
+    *         requested keys as a local relation in id order, plus hit/miss
+    *         counts for run metrics (cache_hits in the reference's
+    *         envelope, :739)
     */
-  def readThrough(spark: SparkSession, bronzeDir: String,
+  def readThrough(spark: SparkSession, bronzeDir: String, schema: StructType,
       requested: DataFrame, fetchMiss: DataFrame => DataFrame)
       : (DataFrame, Long, Long) = {
-    val keys = requested.select("id")
-    if (!bronzeExists(spark, bronzeDir)) {
-      val fetched = fetchMiss(requested)
-      fetched.write.mode("append").parquet(bronzeDir)
-      (spark.read.parquet(bronzeDir).join(keys, Seq("id"), "left_semi"),
-        0L, keys.count())
-    } else {
-      val bronze = spark.read.parquet(bronzeDir)
-      val hits = bronze.join(keys, Seq("id"), "left_semi")
-      val missKeys = requested.join(bronze.select("id"), Seq("id"), "left_anti")
-      val nMiss = missKeys.count()
-      if (nMiss > 0) {
-        fetchMiss(missKeys).write.mode("append").parquet(bronzeDir)
-      }
-      val batch = spark.read.parquet(bronzeDir)
-        .join(keys, Seq("id"), "left_semi")
-      (batch, hits.count(), nMiss)
-    }
+    val keys = requested.collect()
+    val ids = keys.map(_.getAs[Long]("id"))
+    val hits =
+      if (ids.isEmpty || !bronzeExists(spark, bronzeDir)) Array.empty[Row]
+      else spark.read.schema(schema).parquet(bronzeDir)
+        .filter(col("id").isin(ids: _*)).collect()
+    val hitIds = hits.map(_.getAs[Long]("id")).toSet
+    val misses = keys.filterNot(k => hitIds(k.getAs[Long]("id")))
+    val fetched =
+      if (misses.isEmpty) Array.empty[Row]
+      else fetchMiss(IngestPipeline.local(spark, misses.toSeq,
+        requested.schema)).collect()
+    if (fetched.nonEmpty)
+      IngestPipeline.local(spark, fetched.toSeq, schema)
+        .write.mode("append").parquet(bronzeDir)
+    val batch = (hits ++ fetched).sortBy(_.getAs[Long]("id"))
+    (spark.createDataFrame(batch.toSeq.asJava, schema), hits.length.toLong,
+      misses.length.toLong)
   }
 }

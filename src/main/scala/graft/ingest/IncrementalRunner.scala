@@ -60,16 +60,16 @@ final class CachedDetailRepoSource(
   private var failures = 0L
 
   def fetch(spark: SparkSession, since: Long, limit: Int): DataFrame = {
-    val summaries = list.fetch(spark, since, limit)
     var acc: Option[org.apache.spark.util.LongAccumulator] = None
-    val (batch, nHits, nMisses) =
-      BronzeCache.readThrough(spark, bronzeDir, summaries, missKeys => {
+    val (batch, nHits, nMisses) = BronzeCache.readThrough(spark, bronzeDir,
+      RepoSchema.raw, list.fetch(spark, since, limit), missKeys => {
         val (enriched, failedAcc) = DetailEnricher.enrich(missKeys, clientFactory)
         acc = Some(failedAcc)
         DetailEnricher.details(enriched)
       })
-    // readThrough has already written the misses to bronze (one executed
-    // pass over the enrichment plan), so the accumulator has settled
+    // readThrough collected the fetched details (the one executed pass
+    // over the enrichment plan) before returning, so the accumulator has
+    // settled
     calls += nMisses // one detail request per cache miss
     hits += nHits
     failures += acc.fold(0L)(_.value)
@@ -114,43 +114,42 @@ final class IncrementalRunner(spark: SparkSession, source: RepoSource,
 
   /** One micro-batch: fetch (limit pushed down) → flatten → validate →
     * sink valid + quarantine invalid → metrics → commit cursor last.
-    * Returns the one-row metrics DataFrame (collected to keep ordering
-    * guarantees: sink IO has completed before the cursor moves). */
+    * The batch holds at most `budget` rows (the reference's per-run
+    * request cap), so it is validated once and collected; the sinks and
+    * the envelope are written from that one driver-side copy, each from
+    * one partition, and the source's lineage is never re-run. Returns
+    * the one-row metrics DataFrame, the same row the envelope holds:
+    * sink IO has completed and the cursor has moved when it returns. */
   def runOnce(sinkDir: String, quarantineDir: String, budget: Int,
       testMode: Boolean = false): DataFrame = {
     val t0 = System.nanoTime()
     val since = cursor
     val (api0, hits0, failed0) =
       (source.apiCalls, source.cacheHits, source.failedCount)
-    val raw = source.fetch(spark, since, budget)
-    val validated = IngestPipeline.withValidation(IngestPipeline.flatten(raw))
-      .persist() // consumed by two sinks + metrics; one source scan
-    try {
-      val (valid, invalid) = IngestPipeline.split(validated)
-      // ---- sink first (both streams), commit cursor only afterwards ----
-      IngestPipeline.writePartitioned(valid, sinkDir)
-      invalid.write.mode("append").json(quarantineDir)
-      // counter deltas read AFTER the sinks ran: lazy sources only incur
-      // their requests when the plan actually executes
-      val m = IngestPipeline.metrics(validated, since,
-        source.failedCount - failed0,
-        source.apiCalls - api0, source.cacheHits - hits0,
-        testMode, (System.nanoTime() - t0) / 1e9)
-      val rows = m.collect()
-      // persist the run envelope at a SIBLING path (inside the sink it
-      // would collide with Hive partition discovery) — still BEFORE the
-      // cursor commit, so metadata can never claim a batch the cursor
-      // doesn't cover (reference metadata block,
-      // src/extract_github_data.py:730-742)
-      m.coalesce(1).write.mode("append")
-        .json(s"${sinkDir.stripSuffix("/")}_metadata")
-      val lastId = rows(0).getAs[Long]("last_repo_id")
-      if (lastId > since) commitCursor(lastId)
-      // return the materialized row, not the live plan — the runner's
-      // guarantee is "sink done, cursor committed" at return time
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), m.schema)
-    } finally validated.unpersist()
+    val validated = IngestPipeline.withValidation(
+      IngestPipeline.flatten(source.fetch(spark, since, budget)))
+    val rows = validated.collect().toSeq
+    val (valid, invalid) =
+      IngestPipeline.split(IngestPipeline.local(spark, rows, validated.schema))
+    // ---- sink first (both streams), commit cursor only afterwards ----
+    IngestPipeline.writePartitioned(valid, sinkDir)
+    invalid.write.mode("append").json(quarantineDir)
+    val m = IngestPipeline.metrics(rows, since,
+      source.failedCount - failed0,
+      source.apiCalls - api0, source.cacheHits - hits0,
+      testMode, (System.nanoTime() - t0) / 1e9,
+      java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+    val envelope =
+      spark.createDataFrame(java.util.List.of(m), RepoSchema.metrics)
+    // persist the run envelope at a SIBLING path (inside the sink it
+    // would collide with Hive partition discovery) — still BEFORE the
+    // cursor commit, so metadata can never claim a batch the cursor
+    // doesn't cover (reference metadata block,
+    // src/extract_github_data.py:730-742)
+    envelope.write.mode("append").json(s"${sinkDir.stripSuffix("/")}_metadata")
+    val lastId = m.getAs[Long]("last_repo_id")
+    if (lastId > since) commitCursor(lastId)
+    envelope
   }
 }
 

@@ -1,13 +1,21 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.time.{LocalDateTime, ZoneId, ZoneOffset}
+import java.time.format.DateTimeFormatter
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's per-record loop (reference src/extract_github_data.py:
   * 677-714) dissolved into a declarative DataFrame chain: flatten (T1) →
-  * validate (T2) → metrics (T5) → partitioned sink (S7). Every stage is a
-  * pure Catalyst projection/filter/aggregate — column pruning, predicate
-  * pushdown and partition pruning come for free (SURVEY.md §4).
+  * validate (T2) → partitioned sink (S7), each a pure Catalyst
+  * projection/filter — column pruning, predicate pushdown and partition
+  * pruning come for free (SURVEY.md §4) — and the run metrics (T5),
+  * counted over the batch the runner has already collected.
   */
 object IngestPipeline {
 
@@ -51,27 +59,39 @@ object IngestPipeline {
     validated.filter(col("is_valid")).drop("missing_fields", "is_valid"),
     validated.filter(!col("is_valid")))
 
-  /** T5 run-summary metrics as a one-row aggregation (reference counters
-    * at src/extract_github_data.py:670-742). failedCount arrives from the
-    * fetch stage (null detail rows), apiCalls/cacheHits from the source's
-    * request counters + the bronze read-through (reference :737-739),
-    * testMode/duration from the runner. */
-  def metrics(validated: DataFrame, startRepoId: Long, failedCount: Long,
+  /** T5 run-summary metrics as one row (reference counters at
+    * src/extract_github_data.py:670-742), counted on the driver over the
+    * collected validated batch. failedCount arrives from the fetch stage
+    * (null detail rows), apiCalls/cacheHits from the source's request
+    * counters + the bronze read-through (reference :737-739),
+    * testMode/duration from the runner; extraction_date is the wall
+    * clock in `zone`, the session time zone. */
+  def metrics(validated: Seq[Row], startRepoId: Long, failedCount: Long,
       apiCalls: Long, cacheHits: Long,
-      testMode: Boolean, durationSeconds: Double): DataFrame =
-    validated.agg(
-      date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss")
-        .as("extraction_date"),
-      lit(startRepoId).as("start_repo_id"),
-      coalesce(max("id"), lit(startRepoId)).as("last_repo_id"),
-      count("*").as("total_processed"),
-      sum(when(col("is_valid"), 1L).otherwise(0L)).as("valid_count"),
-      sum(when(!col("is_valid"), 1L).otherwise(0L)).as("invalid_count"),
-      lit(failedCount).as("failed_count"),
-      lit(apiCalls).as("api_calls"),
-      lit(cacheHits).as("cache_hits"),
-      lit(testMode).as("test_mode"),
-      lit(durationSeconds).as("duration_seconds"))
+      testMode: Boolean, durationSeconds: Double,
+      zone: ZoneId = ZoneOffset.UTC): Row = {
+    val ids = validated.map(_.getAs[Any]("id")).collect { case id: Long => id }
+    val validCount = validated.count(_.getAs[Boolean]("is_valid")).toLong
+    new GenericRowWithSchema(Array(
+      LocalDateTime.now(zone).format(
+        DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")),
+      startRepoId,
+      ids.maxOption.getOrElse(startRepoId),
+      validated.size.toLong,
+      validCount,
+      validated.size - validCount,
+      failedCount,
+      apiCalls,
+      cacheHits,
+      testMode,
+      durationSeconds), RepoSchema.metrics)
+  }
+
+  /** `rows` as a single-partition local relation: one task, so each
+    * write of it lands one file per output directory. */
+  def local(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
 
   /** S7 sink-partition derivation: Hive-style year=/month=/day= columns
     * from a timestamp (replaces the reference's bare yyyy/mm/dd S3 keys,

@@ -1,10 +1,7 @@
 package graft.ext
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -14,7 +11,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 
 class IvfPqIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -383,33 +380,6 @@ class IvfPqIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .collect().isEmpty)
   }
 
-  /** Spark jobs started by `body`, counted by a listener; a fenced job
-    * after the body guarantees the listener has seen every event. */
-  private def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "ivfpq-guard"
-    val fence = "ivfpq-guard-fence"
-    val started = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet(): Unit
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "listener fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener fence timed out")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a warmed search is one fused scan: at most 2 Spark jobs, the " +
       "cell partition filter on the file scan, and no broadcast hash " +
       "join, window or range exchange in the executed plan") {
@@ -420,7 +390,7 @@ class IvfPqIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val q = df(1000L -> vec(6), 1001L -> vec(9))
     IvfPqIndex.search(spark, idx, q, k = 3).collect()
     var served: DataFrame = null
-    val jobs = jobsRunBy {
+    val jobs = SparkJobs.during(spark) {
       served = IvfPqIndex.search(spark, idx, q, k = 3)
       assert(served.collect().length == 6)
     }

@@ -3,9 +3,12 @@ package graft.ingest
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.util.LongAccumulator
+import graft.{SparkJobs, SparkSpec}
+import CacheAndEnrichSpec._
 
 class CacheAndEnrichSpec extends SparkSpec {
 
@@ -17,6 +20,9 @@ class CacheAndEnrichSpec extends SparkSpec {
   // counts how many times the expensive fetch actually ran
   private val fetchCalls = new AtomicInteger(0)
 
+  private val payloadSchema = StructType(Seq(
+    StructField("id", LongType), StructField("payload", StringType)))
+
   private def fakeFetch(misses: DataFrame): DataFrame = {
     fetchCalls.incrementAndGet()
     misses.select(col("id"), concat(lit("payload-"), col("id")).as("payload"))
@@ -27,19 +33,22 @@ class CacheAndEnrichSpec extends SparkSpec {
     fetchCalls.set(0)
 
     val (batch1, hits1, miss1) =
-      BronzeCache.readThrough(spark, bronze, keyDf(1, 2, 3), fakeFetch)
+      BronzeCache.readThrough(spark, bronze, payloadSchema, keyDf(1, 2, 3),
+        fakeFetch)
     assert(batch1.count() == 3 && hits1 == 0 && miss1 == 3)
 
     // overlapping request: only id 4 should be fetched
     val (batch2, hits2, miss2) =
-      BronzeCache.readThrough(spark, bronze, keyDf(2, 3, 4), fakeFetch)
+      BronzeCache.readThrough(spark, bronze, payloadSchema, keyDf(2, 3, 4),
+        fakeFetch)
     assert(batch2.count() == 3 && hits2 == 2 && miss2 == 1)
     assert(batch2.filter("id = 2").count() == 1)
 
     // fully-cached request: the fetch function must not run at all
     val before = fetchCalls.get()
     val (batch3, hits3, miss3) =
-      BronzeCache.readThrough(spark, bronze, keyDf(1, 4), fakeFetch)
+      BronzeCache.readThrough(spark, bronze, payloadSchema, keyDf(1, 4),
+        fakeFetch)
     assert(batch3.count() == 2 && hits3 == 2 && miss3 == 0)
     assert(fetchCalls.get() == before)
   }
@@ -57,22 +66,7 @@ class CacheAndEnrichSpec extends SparkSpec {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Fake client: id % 3 == 0 simulates a 404'd (deleted) repo. */
-  private object FakeClientFactory extends DetailEnricher.DetailClientFactory {
-    def apply(): DetailEnricher.DetailClient = new DetailEnricher.DetailClient {
-      def fetchDetail(id: Long, owner: String, name: String): Option[String] =
-        if (id % 3 == 0) None
-        else Some(
-          s"""{"id": $id, "name": "$name", "full_name": "$owner/$name",
-             | "html_url": "https://x/$id", "description": "d",
-             | "stargazers_count": ${id * 2}, "language": "Scala",
-             | "created_at": "2024-03-05T10:00:00Z",
-             | "updated_at": "2024-03-06T11:30:00Z",
-             | "owner": {"login": "$owner", "id": ${id + 1000},
-             |  "type": "User", "avatar_url": "a", "html_url": "h"}}"""
-            .stripMargin.replaceAll("\n", ""))
-    }
-  }
+  private val FakeClientFactory = new FakeClients()
 
   test("detail enrichment fetches per partition, counts failures, never fails the job") {
     val (enriched, failedAcc) =
@@ -124,8 +118,129 @@ class CacheAndEnrichSpec extends SparkSpec {
       new DataFrameRepoSource(DetailEnricher.details(enriched)), state)
     val m = runner.runOnce(sink, Files.createTempDirectory("q").toString,
       budget = 10).collect()(0)
-    val meta = spark.read.json(s"${sink}_metadata").collect()(0)
-    assert(meta.getAs[Long]("total_processed") == m.getAs[Long]("total_processed"))
-    assert(meta.getAs[Long]("last_repo_id") == 2L)
+    val meta = spark.read.schema(RepoSchema.metrics)
+      .json(s"${sink}_metadata").collect()
+    // the envelope on disk is the row the runner returned, field for field
+    assert(meta.length == 1)
+    assert(RepoSchema.metrics.fieldNames.length == 11)
+    for (f <- RepoSchema.metrics.fieldNames)
+      assert(meta(0).getAs[Any](f) == m.getAs[Any](f), f)
+    assert(meta(0).getAs[Long]("last_repo_id") == 2L)
+  }
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Writes the fake API's records for `ids` to bronze directly, 404s
+    * included, as if an earlier run had fetched them. */
+  private def seedBronze(dir: String, ids: Seq[Long]): Unit =
+    spark.read.schema(RepoSchema.raw)
+      .json(spark.createDataset(ids.map(i =>
+        detailJson(i, s"u$i", s"repo-$i", "Scala", 6)))(Encoders.STRING))
+      .write.mode("append").parquet(dir)
+
+  private def files(dir: String, suffix: String): Int =
+    Option(new java.io.File(dir).listFiles()).fold(0)(
+      _.count(f => f.getName.startsWith("part-") && f.getName.endsWith(suffix)))
+
+  test("runOnce evaluates the list page once: every listed row is " +
+      "produced once") {
+    val bronze = tmp("bronze")
+    seedBronze(bronze, Seq(2L, 4L))
+    val list = new CountingListSource(summaries(1L to 10L: _*))
+    val runner = new IncrementalRunner(spark,
+      new CachedDetailRepoSource(list, bronze, FakeClientFactory),
+      tmp("state"))
+    val m = runner.runOnce(tmp("sink"), tmp("q"), budget = 8).collect()(0)
+    assert(m.getAs[Long]("cache_hits") == 2L)
+    assert(m.getAs[Long]("api_calls") == 1L + 6L)
+    assert(list.produced.value == 8L)
+  }
+
+  test("a warmed runOnce through the bronze cache runs at most 8 Spark " +
+      "jobs (6 when every id hits) and writes each output from one task") {
+    val bronze = tmp("bronze")
+    seedBronze(bronze, (21L to 25L) ++ (30L to 39L))
+    val runner = new IncrementalRunner(spark,
+      new CachedDetailRepoSource(
+        new DataFrameRepoSource(summaries(1L to 40L: _*)), bronze,
+        new FakeClients(noLanguage = Set(13L), spreadDays = true)),
+      tmp("state"))
+    runner.runOnce(tmp("sink"), tmp("q"), budget = 10): Unit // warm
+
+    // ids 11..29: hits 21..25, 404s 12/15/18/27, id 13 invalid
+    val (sink, q) = (tmp("sink"), tmp("q"))
+    val bronzeFiles = files(bronze, ".parquet")
+    var m: Row = null
+    val jobs = SparkJobs.during(spark) {
+      m = runner.runOnce(sink, q, budget = 19).collect()(0)
+    }
+    assert(jobs <= 8, s"runOnce ran $jobs Spark jobs")
+    assert(m.getAs[Long]("cache_hits") == 5L)
+    assert(m.getAs[Long]("failed_count") == 4L)
+    assert(m.getAs[Long]("api_calls") == 1L + 14L)
+    assert(m.getAs[Long]("valid_count") == 14L)
+    assert(m.getAs[Long]("invalid_count") == 1L)
+    assert(files(bronze, ".parquet") == bronzeFiles + 1)
+    for (day <- Seq(6, 7))
+      assert(files(s"$sink/year=2024/month=3/day=$day", ".json") == 1, day)
+    assert(files(q, ".json") == 1)
+    assert(files(s"${sink}_metadata", ".json") == 1)
+
+    // ids 30..39: all served from bronze, nothing fetched or appended
+    val hitJobs = SparkJobs.during(spark) {
+      m = runner.runOnce(tmp("sink"), tmp("q"), budget = 10).collect()(0)
+    }
+    assert(hitJobs <= 6, s"all-hit runOnce ran $hitJobs Spark jobs")
+    assert(m.getAs[Long]("cache_hits") == 10L)
+    assert(m.getAs[Long]("api_calls") == 1L)
+    assert(files(bronze, ".parquet") == bronzeFiles + 1)
+    assert(runner.cursor == 39L)
+  }
+}
+
+object CacheAndEnrichSpec {
+  /** A list source whose page frame counts, through an accumulator, each
+    * row it produces every time the frame is evaluated. */
+  final class CountingListSource(rows: DataFrame) extends RepoSource {
+    val produced: LongAccumulator =
+      rows.sparkSession.sparkContext.longAccumulator("listed_rows")
+    private var calls = 0L
+    def fetch(spark: SparkSession, since: Long, limit: Int): DataFrame = {
+      calls += 1
+      val page = rows.collect().filter(_.getAs[Long]("id") > since)
+        .sortBy(_.getAs[Long]("id")).take(limit).toSeq
+      val acc = produced
+      spark.createDataFrame(spark.sparkContext.parallelize(page, 1)
+        .map { r => acc.add(1L); r }, rows.schema)
+    }
+    override def apiCalls: Long = calls
+  }
+
+  /** One fake detail record; a null `language` makes it invalid. */
+  def detailJson(id: Long, owner: String, name: String, language: String,
+      day: Int): String =
+    s"""{"id": $id, "name": "$name", "full_name": "$owner/$name",
+       | "html_url": "https://x/$id", "description": "d",
+       | "stargazers_count": ${id * 2},
+       | "language": ${Option(language).fold("null")(l => "\"" + l + "\"")},
+       | "created_at": "2024-03-05T10:00:00Z",
+       | "updated_at": "2024-03-0${day}T11:30:00Z",
+       | "owner": {"login": "$owner", "id": ${id + 1000},
+       |  "type": "User", "avatar_url": "a", "html_url": "h"}}"""
+      .stripMargin.replaceAll("\n", "")
+
+  /** Fake client: id % 3 == 0 simulates a 404'd (deleted) repo; ids in
+    * `noLanguage` come back without a language, and with `spreadDays`
+    * even ids are updated a day later than odd ones. */
+  final class FakeClients(noLanguage: Set[Long] = Set.empty,
+      spreadDays: Boolean = false) extends DetailEnricher.DetailClientFactory {
+    def apply(): DetailEnricher.DetailClient = new DetailEnricher.DetailClient {
+      def fetchDetail(id: Long, owner: String, name: String): Option[String] =
+        if (id % 3 == 0) None
+        else Some(detailJson(id, owner, name,
+          if (noLanguage(id)) null else "Scala",
+          if (spreadDays && id % 2 == 0) 7 else 6))
+    }
   }
 }

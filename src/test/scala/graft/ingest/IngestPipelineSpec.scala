@@ -83,9 +83,9 @@ class IngestPipelineSpec extends SparkSpec {
     val df = rawDf(rawRow(), rawRow(id = 102L, language = null),
       rawRow(id = 110L))
     val validated = IngestPipeline.withValidation(IngestPipeline.flatten(df))
-    val m = IngestPipeline.metrics(validated, startRepoId = 100L,
-      failedCount = 3L, apiCalls = 7L, cacheHits = 2L,
-      testMode = true, durationSeconds = 1.5).collect()(0)
+    val m = IngestPipeline.metrics(validated.collect().toSeq,
+      startRepoId = 100L, failedCount = 3L, apiCalls = 7L, cacheHits = 2L,
+      testMode = true, durationSeconds = 1.5)
     assert(m.getAs[Long]("start_repo_id") == 100L)
     assert(m.getAs[Long]("last_repo_id") == 110L)
     assert(m.getAs[Long]("total_processed") == 3L)
@@ -100,7 +100,7 @@ class IngestPipelineSpec extends SparkSpec {
   test("metrics envelope matches the full 11-field contract schema") {
     val validated = IngestPipeline.withValidation(
       IngestPipeline.flatten(rawDf(rawRow())))
-    val m = IngestPipeline.metrics(validated, startRepoId = 0L,
+    val m = IngestPipeline.metrics(validated.collect().toSeq, startRepoId = 0L,
       failedCount = 0L, apiCalls = 1L, cacheHits = 0L,
       testMode = false, durationSeconds = 0.1)
     // field names, order, and types all match the reference envelope

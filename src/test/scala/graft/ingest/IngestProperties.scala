@@ -68,9 +68,9 @@ object IngestProperties extends Properties("Ingest") {
           r.get(5), r.get(6), r.get(7), r.get(8), r.get(9))
       }
       val v = IngestPipeline.withValidation(IngestPipeline.flatten(df(withIds)))
-      val m = IngestPipeline.metrics(v, startRepoId = 99L, failedCount = 0,
-        apiCalls = 0L, cacheHits = 0L,
-        testMode = true, durationSeconds = 0.0).collect()(0)
+      val m = IngestPipeline.metrics(v.collect().toSeq, startRepoId = 99L,
+        failedCount = 0, apiCalls = 0L, cacheHits = 0L,
+        testMode = true, durationSeconds = 0.0)
       m.getAs[Long]("last_repo_id") >= 99L &&
         m.getAs[Long]("valid_count") + m.getAs[Long]("invalid_count") ==
           m.getAs[Long]("total_processed")

@@ -1,10 +1,7 @@
 package graft.plans
 
-import scala.jdk.CollectionConverters._
-
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import graft.ext.MergeTable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -370,37 +367,6 @@ class KeyToBucketPruningSpec extends SparkSpec {
     }
   }
 
-  /** Jobs started while `body` runs: the count between two fence jobs,
-    * each awaited on the listener bus, so no event is missed or
-    * borrowed from a neighbour. */
-  private def jobsDuring(body: => Unit): Int = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    def fence(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count(): Unit
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(tag) && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(seen.contains(tag), s"fence $tag never reached the listener")
-    }
-    try {
-      fence("kbp-fence-a")
-      body
-      fence("kbp-fence-b")
-      val js = seen.asScala.toSeq
-      js.indexOf("kbp-fence-b") - js.indexOf("kbp-fence-a") - 1
-    } finally sc.removeSparkListener(l)
-  }
-
   test("a warmed single-bucket lookup runs no Spark job (SQL and " +
       "readKeys); two-bucket IN-lists and DV-bearing snapshots keep the " +
       "scheduled scan; the plan and the scan metrics read as before") {
@@ -411,7 +377,7 @@ class KeyToBucketPruningSpec extends SparkSpec {
     keyValue(sql(3L)): Unit // warm: relation and reader caches
     var rows = Seq.empty[(Long, String)]
     val q = sql(7L)
-    assert(jobsDuring {
+    assert(SparkJobs.during(spark) {
       rows = q.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     } === 0)
     assert(rows === Seq((7L, "v7")))
@@ -422,7 +388,7 @@ class KeyToBucketPruningSpec extends SparkSpec {
     assert(scan.metrics("numFiles").value === 1L)
 
     MergeTable.readKeys(spark, dir, Seq(13L)).collect(): Unit
-    assert(jobsDuring {
+    assert(SparkJobs.during(spark) {
       rows = keyValue(MergeTable.readKeys(spark, dir, Seq(13L)))
     } === 0)
     assert(rows === Seq((13L, "v13")))
@@ -431,7 +397,7 @@ class KeyToBucketPruningSpec extends SparkSpec {
       .sortBy(_.head).take(2).map(_.head)
     val multi = MergeTable.readTable(spark, dir).filter(col("key").isin(two: _*))
     assert(!multi.queryExecution.executedPlan.isInstanceOf[DriverLookupExec])
-    assert(jobsDuring { rows = keyValue(multi) } > 0)
+    assert(SparkJobs.during(spark) { rows = keyValue(multi) } > 0)
     assert(rows.toSet === two.map(k => (k, s"v$k")).toSet)
 
     // q181's shape: a merge-on-read delete leaves tombstones, and the
@@ -449,7 +415,7 @@ class KeyToBucketPruningSpec extends SparkSpec {
     assert(!dvq(7L).queryExecution.executedPlan
       .isInstanceOf[DriverLookupExec])
     keyValue(dvq(7L)): Unit
-    assert(jobsDuring { rows = keyValue(dvq(7L)) } > 0)
+    assert(SparkJobs.during(spark) { rows = keyValue(dvq(7L)) } > 0)
     assert(rows === Seq((7L, "v7")))
     assert(keyValue(dvq(dead)).isEmpty)
   }
