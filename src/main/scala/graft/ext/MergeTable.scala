@@ -223,8 +223,12 @@ object MergeTable {
       m.synchronized { m.keySet.removeIf(k => p(k)); () }
   }
 
-  private final case class ManifestData(hexDigits: Int,
-    entries: Seq[String], fps: Map[String, String],
+  /** One manifest, parsed — and the unit every commit is built from: a
+    * writer hands [[commitManifest]] a copy of its base snapshot with
+    * its change applied. `ts` is what the manifest read carried; a
+    * commit ignores it and stamps its own. */
+  private[ext] final case class ManifestData(hexDigits: Int = HEX_DIGITS,
+    entries: Seq[String] = Nil, fps: Map[String, String] = Map.empty,
     tokens: Map[String, Long] = Map.empty,
     sts: Map[String, String] = Map.empty,
     cols: Map[String, String] = Map.empty,
@@ -671,12 +675,8 @@ object MergeTable {
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      val next = cur + 1
-      commitManifest(spark, dir, next, man.entries, man.hexDigits,
-        man.fps, tokens = man.tokens, sts = man.sts, cols = man.cols,
-        dvs = man.dvs, dvf = man.dvf, props = man.props ++ kvs,
-        bls = man.bls, eschs = man.eschs)
-      next
+      commitManifest(spark, dir, cur + 1, man.copy(props = man.props ++ kvs))
+      cur + 1
     }
 
   /** Remove table properties (absent keys are a no-op); one
@@ -688,12 +688,8 @@ object MergeTable {
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      val next = cur + 1
-      commitManifest(spark, dir, next, man.entries, man.hexDigits,
-        man.fps, tokens = man.tokens, sts = man.sts, cols = man.cols,
-        dvs = man.dvs, dvf = man.dvf, props = man.props -- keys,
-        bls = man.bls, eschs = man.eschs)
-      next
+      commitManifest(spark, dir, cur + 1, man.copy(props = man.props -- keys))
+      cur + 1
     }
 
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long =
@@ -729,18 +725,15 @@ object MergeTable {
         sid -> math.max(head.tokens.getOrElse(sid, Long.MinValue),
           old.tokens.getOrElse(sid, Long.MinValue))
       }.toMap
-      val next = cur + 1
       // deletion-vector state restores WITH the data (old.dvs/old.dvf
       // — the tombstones are part of the snapshot's logical content;
       // their files are retained with the manifest that names them);
       // table PROPERTIES keep the head's values (operational config,
       // not data — a rollback must not silently flip, say, the
       // delete-mode knob back)
-      commitManifest(spark, dir, next, old.entries, old.hexDigits,
-        old.fps, tokens = toks, sts = old.sts, cols = old.cols,
-        dvs = old.dvs, dvf = old.dvf, props = head.props,
-        bls = old.bls, eschs = old.eschs)
-      next
+      commitManifest(spark, dir, cur + 1,
+        old.copy(tokens = toks, props = head.props))
+      cur + 1
     }
 
   /** [[restore]] resolved by TIMESTAMP instead of version — the
@@ -814,8 +807,7 @@ object MergeTable {
       newLogical.foreach(to => require(!logical.contains(to),
         s"$op: column '$to' already exists"))
       // the physical slot the logical name currently occupies
-      val p = man.cols.collectFirst {
-        case (ph, l) if l == name => ph }.getOrElse(name)
+      val p = physOf(man, name)
       require(!p.exists(c => c == ':' || c == '|'),
         s"$op: physical column '$p' carries mapping delimiters — " +
           "this table predates clean-name enforcement; rewrite it")
@@ -846,12 +838,8 @@ object MergeTable {
           s"$op: CHECK constraint '$n' ($e) references '$name' — drop " +
             "(and re-add under the new schema) first")
       }
-      val next = cur + 1
-      commitManifest(spark, dir, next, man.entries, man.hexDigits,
-        man.fps, tokens = man.tokens, sts = man.sts, cols = newCols,
-        dvs = man.dvs, dvf = man.dvf, props = man.props,
-        bls = man.bls, eschs = man.eschs)
-      next
+      commitManifest(spark, dir, cur + 1, man.copy(cols = newCols))
+      cur + 1
     }
 
   /** RENAME a column — a pure-metadata commit (the Iceberg/Delta
@@ -907,8 +895,7 @@ object MergeTable {
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      val phys = man.cols.collectFirst {
-        case (p, l) if l == name => p }.getOrElse(name)
+      val phys = physOf(man, name)
       require(!man.cols.get(phys).contains(""),
         s"widenColumn: '$name' was dropped from this table")
       require(phys != key && name != key,
@@ -949,13 +936,9 @@ object MergeTable {
         b -> computed.getOrElse(b,
           fp.split(":").map(_ => "0").mkString(":"))
       } ++ (computed -- man.fps.keySet)
-      val next = cur + 1
-      commitManifest(spark, dir, next, man.entries, man.hexDigits,
-        newFps, tokens = man.tokens, sts = man.sts, cols = man.cols,
-        dvs = man.dvs, dvf = man.dvf,
-        props = man.props + (WidenPropPrefix + phys -> to.catalogString),
-        bls = man.bls, eschs = man.eschs)
-      next
+      commitManifest(spark, dir, cur + 1, man.copy(fps = newFps,
+        props = man.props + (WidenPropPrefix + phys -> to.catalogString)))
+      cur + 1
     }
 
   private def conflict(dir: String, v: Long,
@@ -979,25 +962,20 @@ object MergeTable {
     * below it, it is a legacy committed-empty snapshot whose version
     * number must never be reassigned (see [[versions]]).
     *
-    * `fps` carries the per-bucket content fingerprints
-    * (`#fp=<bucket>:<rows>:<hashsum>` lines) — [[changedBuckets]]
-    * compares them so a layout-only rewrite contributes zero changed
-    * buckets to a later version diff. `beforePromote` is a spec-only
-    * injection point between the temp write and the promotion (the
-    * window a concurrent vacuum's stale-temp sweep can race). */
+    * `man` is the whole next manifest — the base snapshot with one
+    * change applied — so a writer carries every annotation of its base
+    * whole: per-file (`#st`, `#bl`, `#dvf`) and per-epoch (`#esch`)
+    * lines are written only for the files and epochs `man.entries`
+    * still lists. `#fp` and `#dv` lines are written as given. `man.ts`
+    * is ignored: the commit stamps its own. `beforePromote` is a
+    * spec-only injection point between the temp write and the
+    * promotion (the window a concurrent vacuum's stale-temp sweep can
+    * race). */
   private[ext] def commitManifest(spark: SparkSession, dir: String,
-      v: Long, entries: Seq[String],
-      hexDigits: Int = HEX_DIGITS,
-      fps: Map[String, String] = Map.empty,
-      beforePromote: () => Unit = () => (),
-      tokens: Map[String, Long] = Map.empty,
-      sts: Map[String, String] = Map.empty,
-      cols: Map[String, String] = Map.empty,
-      dvs: Seq[String] = Nil,
-      dvf: Map[String, Long] = Map.empty,
-      props: Map[String, String] = Map.empty,
-      bls: Map[String, String] = Map.empty,
-      eschs: Map[String, String] = Map.empty): Unit = {
+      v: Long, man: ManifestData,
+      beforePromote: () => Unit = () => ()): Unit = {
+    val ManifestData(hexDigits, entries, fps, tokens, sts, cols, dvs, dvf,
+      props, bls, _, eschs) = man
     val fs = hadoopFs(spark, dir)
     fs.mkdirs(manifestDir(dir))
     val p = manifestPath(dir, v)
@@ -1950,150 +1928,198 @@ object MergeTable {
   private[graft] val fastRecommits =
     new java.util.concurrent.atomic.AtomicLong()
 
-  /** Write `rows` as version `next`'s epoch under a writer-unique
-    * attempt dir and commit `kept ++ fresh` atomically; returns the
-    * fresh entries. `keptFps` carries the untouched buckets' content
-    * fingerprints forward (inherited verbatim from the prior manifest);
-    * the rewritten buckets' fingerprints are computed from the epoch's
-    * own files ([[epochFingerprints]]). On a lost race the CONFLICT-
-    * SCOPED fast path first tries to RE-COMMIT the already-written
-    * attempt epoch against the winner's head (see [[fastRecommit]]);
-    * only when the race genuinely overlaps is the attempt dir deleted
-    * (a crash instead leaves an orphan for [[vacuum]]) and the
-    * conflict propagated to the caller's [[retryOnConflict]] loop. */
-  private def commitEpoch(spark: SparkSession, dir: String, next: Long,
-      rows: DataFrame, kept: Seq[String], hexDigits: Int,
-      beforeCommit: () => Unit, blockBytes: Option[Long] = None,
-      sortCols: Seq[String] = Nil, dropAfterSort: Seq[String] = Nil,
-      keptFps: Map[String, String] = Map.empty,
-      tokens: Map[String, Long] = Map.empty,
-      keptSts: Map[String, String] = Map.empty,
-      maxRecordsPerFile: Option[Long] = None,
-      cols: Map[String, String] = Map.empty,
-      keptDvs: Seq[String] = Nil,
-      keptDvf: Map[String, Long] = Map.empty,
-      props: Map[String, String] = Map.empty,
-      keptBls: Map[String, String] = Map.empty,
-      keptEschs: Map[String, String] = Map.empty)
-      : EpochCommit = {
-    // the CONSTRAINT SET the verb body enforced against (the listing
-    // is cheap next to the epoch write): the fast re-commit path must
-    // not widen the enforce→commit window past a concurrent
-    // addConstraint — it compares this snapshot and bails to the full
-    // retry (which re-enforces) when the set changed
-    val consAtWrite = constraints(spark, dir)
-    val epochName = s"v=$next-${attemptTag()}"
-    epochWrites.incrementAndGet(): Unit
-    writeEpoch(rows, dir, epochName, hexDigits, blockBytes, sortCols,
-      dropAfterSort, maxRecordsPerFile)
-    val fresh = epochEntries(spark, dir, epochName)
-    // bloom build rides the table property (set-then-rewrite: files
-    // written before the property was set stay unattested — sound);
-    // stats and blooms share one relation and run concurrently
-    val (freshFps, freshSts, freshSchema, freshBls) =
-      if (fresh.isEmpty)
-        (Map.empty[String, String], Map.empty[String, String], "",
-          Map.empty[String, String])
-      else epochAnnotations(spark, dir, epochName, widesOf(props), props)
-    val freshEschs =
-      if (fresh.isEmpty) Map.empty[String, String]
-      else Map(epochName -> freshSchema)
-    beforeCommit()
-    try {
-      commitManifest(spark, dir, next, kept ++ fresh, hexDigits,
-        keptFps ++ freshFps, tokens = tokens, sts = keptSts ++ freshSts,
-        cols = cols, dvs = keptDvs, dvf = keptDvf, props = props,
-        bls = keptBls ++ freshBls, eschs = keptEschs ++ freshEschs)
-      EpochCommit(next, fresh, fpRows(freshFps))
-    }
-    catch { case e: CommitConflictException =>
-      fastRecommit(spark, dir, next, epochName, fresh, freshFps,
-        freshSts, freshBls, freshSchema, hexDigits, kept, keptFps,
-        keptSts, keptBls, keptEschs, keptDvs, keptDvf, tokens, props,
-        cols, consAtWrite) match {
-        case Some(ec) => ec
-        case None =>
-          hadoopFs(spark, dir)
-            .delete(new Path(s"$dir/data/$epochName"), true)
-          throw e
-      }
+  /** An epoch's rows and the layout [[writeEpoch]] gives them. */
+  private final case class EpochRows(df: DataFrame,
+    sortCols: Seq[String] = Nil, dropAfterSort: Seq[String] = Nil,
+    blockBytes: Option[Long] = None,
+    maxRecordsPerFile: Option[Long] = None)
+
+  /** A written epoch as a manifest sees it: its entries and their
+    * read-back annotations, all keyed under the attempt dir `name`. */
+  private final case class Fresh(name: String, entries: Seq[String],
+      fps: Map[String, String], sts: Map[String, String],
+      bls: Map[String, String], schema: String) {
+    def buckets: Set[String] = entries.map(bucketOfEntry).toSet
+    /** The same epoch after its attempt dir is renamed to `to`. */
+    def renamed(to: String): Fresh = {
+      def rekey[V](m: Map[String, V]) =
+        m.map { case (e, x) => to + e.drop(e.indexOf('/')) -> x }
+      Fresh(to, entries.map(e => to + e.drop(e.indexOf('/'))), fps,
+        rekey(sts), rekey(bls), schema)
     }
   }
 
-  /** CONFLICT-SCOPED COMMIT RECOVERY (the Iceberg revalidate-and-
-    * relink discipline): a lost commit race whose winner touched only
-    * DISJOINT buckets invalidates NOTHING this attempt computed — the
-    * epoch files on disk are still exactly the rows the verb meant to
-    * write — so instead of deleting them and re-running the whole verb
-    * body (data reads, joins and all) in [[retryOnConflict]], RE-LIST
-    * the already-written attempt epoch against the winner's head and
-    * commit it as the next version. Eligibility is strict; any doubt
-    * falls back to the full retry (returns None):
+  /** `base` plus one epoch and one set of tombstones: entries of the
+    * `replaces` buckets drop with their fingerprints (copy-on-write),
+    * `mor`'s tombstones subtract their rows' fingerprint delta and join
+    * the DV set (merge-on-read), and each fresh bucket's fingerprint
+    * takes a dropped bucket's place or adds to a kept one (an append).
+    * Every fingerprint term is a component sum, so the result is each
+    * bucket's exact content fingerprint. Annotations carry whole:
+    * [[commitManifest]] writes only those of listed files and epochs. */
+  private def layered(base: ManifestData, fresh: Fresh,
+      replaces: Set[String], mor: Option[MorPlan]): ManifestData = {
+    val delta = mor.fold(Map.empty[String, String])(_.fpDelta)
+    val kept = (base.fps -- replaces).map { case (b, fp) =>
+      b -> delta.get(b).fold(fp)(fpCombine(fp, _, -1)) }
+    base.copy(
+      entries = base.entries.filterNot(e => replaces(bucketOfEntry(e))) ++
+        fresh.entries,
+      fps = kept ++ fresh.fps.map { case (b, f) =>
+        b -> kept.get(b).fold(f)(fpCombine(_, f, 1)) },
+      sts = base.sts ++ fresh.sts,
+      bls = base.bls ++ fresh.bls,
+      eschs = if (fresh.entries.isEmpty) base.eschs
+        else base.eschs + (fresh.name -> fresh.schema),
+      dvs = base.dvs ++ mor.fold(Seq.empty[String])(_.newDvs),
+      dvf = base.dvf ++ mor.fold(Map.empty[String, Long])(_.perFile.map {
+        case (f, n) => f -> (base.dvf.getOrElse(f, 0L) + n) }))
+  }
+
+  /** THE COMMIT of every data writer: the next manifest is the base
+    * snapshot (version `cur`) plus one change, written, annotated and
+    * promoted here and nowhere else.
     *
-    *  - the verb changed no table metadata itself (same bucket width,
-    *    column mapping, properties and DV state as its base snapshot —
-    *    a full-table OPTIMIZE declaring layout, a REBUCKET, or a MOR
-    *    writer re-plans instead), and
+    *  - `rows`: the epoch to write, under a writer-unique attempt dir
+    *    `v=<cur+1>-<tag>`, then read back once for its fingerprints,
+    *    stats, blooms and schema line ([[epochAnnotations]]);
+    *  - `replaces`: the buckets whose entries the epoch supersedes
+    *    (copy-on-write; see [[layered]]);
+    *  - `mor`: tombstones already written under `_dvs/` (merge-on-read);
+    *  - `change`: what else the commit changes — tokens, properties,
+    *    width, the DV set. It must be pure: it is applied to the base
+    *    (for the epoch's width and properties), to the committed
+    *    manifest, and on a lost race to the winner's head;
+    *  - `gate`: a check of the fresh fingerprints before the commit
+    *    ([[compactDvs]]' attestation); on failure the epoch is deleted
+    *    and nothing commits.
+    *
+    * On a lost race a copy-on-write epoch with no gate whose change
+    * leaves width, mapping, properties and tombstones alone may be
+    * re-committed onto the winner's head ([[fastRecommit]]). Otherwise
+    * the attempt's `data/v=…` and `_dvs/dv=…` dirs are deleted (a crash
+    * instead leaves orphans for [[vacuum]]) and the conflict propagates
+    * to the caller's [[retryOnConflict]] loop. */
+  private def commitEpoch(spark: SparkSession, dir: String, cur: Long,
+      base: ManifestData, rows: Option[EpochRows] = None,
+      replaces: Set[String] = Set.empty, mor: Option[MorPlan] = None,
+      change: ManifestData => ManifestData = identity,
+      gate: Option[Map[String, String] => Unit] = None,
+      beforeCommit: () => Unit = () => ()): EpochCommit = {
+    val next = cur + 1
+    val target = change(base)
+    val relinkable = cur >= 1 && mor.isEmpty && gate.isEmpty &&
+      neutral(change, base)
+    // the CONSTRAINT SET the verb body enforced against: the fast
+    // re-commit must not widen the enforce→commit window past a
+    // concurrent addConstraint, so it bails when the set changed
+    val consAtWrite =
+      if (relinkable) constraints(spark, dir) else Map.empty[String, String]
+    val epochName = s"v=$next-${attemptTag()}"
+    val fs = hadoopFs(spark, dir)
+    def cleanUp(): Unit = {
+      fs.delete(new Path(s"$dir/data/$epochName"), true)
+      mor.filter(_.newDvs.nonEmpty).foreach(p =>
+        fs.delete(new Path(s"$dir/_dvs/${p.dvName}"), true))
+    }
+    val none = Fresh(epochName, Nil, Map.empty, Map.empty, Map.empty, "")
+    val fresh = rows.fold(none) { r =>
+      epochWrites.incrementAndGet(): Unit
+      writeEpoch(r.df, dir, epochName, target.hexDigits, r.blockBytes,
+        r.sortCols, r.dropAfterSort, r.maxRecordsPerFile)
+      val entries = epochEntries(spark, dir, epochName)
+      // stats and blooms share one relation and run concurrently; the
+      // bloom build rides the table property (files written before it
+      // was set stay unattested — sound)
+      if (entries.isEmpty) none
+      else {
+        val (fps, sts, schema, bls) = epochAnnotations(spark, dir,
+          epochName, widesOf(target.props), target.props)
+        Fresh(epochName, entries, fps, sts, bls, schema)
+      }
+    }
+    gate.foreach(g =>
+      try g(fresh.fps) catch { case e: Exception => cleanUp(); throw e })
+    beforeCommit()
+    try {
+      commitManifest(spark, dir, next,
+        change(layered(base, fresh, replaces, mor)))
+      EpochCommit(next, fresh.entries, fpRows(fresh.fps))
+    } catch { case e: CommitConflictException =>
+      (if (relinkable)
+         fastRecommit(spark, dir, cur, base, fresh, replaces, change,
+           consAtWrite)
+       else None).getOrElse { cleanUp(); throw e }
+    }
+  }
+
+  /** Whether `change` leaves `m`'s width, column mapping, properties
+    * and tombstones as they were. */
+  private def neutral(change: ManifestData => ManifestData,
+      m: ManifestData): Boolean = {
+    val t = change(m)
+    t.hexDigits == m.hexDigits && t.cols == m.cols && t.props == m.props &&
+      t.dvs == m.dvs && t.dvf == m.dvf
+  }
+
+  /** CONFLICT-SCOPED COMMIT RECOVERY (the Iceberg revalidate-and-
+    * relink discipline): [[commitEpoch]]'s change applied to the
+    * winner's head instead of to the base. A lost race whose winner
+    * touched only DISJOINT buckets invalidates nothing this attempt
+    * computed — the epoch files on disk are still exactly the rows the
+    * verb meant to write — so instead of deleting them and re-running
+    * the verb body (data reads, joins and all) in [[retryOnConflict]],
+    * the already-written epoch is re-committed as the head's successor.
+    * Eligibility is strict; any doubt falls back to the full retry
+    * (returns None):
+    *
+    *  - the verb is copy-on-write with no gate, and its change is
+    *    [[neutral]] on the base and on the head — a full-table
+    *    OPTIMIZE declaring a new layout, a REBUCKET to a new width or
+    *    of a tombstoned table, a MOR writer or [[compactDvs]] re-plans
+    *    instead;
     *  - every bucket this attempt touched (fresh files' buckets plus
     *    buckets it dropped entries from) is BYTE-IDENTICAL between the
-    *    base snapshot and the current head: same entry list, same
-    *    content fingerprint, same tombstone annotations — the winner's
-    *    writes were scoped elsewhere, and
-    *  - the winner changed no width/mapping/properties either, carries
-    *    none of this attempt's idempotency tokens, and the CHECK
-    *    constraint set is still the one the verb enforced against.
+    *    base snapshot and the head: same entry list, same content
+    *    fingerprint, same tombstone annotations — the winner's writes
+    *    were scoped elsewhere;
+    *  - the head has the base's width, mapping and properties, carries
+    *    none of the tokens this change adds, and the CHECK constraint
+    *    set is still the one the verb enforced against.
     *
     * The attempt dir is RENAMED to the committed version's epoch name
     * (`v=<new>-<tag>`) so the epoch-name/version invariant every
     * consumer relies on (schema-union order, vacuum's orphan
-    * classification) survives; entries/stats/bloom/schema keys are
-    * restated under the new name. Untouched buckets inherit the HEAD's
-    * entries and annotations (the winner's state), touched buckets
-    * this attempt's. Loops on further races (each re-validated against
-    * the then-head), bounded like [[retryOnConflict]].
+    * classification) survives. Loops on further races (each
+    * re-validated against the then-head), bounded like
+    * [[retryOnConflict]].
     *
     * At 100 TB concurrency this is the write-throughput ceiling: a
     * fleet of bucket-disjoint writers (the common case under hash
     * bucketing) serializes only on the O(manifest) re-list instead of
     * each redoing its O(bucket-data) read-merge-write per lost race —
     * the ScaleProbe conflict leg prices the wasted bytes saved. */
-  private def fastRecommit(spark: SparkSession, dir: String,
-      next: Long, epochName: String, fresh: Seq[String],
-      freshFps: Map[String, String], freshSts: Map[String, String],
-      freshBls: Map[String, String], freshSchema: String,
-      hexDigits: Int, kept: Seq[String], keptFps: Map[String, String],
-      keptSts: Map[String, String], keptBls: Map[String, String],
-      keptEschs: Map[String, String], keptDvs: Seq[String],
-      keptDvf: Map[String, Long], tokens: Map[String, Long],
-      props: Map[String, String], cols: Map[String, String],
+  private def fastRecommit(spark: SparkSession, dir: String, cur: Long,
+      base: ManifestData, fresh: Fresh, replaces: Set[String],
+      change: ManifestData => ManifestData,
       consAtWrite: Map[String, String],
       maxAttempts: Int = 5): Option[EpochCommit] = {
-    if (next <= 1) return None // no base snapshot to scope against
-    val base =
-      try readManifestFull(spark, dir, next - 1)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    // the verb's OWN metadata deltas disqualify it (conservative: a
-    // re-list cannot re-derive verb-side metadata against a new head)
-    if (hexDigits != base.hexDigits || cols != base.cols ||
-        props != base.props || keptDvs != base.dvs ||
-        keptDvf != base.dvf) return None
-    // tokens the verb is adding/advancing beyond its base snapshot
-    val tokenDelta = tokens.filter { case (sid, id) =>
+    // tokens the change adds or advances beyond its base snapshot
+    val tokenDelta = change(base).tokens.filter { case (sid, id) =>
       !base.tokens.get(sid).contains(id) }
-    val keptSet = kept.toSet
-    val impacted = (fresh.map(bucketOfEntry) ++
-      base.entries.filterNot(keptSet).map(bucketOfEntry)).toSet
+    val impacted = fresh.buckets ++
+      base.entries.map(bucketOfEntry).filter(replaces)
     val baseBy = base.entries.groupBy(bucketOfEntry)
     def dvfOf(m: ManifestData, b: String): Map[String, Long] =
       m.dvf.filter(e => bucketOfEntry(e._1) == b)
     val fs = hadoopFs(spark, dir)
-    var curName = epochName
+    var relinked = fresh
     // after the first rename the attempt dir no longer answers to the
     // name the caller's cleanup deletes — every later bail-out must
     // sweep the renamed dir itself
     def bail(): Option[EpochCommit] = {
-      if (curName != epochName)
-        fs.delete(new Path(s"$dir/data/$curName"), true): Unit
+      if (relinked.name != fresh.name)
+        fs.delete(new Path(s"$dir/data/${relinked.name}"), true): Unit
       None
     }
     var attempts = 0
@@ -2101,12 +2127,13 @@ object MergeTable {
       attempts += 1
       val curV = versions(spark, dir).lastOption
         .getOrElse(return bail())
-      if (curV < next) return bail() // torn head state — full retry
+      if (curV <= cur) return bail() // torn head state — full retry
       val head =
         try readManifestFull(spark, dir, curV)
         catch { case scala.util.control.NonFatal(_) => return bail() }
       if (head.hexDigits != base.hexDigits || head.cols != base.cols ||
-          head.props != base.props) return bail()
+          head.props != base.props || !neutral(change, head))
+        return bail()
       if (tokenDelta.keys.exists(head.tokens.contains)) return bail()
       if (constraints(spark, dir) != consAtWrite) return bail()
       val headBy = head.entries.groupBy(bucketOfEntry)
@@ -2117,37 +2144,24 @@ object MergeTable {
         dvfOf(base, b) == dvfOf(head, b)
       }
       if (!scopedClean) return bail()
-      // RELINK: rename the attempt epoch to the new version's name and
-      // restate every path-keyed annotation under it
+      // RELINK: rename the attempt epoch to the new version's name; its
+      // annotations are restated under it by Fresh.renamed
       val newV = curV + 1
-      val newName = s"v=$newV-" + curName.drop(curName.indexOf('-') + 1)
-      if (!fs.rename(new Path(s"$dir/data/$curName"),
+      val newName = s"v=$newV-" +
+        relinked.name.drop(relinked.name.indexOf('-') + 1)
+      if (!fs.rename(new Path(s"$dir/data/${relinked.name}"),
           new Path(s"$dir/data/$newName"))) return bail()
-      curName = newName
-      def rekey(e: String) = newName + e.drop(e.indexOf('/'))
-      val freshR = fresh.map(rekey)
-      def rekeyM[V](m: Map[String, V]): Map[String, V] =
-        m.map { case (k, v) =>
-          (if (k.startsWith("v=")) rekey(k) else k) -> v }
-      val headKept = head.entries
-        .filterNot(e => impacted(bucketOfEntry(e)))
-      val keptImp = kept.filter(e => impacted(bucketOfEntry(e)))
-      val freshEschs =
-        if (freshR.isEmpty) Map.empty[String, String]
-        else Map(newName -> freshSchema)
+      relinked = relinked.renamed(newName)
+      // untouched buckets keep the head's entries and annotations (the
+      // winner's state), touched buckets take this attempt's
+      val onHead = head.copy(sts = base.sts ++ head.sts,
+        bls = base.bls ++ head.bls, eschs = base.eschs ++ head.eschs)
       try {
-        commitManifest(spark, dir, newV, headKept ++ keptImp ++ freshR,
-          hexDigits,
-          (head.fps -- impacted) ++
-            keptFps.view.filterKeys(impacted).toMap ++ freshFps,
-          tokens = head.tokens ++ tokenDelta,
-          sts = keptSts ++ head.sts ++ rekeyM(freshSts),
-          cols = head.cols, dvs = head.dvs, dvf = head.dvf,
-          props = head.props,
-          bls = keptBls ++ head.bls ++ rekeyM(freshBls),
-          eschs = keptEschs ++ head.eschs ++ freshEschs)
+        commitManifest(spark, dir, newV,
+          change(layered(onHead, relinked, impacted, None)))
         fastRecommits.incrementAndGet(): Unit
-        return Some(EpochCommit(newV, freshR, fpRows(freshFps)))
+        return Some(EpochCommit(newV, relinked.entries,
+          fpRows(relinked.fps)))
       }
       catch { case _: CommitConflictException => () } // re-validate
     }
@@ -2451,32 +2465,42 @@ object MergeTable {
     else all
   }
 
-  /** DV-aware entry read: clean files (no tombstones) scan verbatim;
-    * dirty files scan with their parquet row identity
-    * (`_metadata.file_path` + `_metadata.row_index`) and anti-join the
+  /** The live rows of `entries` with their parquet row identity
+    * (`__dv_file` = manifest entry relpath from `_metadata.file_path`,
+    * `__dv_pos` = `_metadata.row_index`): dirty files anti-join the
     * snapshot's tombstones — work ∝ dirty files + tombstone rows, the
     * merge-on-read contract. The tombstone side broadcasts when small
     * (the typical compliance-delete shape). */
+  private def liveWithIdentity(spark: SparkSession, dir: String,
+      man: ManifestData, entries: Seq[String]): DataFrame = {
+    val scanned = scanEntriesRaw(spark, dir, entries, man.eschs,
+        widesOf(man.props))
+      .withColumn("__dv_file", regexp_extract(
+        col("_metadata.file_path"),
+        "([^/]+/bucket=[0-9a-f]+/[^/]+)$", 1))
+      .withColumn("__dv_pos", col("_metadata.row_index"))
+    val dirty = entries.filter(man.dvf.contains)
+    if (dirty.isEmpty) scanned
+    else {
+      val tomb0 = dvTombstones(spark, dir, man, dirty)
+      val tomb = if (dirty.map(man.dvf).sum <= DvBroadcastMaxRows)
+        broadcast(tomb0) else tomb0
+      scanned.join(tomb,
+        scanned("__dv_file") === tomb("file") &&
+          scanned("__dv_pos") === tomb("pos"), "left_anti")
+    }
+  }
+
+  /** DV-aware entry read: clean files (no tombstones) scan verbatim;
+    * dirty files are read through [[liveWithIdentity]]. */
   private def readEntries(spark: SparkSession, dir: String,
       man: ManifestData, entries: Seq[String]): DataFrame = {
     val wides = widesOf(man.props)
-    val dirty = entries.filter(man.dvf.contains)
+    val (dirty, clean) = entries.partition(man.dvf.contains)
     if (dirty.isEmpty)
       scanEntriesRaw(spark, dir, entries, man.eschs, wides)
     else {
-      val clean = entries.filterNot(man.dvf.contains)
-      val nTomb = dirty.map(man.dvf).sum
-      val tomb0 = dvTombstones(spark, dir, man, dirty)
-      val tomb = if (nTomb <= DvBroadcastMaxRows) broadcast(tomb0)
-        else tomb0
-      val scanned = scanEntriesRaw(spark, dir, dirty, man.eschs, wides)
-        .withColumn("__dv_file", regexp_extract(
-          col("_metadata.file_path"),
-          "([^/]+/bucket=[0-9a-f]+/[^/]+)$", 1))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-      val live = scanned.join(tomb,
-        scanned("__dv_file") === tomb("file") &&
-          scanned("__dv_pos") === tomb("pos"), "left_anti")
+      val live = liveWithIdentity(spark, dir, man, dirty)
         .drop("__dv_file", "__dv_pos")
       if (clean.isEmpty) live
       else scanEntriesRaw(spark, dir, clean, man.eschs, wides)
@@ -3019,10 +3043,48 @@ object MergeTable {
       s"key column $keyCol is not in the input (${df.columns.mkString(",")})")
     val s = df.sparkSession
     keyMeta(s, dir, Some(keyCol))
-    commitEpoch(s, dir, 1L,
-      df.withColumn("bucket", bucketCol(col(keyCol), hexDigits)),
-      Seq.empty, hexDigits, () => ()): Unit
+    commitEpoch(s, dir, 0L, ManifestData(hexDigits), Some(EpochRows(
+      df.withColumn("bucket", bucketCol(col(keyCol), hexDigits))))): Unit
   }
+
+  /** A write batch bucketed at the snapshot's width and materialised
+    * once, with the buckets it touches and its row count, from ONE
+    * aggregate job (O(buckets) driver rows, the documented cost class).
+    * A keyed batch (`gate` names it) also passes the AT-MOST-ONE-ROW-
+    * PER-KEY gate in that job — per-bucket distinct key counts SUM to
+    * the global distinct because the md5 buckets partition the
+    * keyspace. A CDC batch carrying two changes to one key has no
+    * defined latest here: both rows would survive as silent duplicate
+    * keys. Collapse upstream (MergeStream's latestBy does it by a
+    * sequence column); the gate turns the silent corruption into a
+    * loud error for the price already paid to find the buckets. A key
+    * list (`gate` None) collects only its buckets; its count is 0. */
+  private def bucketed(df: DataFrame, key: String, hexDigits: Int,
+      gate: Option[String]): (DataFrame, Set[String], Long) = {
+    val batch = df.withColumn("bucket", bucketCol(col(key), hexDigits))
+      .localCheckpoint(true)
+    gate match {
+      case None =>
+        (batch, batch.select("bucket").distinct().collect()
+          .map(_.getString(0)).toSet, 0L)
+      case Some(what) =>
+        val perBucket = batch.groupBy("bucket")
+          .agg(count(lit(1)), count_distinct(col(key))).collect()
+        val nBatch = perBucket.map(_.getLong(1)).sum
+        val nKeys = perBucket.map(_.getLong(2)).sum
+        require(nBatch == nKeys,
+          s"$what has $nBatch rows over $nKeys keys — at most one row " +
+            "per key (collapse to latest upstream, e.g. by a " +
+            "sequence/timestamp column)")
+        (batch, perBucket.map(_.getString(0)).toSet, nBatch)
+    }
+  }
+
+  /** What one keyed write did — the fields [[CowStats]],
+    * [[MorUpsertStats]] and [[MorDeleteStats]] report. */
+  private final case class Written(version: Long, buckets: Long,
+    filesRead: Long, filesWritten: Long, matched: Long, batchRows: Long,
+    plan: MorPlan)
 
   /** UPSERT `updates` (absolute rows, same schema as the table, no
     * bucket column, AT MOST ONE ROW PER KEY — a batch with two rows for
@@ -3044,8 +3106,55 @@ object MergeTable {
     * committer (or a crash) exploits; MergeTableSpec interleaves a
     * competing upsert there to prove the retry protocol. */
   private[graft] def upsertWithHook(spark: SparkSession, dir: String,
-      updates: DataFrame, beforeCommit: () => Unit): CowStats =
-    retryOnConflict("upsert", dir) {
+      updates: DataFrame, beforeCommit: () => Unit): CowStats = {
+    val w = upserted(spark, dir, updates, beforeCommit, mor = false)
+    CowStats(w.version, w.buckets, w.filesRead, w.filesWritten, w.matched,
+      w.batchRows - w.matched)
+  }
+
+  /** MERGE-ON-READ upsert: matched keys' live old rows are TOMBSTONED
+    * (deletion vectors, [[deleteKeysMor]]'s machinery) and the batch
+    * lands as a small APPEND epoch in the same buckets — ZERO existing
+    * files rewritten, write cost O(batch) however large the impacted
+    * buckets (copy-on-write [[upsert]] rewrites them wholesale; this
+    * is the Delta DV-merge write path). The read side merges epochs
+    * per bucket (mergeSchema) and anti-joins the tombstones; OPTIMIZE
+    * compacts the accumulated small files and purges the tombstones.
+    *
+    * Bucket fingerprints stay EXACT by pure arithmetic: old fp MINUS
+    * the tombstoned rows' hash sums PLUS the appended epoch's read-back
+    * fp — every term a component-wise sum, so [[fsckDeep]] re-attests
+    * and the changefeed sees precisely the changed buckets. Same
+    * validation surface as [[upsert]]: one row per key, extend-only
+    * schema, CHECK constraints, reserved names. An empty batch commits
+    * nothing (a copy-on-write upsert commits an unchanged version).
+    *
+    * The trade: each MOR upsert still READS the impacted buckets (row
+    * identities of the matched keys), and reads accumulate one small
+    * file per touched bucket per commit until OPTIMIZE — the classic
+    * MOR read tax. Use for small/latency-sensitive batches; COW for
+    * bulk rewrites. */
+  def upsertMor(spark: SparkSession, dir: String,
+      updates: DataFrame): MorUpsertStats =
+    upsertMorWithHook(spark, dir, updates, () => ())
+
+  /** [[upsertMor]] with the [[upsertWithHook]] injection point. */
+  private[graft] def upsertMorWithHook(spark: SparkSession, dir: String,
+      updates: DataFrame, beforeCommit: () => Unit): MorUpsertStats = {
+    val w = upserted(spark, dir, updates, beforeCommit, mor = true)
+    MorUpsertStats(w.version, w.buckets, w.filesWritten, w.matched,
+      w.batchRows - w.matched, w.plan.newDvs.size.toLong)
+  }
+
+  /** The one body of [[upsert]] and [[upsertMor]]: copy-on-write
+    * rewrites the impacted buckets from their live rows minus the
+    * batch keys plus the batch; merge-on-read tombstones the matched
+    * rows and appends the batch. */
+  private def upserted(spark: SparkSession, dir: String,
+      updates: DataFrame, beforeCommit: () => Unit,
+      mor: Boolean): Written = {
+    val op = if (mor) "upsertMor" else "upsert"
+    retryOnConflict(op, dir) {
       // "v" is the physical version-epoch partition column: a batch
       // column with that name would be dropped by every later read
       // (extend-only evolution would otherwise admit it silently).
@@ -3059,48 +3168,31 @@ object MergeTable {
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
       // the batch arrives in LOGICAL names; the files speak physical
-      val batch = applyWidesCast(toPhysical(updates, man.cols),
-          widesOf(man.props))
-        .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-        .localCheckpoint(true)
-      // ONE aggregate job serves both driver needs: the impacted-bucket
-      // set (O(buckets) driver rows, the documented cost class) and the
-      // AT-MOST-ONE-ROW-PER-KEY gate — per-bucket distinct key counts
-      // SUM to the global distinct because the md5 buckets partition
-      // the keyspace. The gate is the documented contract: a CDC batch
-      // carrying two changes to one key has no defined latest here —
-      // both rows would survive the union as silent duplicate keys.
-      // Collapse upstream (MergeStream's latestBy does it by a
-      // sequence column); this turns the silent corruption into a loud
-      // error for the price already paid to find the buckets.
-      val perBucket = batch.groupBy("bucket")
-        .agg(count(lit(1)), count_distinct(col(key))).collect()
-      val impacted = perBucket.map(_.getString(0)).toSet
-      val nBatch = perBucket.map(_.getLong(1)).sum
-      val nKeys = perBucket.map(_.getLong(2)).sum
-      require(nBatch == nKeys,
-        s"upsert batch has $nBatch rows over $nKeys keys — at most one " +
-          "row per key (collapse to latest upstream, e.g. by a " +
-          "sequence/timestamp column)")
-      val (rewritten, kept) = man.entries.partition(e =>
+      val (batch, impacted, nBatch) = bucketed(
+        applyWidesCast(toPhysical(updates, man.cols), widesOf(man.props)),
+        key, man.hexDigits, Some(s"$op batch"))
+      if (mor && nBatch == 0L)
+        return Written(cur, 0L, 0L, 0L, 0L, 0L, NoTombstones)
+      val rewritten = man.entries.filter(e =>
         impacted.contains(bucketOfEntry(e)))
       // all-inserts-into-new-buckets: nothing existing to merge; the
       // batch's own shape stands in for the (empty) existing side
       val existing =
         if (rewritten.isEmpty) batch.limit(0)
+        else if (mor) scanEntriesRaw(spark, dir, rewritten, man.eschs,
+          widesOf(man.props))
         else readEntries(spark, dir, man, rewritten)
       // rowsMatched is DERIVED, not counted (guide §1.2 — fewer
       // passes): the manifest's per-bucket fingerprints carry exact
       // LIVE row counts (tombstone deletes decrement them), so
       //   matched = existingLive + |batch| - |merged epoch rows|
       // with |merged epoch rows| read off the commit's own read-back
-      // fingerprints. That removes a full semi-join pass over the
-      // impacted buckets per upsert. A legacy bucket carrying no
-      // fingerprint falls back to the counted path.
+      // fingerprints. A legacy bucket carrying no fingerprint falls
+      // back to the counted path. Merge-on-read counts its tombstones.
       val rewrittenBuckets = rewritten.map(bucketOfEntry).distinct
       val attested = rewrittenBuckets.forall(man.fps.contains)
       val matchedCounted =
-        if (attested) -1L
+        if (mor || attested) -1L
         else existing.join(batch.select(key), Seq(key), "left_semi")
           .count()
       // SCHEMA EVOLUTION, extend-only: the batch may ADD columns (old
@@ -3115,37 +3207,37 @@ object MergeTable {
       // carry them — existing rows keep their bytes, batch rows read
       // null, and old snapshots still see the data
       val droppedPhys = man.cols.filter(_._2.isEmpty).keySet
-      val dropped = existing.columns.toSet -- batch.columns.toSet --
+      val missing = existing.columns.toSet -- batch.columns.toSet --
         droppedPhys
-      require(dropped.isEmpty,
-        s"upsert batch is missing table columns: ${dropped.mkString(",")}" +
+      require(missing.isEmpty,
+        s"$op batch is missing table columns: ${missing.mkString(",")}" +
           " (schema changes are extend-only)")
-      // no materialization pass here (r18): both consumers — the
-      // constraint aggregate (only when constraints exist) and the
-      // epoch write — recompute the join from the deterministic
-      // parquet scan + the already-checkpointed batch; the former
-      // localCheckpoint(true) paid a full extra pass over the merged
-      // rows on every upsert
-      val merged = existing
-        .join(batch.select(key), Seq(key), "left_anti")
-        .unionByName(batch, allowMissingColumns = true)
-      enforceConstraints(spark, dir, applyLogicalView(merged, man.cols),
-        "upsert")
-      val next = cur + 1
-      val ec = commitEpoch(spark, dir, next, merged, kept,
-        man.hexDigits, beforeCommit, keptFps = man.fps -- impacted,
-        tokens = man.tokens,
-        keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
-        cols = man.cols, keptDvs = man.dvs, keptDvf = man.dvf,
-        props = man.props, keptBls = man.bls, keptEschs = man.eschs)
+      // both consumers of the merged rows — the constraint aggregate
+      // (only when constraints exist) and the epoch write — recompute
+      // the join from the deterministic parquet scan and the
+      // checkpointed batch
+      val rows =
+        if (mor) batch
+        else existing.join(batch.select(key), Seq(key), "left_anti")
+          .unionByName(batch, allowMissingColumns = true)
+      enforceConstraints(spark, dir, applyLogicalView(rows, man.cols), op)
+      val plan =
+        if (!mor) NoTombstones
+        else morTombstonePlan(spark, dir, cur, man, rewritten,
+          _.join(batch.select(key), Seq(key), "left_semi"))
+      val ec = commitEpoch(spark, dir, cur, man, Some(EpochRows(rows)),
+        replaces = if (mor) Set.empty else impacted,
+        mor = Option.when(mor)(plan), beforeCommit = beforeCommit)
       val matched =
-        if (attested)
+        if (mor) plan.nTomb
+        else if (attested)
           rewrittenBuckets.map(b => fpRows(Map(b -> man.fps(b)))).sum +
             nBatch - ec.freshRows
         else matchedCounted
-      CowStats(ec.version, impacted.size.toLong, rewritten.size.toLong,
-        ec.fresh.size.toLong, matched, nBatch - matched)
+      Written(ec.version, impacted.size.toLong, rewritten.size.toLong,
+        ec.fresh.size.toLong, matched, nBatch, plan)
     }
+  }
 
   /** HARD-DELETE rows by key — the write-path complement of the index
     * family's tombstone forget: same impacted-bucket copy-on-write
@@ -3155,48 +3247,10 @@ object MergeTable {
     * complete only once retention passes, and q143 prices exactly
     * that. */
   def deleteKeys(spark: SparkSession, dir: String,
-      keys: DataFrame): CowStats = retryOnConflict("deleteKeys", dir) {
-    val key = keyMeta(spark, dir, None)
-    val cur = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir"))
-    val man = readManifestFull(spark, dir, cur)
-    val ks = keys.select(col(keys.columns.head).as(key))
-      .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-      .localCheckpoint(true)
-    val impacted = ks.select("bucket").distinct()
-      .collect().map(_.getString(0)).toSet
-    val (rewritten, kept) = man.entries.partition(e =>
-      impacted.contains(bucketOfEntry(e)))
-    // deleting keys that hash only to never-written buckets: nothing
-    // to scan, nothing to rewrite (the empty side's schema is
-    // irrelevant — zero rows write zero files)
-    val existing =
-      if (rewritten.isEmpty) ks.limit(0)
-      else readEntries(spark, dir, man, rewritten)
-    // rowsMatched derived from fingerprint row counts (the upsert
-    // discipline): matched = existingLive - |survivor epoch rows|;
-    // and no materialization pass on the survivors — the epoch write
-    // is their only consumer (r18, guide §1.2)
-    val rewrittenBuckets = rewritten.map(bucketOfEntry).distinct
-    val attested = rewrittenBuckets.forall(man.fps.contains)
-    val matchedCounted =
-      if (attested) -1L
-      else existing.join(ks.select(key), Seq(key), "left_semi").count()
-    val survivors = existing.join(ks.select(key), Seq(key), "left_anti")
-    val next = cur + 1
-    val ec = commitEpoch(spark, dir, next, survivors, kept,
-      man.hexDigits, () => (), keptFps = man.fps -- impacted,
-      tokens = man.tokens,
-      keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
-      cols = man.cols, keptDvs = man.dvs, keptDvf = man.dvf,
-      props = man.props, keptBls = man.bls, keptEschs = man.eschs)
-    val matched =
-      if (attested)
-        rewrittenBuckets.map(b => fpRows(Map(b -> man.fps(b)))).sum -
-          ec.freshRows
-      else matchedCounted
-    CowStats(ec.version, impacted.size.toLong, rewritten.size.toLong,
-      ec.fresh.size.toLong, matched, 0L)
+      keys: DataFrame): CowStats = {
+    val w = deleted(spark, dir, keys, () => (), mor = false)
+    CowStats(w.version, w.buckets, w.filesRead, w.filesWritten, w.matched,
+      0L)
   }
 
   final case class MorDeleteStats(version: Long, rowsDeleted: Long,
@@ -3233,20 +3287,63 @@ object MergeTable {
     * scan, so replays decrement nothing. */
   def deleteKeysMor(spark: SparkSession, dir: String,
       keys: DataFrame): MorDeleteStats =
-    retryOnConflict("deleteKeysMor", dir) {
+    deleteKeysMorWithHook(spark, dir, keys, () => ())
+
+  /** [[deleteKeysMor]] with the [[upsertWithHook]] injection point. */
+  private[graft] def deleteKeysMorWithHook(spark: SparkSession,
+      dir: String, keys: DataFrame,
+      beforeCommit: () => Unit): MorDeleteStats = {
+    val w = deleted(spark, dir, keys, beforeCommit, mor = true)
+    w.plan.deleteStats(w.version)
+  }
+
+  /** The one body of [[deleteKeys]] and [[deleteKeysMor]]:
+    * copy-on-write rewrites the impacted buckets from their live rows
+    * minus the keys; merge-on-read tombstones those rows. */
+  private def deleted(spark: SparkSession, dir: String, keys: DataFrame,
+      beforeCommit: () => Unit, mor: Boolean): Written =
+    retryOnConflict(if (mor) "deleteKeysMor" else "deleteKeys", dir) {
       val key = keyMeta(spark, dir, None)
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      val ks = keys.select(col(keys.columns.head).as(key))
-        .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-        .localCheckpoint(true)
-      val impacted = ks.select("bucket").distinct()
-        .collect().map(_.getString(0)).toSet
-      val candidates = man.entries.filter(e =>
+      val (ks, impacted, _) = bucketed(
+        keys.select(col(keys.columns.head).as(key)), key, man.hexDigits,
+        None)
+      val rewritten = man.entries.filter(e =>
         impacted.contains(bucketOfEntry(e)))
-      morTombstone(spark, dir, cur, man, candidates,
-        live => live.join(ks.select(key), Seq(key), "left_semi"))
+      if (mor) {
+        val plan = morTombstonePlan(spark, dir, cur, man, rewritten,
+          _.join(ks.select(key), Seq(key), "left_semi"))
+        Written(commitTombstones(spark, dir, cur, man, plan, beforeCommit),
+          0L, 0L, 0L, plan.nTomb, 0L, plan)
+      } else {
+        // deleting keys that hash only to never-written buckets:
+        // nothing to scan, nothing to rewrite (the empty side's schema
+        // is irrelevant — zero rows write zero files)
+        val existing =
+          if (rewritten.isEmpty) ks.limit(0)
+          else readEntries(spark, dir, man, rewritten)
+        // rowsMatched derived from fingerprint row counts (the upsert
+        // discipline): matched = existingLive - |survivor epoch rows|
+        val rewrittenBuckets = rewritten.map(bucketOfEntry).distinct
+        val attested = rewrittenBuckets.forall(man.fps.contains)
+        val matchedCounted =
+          if (attested) -1L
+          else existing.join(ks.select(key), Seq(key), "left_semi").count()
+        val survivors =
+          existing.join(ks.select(key), Seq(key), "left_anti")
+        val ec = commitEpoch(spark, dir, cur, man,
+          Some(EpochRows(survivors)), replaces = impacted,
+          beforeCommit = beforeCommit)
+        val matched =
+          if (attested)
+            rewrittenBuckets.map(b => fpRows(Map(b -> man.fps(b)))).sum -
+              ec.freshRows
+          else matchedCounted
+        Written(ec.version, impacted.size.toLong, rewritten.size.toLong,
+          ec.fresh.size.toLong, matched, 0L, NoTombstones)
+      }
     }
 
   /** MERGE-ON-READ predicate delete — `cond` speaks the table's
@@ -3260,7 +3357,7 @@ object MergeTable {
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      morTombstone(spark, dir, cur, man, man.entries, { live =>
+      val plan = morTombstonePlan(spark, dir, cur, man, man.entries, { live =>
         // the predicate resolves against the LOGICAL view, but the
         // fingerprint decrement must hash PHYSICAL columns (names
         // drive the hash-input sort order; dropped physicals still
@@ -3275,9 +3372,9 @@ object MergeTable {
         // match ANY fraction of the table (SQL DELETE without WHERE
         // routes here as lit(true) — the natural retention-purge
         // shape), so the broadcast is GATED like every sibling
-        // tombstone side (readEntries, morTombstonePlan, mergeMor):
-        // small sets broadcast, larger ones take the shuffle semi-join
-        // — degradation, never a driver OOM. The count is against the
+        // tombstone side (liveWithIdentity, mergeMor): small sets
+        // broadcast, larger ones take the shuffle semi-join —
+        // degradation, never a driver OOM. The count is against the
         // already-materialized checkpoint, so it prices one cached
         // aggregate, not a recompute.
         val idsJoin = if (ids.count() <= DvBroadcastMaxRows)
@@ -3285,21 +3382,35 @@ object MergeTable {
         live.join(idsJoin, Seq("__dv_file", "__dv_pos"),
           "left_semi")
       })
+      plan.deleteStats(
+        commitTombstones(spark, dir, cur, man, plan, () => ()))
     }
 
-  /** Shared MOR tombstone writer: `pick` selects the victims from the
-    * LIVE rows (existing tombstones pre-applied — a dead row must not
-    * decrement twice) of `candidates`, which carry `__dv_file` /
-    * `__dv_pos` row identities alongside the physical payload. */
   /** The computed-and-written (but UNCOMMITTED) half of a
     * merge-on-read mutation: tombstones on disk under
     * `_dvs/<dvName>`, per-file counts, and per-bucket fingerprint
     * DECREMENTS rendered in the fp wire shape ("dn:dh1:dh2") for
-    * [[fpCombine]]. The caller owns the manifest commit — and must
-    * delete `_dvs/<dvName>` on a lost race. */
+    * [[fpCombine]]. [[commitEpoch]] commits it, and deletes
+    * `_dvs/<dvName>` on a lost race. */
   private final case class MorPlan(nTomb: Long,
-    perFile: Map[String, Long], fpDelta: Map[String, String],
-    newDvs: Seq[String], dvName: String)
+      perFile: Map[String, Long], fpDelta: Map[String, String],
+      newDvs: Seq[String], dvName: String) {
+    def deleteStats(version: Long): MorDeleteStats =
+      MorDeleteStats(version, nTomb, perFile.size.toLong,
+        fpDelta.size.toLong, newDvs.size.toLong)
+  }
+
+  /** A merge-on-read write that tombstones nothing. */
+  private val NoTombstones = MorPlan(0L, Map.empty, Map.empty, Nil, "")
+
+  /** Commits a tombstone-only version (no epoch) and returns it; a plan
+    * that tombstones nothing commits nothing and returns `cur`. */
+  private def commitTombstones(spark: SparkSession, dir: String,
+      cur: Long, man: ManifestData, plan: MorPlan,
+      beforeCommit: () => Unit): Long =
+    if (plan.nTomb == 0L) cur
+    else commitEpoch(spark, dir, cur, man, mor = Some(plan),
+      beforeCommit = beforeCommit).version
 
   /** Component-wise fp arithmetic over the `rows:h1[:h2]` wire shape:
     * the hash channels are SUMS, so content deltas add and subtract
@@ -3312,30 +3423,19 @@ object MergeTable {
       .mkString(":")
   }
 
+  /** Plans a MOR mutation: `pick` selects the victims from the LIVE
+    * rows (existing tombstones pre-applied — a dead row must not
+    * decrement twice) of `candidates`, which carry `__dv_file` /
+    * `__dv_pos` row identities alongside the physical payload; their
+    * tombstones are written, not committed. */
   private def morTombstonePlan(spark: SparkSession, dir: String,
       cur: Long, man: ManifestData, candidates: Seq[String],
-      pick: DataFrame => DataFrame): Option[MorPlan] = {
-    if (candidates.isEmpty) return None
-    val scanned = scanEntriesRaw(spark, dir, candidates, man.eschs,
-        widesOf(man.props))
-      .withColumn("__dv_file", regexp_extract(
-        col("_metadata.file_path"),
-        "([^/]+/bucket=[0-9a-f]+/[^/]+)$", 1))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    val dirty = candidates.filter(man.dvf.contains)
-    val live =
-      if (dirty.isEmpty) scanned
-      else {
-        val tomb0 = dvTombstones(spark, dir, man, dirty)
-        val tomb = if (dirty.map(man.dvf).sum <= DvBroadcastMaxRows)
-          broadcast(tomb0) else tomb0
-        scanned.join(tomb,
-          scanned("__dv_file") === tomb("file") &&
-            scanned("__dv_pos") === tomb("pos"), "left_anti")
-      }
+      pick: DataFrame => DataFrame): MorPlan = {
+    if (candidates.isEmpty) return NoTombstones
     // victims materialize ONCE (O(deleted rows)) and serve both the
     // decrement aggregate and the tombstone write
-    val hits = pick(live).localCheckpoint(true)
+    val hits = pick(liveWithIdentity(spark, dir, man, candidates))
+      .localCheckpoint(true)
     val payload = hits.columns
       .filterNot(c => c == "bucket" || c == "__dv_file" ||
         c == "__dv_pos").sorted.toSeq
@@ -3345,7 +3445,7 @@ object MergeTable {
       .agg(count(lit(1)).as("n"), sum("fp_h").as("h"),
         sum("fp_h2").as("h2"))
       .collect()
-    if (agg.isEmpty) return None
+    if (agg.isEmpty) return NoTombstones
     val unattested = agg.map(_.getString(0)).distinct
       .filterNot(man.fps.contains)
     require(unattested.isEmpty,
@@ -3374,152 +3474,12 @@ object MergeTable {
     val newDvs = fs.listStatus(new Path(s"$dir/_dvs/$dvName"))
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
       .map(st => s"_dvs/$dvName/${st.getPath.getName}").toSeq.sorted
-    Some(MorPlan(nTomb, perFile, fpDelta, newDvs, dvName))
+    MorPlan(nTomb, perFile, fpDelta, newDvs, dvName)
   }
-
-  /** Commit half of the MOR delete verbs: decremented fingerprints,
-    * merged dvf counts, same entries. */
-  private def morTombstone(spark: SparkSession, dir: String, cur: Long,
-      man: ManifestData, candidates: Seq[String],
-      pick: DataFrame => DataFrame): MorDeleteStats =
-    morTombstonePlan(spark, dir, cur, man, candidates, pick) match {
-      case None => MorDeleteStats(cur, 0L, 0L, 0L, 0L)
-      case Some(p) =>
-        val newFps = man.fps ++ p.fpDelta.map { case (b, d) =>
-          b -> fpCombine(man.fps(b), d, -1)
-        }
-        val newDvf = man.dvf ++ p.perFile.map { case (f, n) =>
-          f -> (man.dvf.getOrElse(f, 0L) + n)
-        }
-        try {
-          commitManifest(spark, dir, cur + 1, man.entries,
-            man.hexDigits, newFps, tokens = man.tokens, sts = man.sts,
-            cols = man.cols, dvs = man.dvs ++ p.newDvs, dvf = newDvf,
-            props = man.props, bls = man.bls, eschs = man.eschs)
-          MorDeleteStats(cur + 1, p.nTomb, p.perFile.size.toLong,
-            p.fpDelta.size.toLong, p.newDvs.size.toLong)
-        } catch {
-          case e: CommitConflictException =>
-            hadoopFs(spark, dir)
-              .delete(new Path(s"$dir/_dvs/${p.dvName}"), true)
-            throw e
-        }
-    }
 
   final case class MorUpsertStats(version: Long, bucketsTouched: Long,
     filesAppended: Long, rowsMatched: Long, rowsInserted: Long,
     dvFilesAdded: Long)
-
-  /** MERGE-ON-READ upsert: matched keys' live old rows are TOMBSTONED
-    * (deletion vectors, [[deleteKeysMor]]'s machinery) and the batch
-    * lands as a small APPEND epoch in the same buckets — ZERO existing
-    * files rewritten, write cost O(batch) however large the impacted
-    * buckets (copy-on-write [[upsert]] rewrites them wholesale; this
-    * is the Delta DV-merge write path). The read side merges epochs
-    * per bucket (mergeSchema) and anti-joins the tombstones; OPTIMIZE
-    * compacts the accumulated small files and purges the tombstones.
-    *
-    * Bucket fingerprints stay EXACT by pure arithmetic: old fp MINUS
-    * the tombstoned rows' hash sums PLUS the appended epoch's read-back
-    * fp — every term a component-wise sum, so [[fsckDeep]] re-attests
-    * and the changefeed sees precisely the changed buckets. Same
-    * validation surface as [[upsert]]: one row per key, extend-only
-    * schema, CHECK constraints, reserved names.
-    *
-    * The trade: each MOR upsert still READS the impacted buckets (row
-    * identities of the matched keys), and reads accumulate one small
-    * file per touched bucket per commit until OPTIMIZE — the classic
-    * MOR read tax. Use for small/latency-sensitive batches; COW for
-    * bulk rewrites. */
-  def upsertMor(spark: SparkSession, dir: String,
-      updates: DataFrame): MorUpsertStats =
-    retryOnConflict("upsertMor", dir) {
-      require(!updates.columns.contains("v"),
-        "column name v is reserved for the table layout (version " +
-          "epoch) — rename before upsert")
-      val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
-      val batch = applyWidesCast(toPhysical(updates, man.cols),
-          widesOf(man.props))
-        .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-        .localCheckpoint(true)
-      val perBucket = batch.groupBy("bucket")
-        .agg(count(lit(1)), count_distinct(col(key))).collect()
-      val impacted = perBucket.map(_.getString(0)).toSet
-      val nBatch = perBucket.map(_.getLong(1)).sum
-      val nKeys = perBucket.map(_.getLong(2)).sum
-      require(nBatch == nKeys,
-        s"upsertMor batch has $nBatch rows over $nKeys keys — at most " +
-          "one row per key (collapse to latest upstream)")
-      if (nBatch == 0L)
-        return MorUpsertStats(cur, 0L, 0L, 0L, 0L, 0L)
-      val candidates = man.entries.filter(e =>
-        impacted.contains(bucketOfEntry(e)))
-      // extend-only evolution gate — the upsert contract verbatim
-      val existingCols =
-        if (candidates.isEmpty) batch.columns.toSet
-        else scanEntriesRaw(spark, dir, candidates, man.eschs,
-          widesOf(man.props)).columns.toSet
-      val droppedPhys = man.cols.filter(_._2.isEmpty).keySet
-      val missing = existingCols -- batch.columns.toSet --
-        droppedPhys - "bucket"
-      require(missing.isEmpty,
-        s"upsertMor batch is missing table columns: " +
-          s"${missing.mkString(",")} (schema changes are extend-only)")
-      enforceConstraints(spark, dir,
-        applyLogicalView(batch, man.cols), "upsertMor")
-      val plan = morTombstonePlan(spark, dir, cur, man, candidates,
-        live => live.join(batch.select(key), Seq(key), "left_semi"))
-      val matched = plan.map(_.nTomb).getOrElse(0L)
-      val next = cur + 1
-      val epochName = s"v=$next-${attemptTag()}"
-      writeEpoch(batch, dir, epochName, man.hexDigits)
-      val fresh = epochEntries(spark, dir, epochName)
-      val (freshFps, freshSts, freshSchema, freshBls) =
-        if (fresh.isEmpty)
-          (Map.empty[String, String], Map.empty[String, String], "",
-            Map.empty[String, String])
-        else epochAnnotations(spark, dir, epochName, widesOf(man.props),
-          man.props)
-      val delta = plan.map(_.fpDelta).getOrElse(Map.empty)
-      // old MINUS tombstoned PLUS appended, per bucket — each term a
-      // component sum, so the result is the bucket's exact content fp
-      val newFps = (man.fps.keySet ++ freshFps.keySet).map { b =>
-        val afterDel = man.fps.get(b).map(fp =>
-          delta.get(b).map(fpCombine(fp, _, -1)).getOrElse(fp))
-        val combined = (afterDel, freshFps.get(b)) match {
-          case (Some(a), Some(f)) => fpCombine(a, f, 1)
-          case (Some(a), None) => a
-          case (None, Some(f)) => f
-          case (None, None) => sys.error("unreachable")
-        }
-        b -> combined
-      }.toMap
-      val newDvf = man.dvf ++ plan.map(_.perFile.map { case (f, n) =>
-        f -> (man.dvf.getOrElse(f, 0L) + n)
-      }).getOrElse(Map.empty)
-      try {
-        commitManifest(spark, dir, next, man.entries ++ fresh,
-          man.hexDigits, newFps, tokens = man.tokens,
-          sts = man.sts ++ freshSts, cols = man.cols,
-          dvs = man.dvs ++ plan.map(_.newDvs).getOrElse(Nil),
-          dvf = newDvf, props = man.props, bls = man.bls ++ freshBls,
-          eschs = man.eschs ++ (if (fresh.isEmpty) Map.empty
-            else Map(epochName -> freshSchema)))
-        MorUpsertStats(next, impacted.size.toLong, fresh.size.toLong,
-          matched, nBatch - matched,
-          plan.map(_.newDvs.size.toLong).getOrElse(0L))
-      } catch {
-        case e: CommitConflictException =>
-          val fs = hadoopFs(spark, dir)
-          fs.delete(new Path(s"$dir/data/$epochName"), true)
-          plan.foreach(p =>
-            fs.delete(new Path(s"$dir/_dvs/${p.dvName}"), true))
-          throw e
-      }
-    }
 
   /** Clause actions for [[merge]] — the conditional three-way MERGE
     * (SQL:2003 / Delta-Iceberg `MERGE INTO`) re-expressed over the COW
@@ -3644,24 +3604,15 @@ object MergeTable {
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      val batch = source.drop("bucket")
-        .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-        .localCheckpoint(true)
       // one aggregate job: the source's bucket set AND the
       // at-most-one-row-per-key gate (the upsert discipline)
-      val perBucket = batch.groupBy("bucket")
-        .agg(count(lit(1)), count_distinct(col(key))).collect()
-      val nBatch = perBucket.map(_.getLong(1)).sum
-      val nKeys = perBucket.map(_.getLong(2)).sum
-      require(nBatch == nKeys,
-        s"merge source has $nBatch rows over $nKeys keys — at most one " +
-          "row per key (collapse to latest upstream)")
-      val impacted: Set[String] =
+      val (batch, srcBuckets, _) = bucketed(source.drop("bucket"), key,
+        man.hexDigits, Some("merge source"))
+      val impacted =
         if (notMatchedBySource.nonEmpty)
-          man.entries.map(bucketOfEntry).toSet ++
-            perBucket.map(_.getString(0))
-        else perBucket.map(_.getString(0)).toSet
-      val (rewritten, kept) = man.entries.partition(e =>
+          man.entries.map(bucketOfEntry).toSet ++ srcBuckets
+        else srcBuckets
+      val rewritten = man.entries.filter(e =>
         impacted.contains(bucketOfEntry(e)))
       // the clause algebra runs in LOGICAL space (conditions and SET
       // names are user-facing); the physical boundary is crossed once
@@ -3669,26 +3620,9 @@ object MergeTable {
       val existing0 =
         if (rewritten.isEmpty) batch.limit(0)
         else if (!mor) readEntries(spark, dir, man, rewritten)
-        else {
-          // MOR carries each target row's PARQUET IDENTITY so the
-          // clause verdicts can translate into tombstones
-          val scanned = scanEntriesRaw(spark, dir, rewritten,
-            man.eschs, widesOf(man.props))
-            .withColumn("__dv_file", regexp_extract(
-              col("_metadata.file_path"),
-              "([^/]+/bucket=[0-9a-f]+/[^/]+)$", 1))
-            .withColumn("__dv_pos", col("_metadata.row_index"))
-          val dirty = rewritten.filter(man.dvf.contains)
-          if (dirty.isEmpty) scanned
-          else {
-            val tomb0 = dvTombstones(spark, dir, man, dirty)
-            val tomb = if (dirty.map(man.dvf).sum <= DvBroadcastMaxRows)
-              broadcast(tomb0) else tomb0
-            scanned.join(tomb,
-              scanned("__dv_file") === tomb("file") &&
-                scanned("__dv_pos") === tomb("pos"), "left_anti")
-          }
-        }
+        // MOR carries each target row's PARQUET IDENTITY so the
+        // clause verdicts can translate into tombstones
+        else liveWithIdentity(spark, dir, man, rewritten)
       val existing = {
         val e0 = applyLogicalView(existing0, man.cols)
         if (mor && !e0.columns.contains("__dv_file"))
@@ -3770,100 +3704,49 @@ object MergeTable {
           when(col("__act") === cl.id, v).otherwise(acc)
         }.as(c)
       }
-      val next = cur + 1
       // the new token JOINS the carried-forward map (and a replayed id
       // never regresses a newer one — max, the monotone frontier)
-      val newTokens = idempotencyToken.map { t =>
-        val cut = t.lastIndexOf(':')
-        require(cut > 0, s"idempotency token '$t' must be <streamId>:<batchId>")
-        val sid = t.take(cut); val id = t.drop(cut + 1).toLong
-        man.tokens + (sid -> math.max(id, man.tokens.getOrElse(sid, Long.MinValue)))
-      }.getOrElse(man.tokens)
-      if (mor) {
-        // every CHANGED or DELETED target row tombstones; carries (0)
-        // stay as untouched bytes, skipped sources (-1) are ignored
-        val moveIds = updatedIds.filter(id =>
-          clauses.exists(cl => cl.id == id && cl.cls != NM)) ++ deleteIds
-        val nMove = total(moveIds)
-        val pickIds = classified
-          .filter(col("__act").isin(
-              moveIds.map(java.lang.Integer.valueOf): _*) &&
-            col("__dv_file").isNotNull)
-          .select(col("__dv_file"), col("__dv_pos"))
-          .localCheckpoint(true)
-        val plan0 = morTombstonePlan(spark, dir, cur, man, rewritten,
-          live => live.join(
-            if (nMove <= DvBroadcastMaxRows) broadcast(pickIds)
-            else pickIds,
-            Seq("__dv_file", "__dv_pos"), "left_semi"))
-        val appendIds = (updatedIds ++ insertIds)
-          .map(java.lang.Integer.valueOf)
-        val appendedL = classified
-          .filter(col("__act").isin(appendIds: _*))
-          .select(col("__gk").as(key) +: outExprs: _*)
-        enforceConstraints(spark, dir, appendedL, "merge")
-        val appended = applyWidesCast(toPhysical(appendedL, man.cols),
-            widesOf(man.props))
-          .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-        val epochName = s"v=$next-${attemptTag()}"
-        writeEpoch(appended, dir, epochName, man.hexDigits)
-        val fresh = epochEntries(spark, dir, epochName)
-        val (freshFps, freshSts, freshSchema, freshBls) =
-          if (fresh.isEmpty)
-            (Map.empty[String, String], Map.empty[String, String], "",
-              Map.empty[String, String])
-          else epochAnnotations(spark, dir, epochName,
-            widesOf(man.props), man.props)
-        val delta = plan0.map(_.fpDelta).getOrElse(Map.empty)
-        val newFps = (man.fps.keySet ++ freshFps.keySet).map { b =>
-          val afterDel = man.fps.get(b).map(fp =>
-            delta.get(b).map(fpCombine(fp, _, -1)).getOrElse(fp))
-          b -> ((afterDel, freshFps.get(b)) match {
-            case (Some(a), Some(f)) => fpCombine(a, f, 1)
-            case (Some(a), None) => a
-            case (None, Some(f)) => f
-            case (None, None) => sys.error("unreachable")
-          })
-        }.toMap
-        val newDvf = man.dvf ++ plan0.map(_.perFile.map {
-          case (f, n) => f -> (man.dvf.getOrElse(f, 0L) + n)
-        }).getOrElse(Map.empty)
-        beforeCommit()
-        try {
-          commitManifest(spark, dir, next, man.entries ++ fresh,
-            man.hexDigits, newFps, tokens = newTokens,
-            sts = man.sts ++ freshSts, cols = man.cols,
-            dvs = man.dvs ++ plan0.map(_.newDvs).getOrElse(Nil),
-            dvf = newDvf, props = man.props, bls = man.bls ++ freshBls,
-            eschs = man.eschs ++ (if (fresh.isEmpty) Map.empty
-              else Map(epochName -> freshSchema)))
-        } catch {
-          case e: CommitConflictException =>
-            val fs = hadoopFs(spark, dir)
-            fs.delete(new Path(s"$dir/data/$epochName"), true)
-            plan0.foreach(pl =>
-              fs.delete(new Path(s"$dir/_dvs/${pl.dvName}"), true))
-            throw e
+      val withToken: ManifestData => ManifestData =
+        idempotencyToken.fold(identity[ManifestData] _) { t =>
+          val cut = t.lastIndexOf(':')
+          require(cut > 0,
+            s"idempotency token '$t' must be <streamId>:<batchId>")
+          val sid = t.take(cut); val id = t.drop(cut + 1).toLong
+          m => m.copy(tokens = m.tokens +
+            (sid -> math.max(id, m.tokens.getOrElse(sid, Long.MinValue))))
         }
-        return MergeStats(next, impacted.size.toLong,
-          rewritten.size.toLong, fresh.size.toLong,
-          total(updatedIds), total(deleteIds),
-          total(insertIds), counts.getOrElse(0, 0L))
-      }
-      val doomed = (deleteIds :+ (-1)).map(java.lang.Integer.valueOf)
-      val survivorsL = classified
-        .filter(!col("__act").isin(doomed: _*))
-        .select(col("__gk").as(key) +: outExprs: _*)
-      enforceConstraints(spark, dir, survivorsL, "merge")
-      val survivors = applyWidesCast(toPhysical(survivorsL, man.cols),
+      // MOR: every CHANGED or DELETED target row tombstones; carries (0)
+      // stay as untouched bytes, skipped sources (-1) are ignored, and
+      // updated/inserted rows append. COW: the survivors rewrite the
+      // impacted buckets.
+      val (toWrite, plan) =
+        if (mor) {
+          val moveIds = updatedIds.filter(id =>
+            clauses.exists(cl => cl.id == id && cl.cls != NM)) ++ deleteIds
+          val pickIds = classified
+            .filter(col("__act").isin(
+                moveIds.map(java.lang.Integer.valueOf): _*) &&
+              col("__dv_file").isNotNull)
+            .select(col("__dv_file"), col("__dv_pos"))
+            .localCheckpoint(true)
+          val pickJoin = if (total(moveIds) <= DvBroadcastMaxRows)
+            broadcast(pickIds) else pickIds
+          (classified.filter(col("__act").isin(
+              (updatedIds ++ insertIds).map(java.lang.Integer.valueOf): _*)),
+            Some(morTombstonePlan(spark, dir, cur, man, rewritten,
+              _.join(pickJoin, Seq("__dv_file", "__dv_pos"), "left_semi"))))
+        } else {
+          val doomed = (deleteIds :+ (-1)).map(java.lang.Integer.valueOf)
+          (classified.filter(!col("__act").isin(doomed: _*)), None)
+        }
+      val outL = toWrite.select(col("__gk").as(key) +: outExprs: _*)
+      enforceConstraints(spark, dir, outL, "merge")
+      val out = applyWidesCast(toPhysical(outL, man.cols),
           widesOf(man.props))
         .withColumn("bucket", bucketCol(col(key), man.hexDigits))
-      val ec = commitEpoch(spark, dir, next, survivors, kept,
-        man.hexDigits, beforeCommit, keptFps = man.fps -- impacted,
-        tokens = newTokens,
-        keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
-        cols = man.cols, keptDvs = man.dvs, keptDvf = man.dvf,
-        props = man.props, keptBls = man.bls, keptEschs = man.eschs)
+      val ec = commitEpoch(spark, dir, cur, man, Some(EpochRows(out)),
+        replaces = if (mor) Set.empty else impacted, mor = plan,
+        change = withToken, beforeCommit = beforeCommit)
       MergeStats(ec.version, impacted.size.toLong, rewritten.size.toLong,
         ec.fresh.size.toLong, total(updatedIds), total(deleteIds),
         total(insertIds), counts.getOrElse(0, 0L))
@@ -3950,64 +3833,70 @@ object MergeTable {
   def optimize(spark: SparkSession, dir: String, sortCol: String,
       maxRecordsPerFile: Option[Long] = None,
       buckets: Option[Seq[String]] = None): CowStats =
-    retryOnConflict("optimize", dir) {
-    val key = keyMeta(spark, dir, None)
-    val cur = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir"))
-    val man = readManifestFull(spark, dir, cur)
-    val next = cur + 1
-    val scope = normalizeScope(buckets, man.hexDigits)
-    val (doomed, kept) = scope match {
-      case None => (man.entries, Seq.empty[String])
-      case Some(bs) =>
-        man.entries.partition(e => bs.contains(bucketOfEntry(e)))
-    }
-    if (doomed.isEmpty) CowStats(cur, 0L, 0L, 0L, 0L, 0L)
-    else {
-    // PHYSICAL read: a rewrite must preserve the files' own column
-    // names or the (name-sorted) content fingerprints would shift and
-    // the layout-only commit would stop being CDC-free. A scoped
-    // rewrite lists ONLY the doomed buckets' files (O(scope), the
-    // impacted-bucket read path) — never a table scan.
-    // no localCheckpoint (r18): the epoch write is the ONLY consumer
-    // of this deterministic snapshot scan — the former eager
-    // checkpoint paid a full extra pass over every rewritten row on
-    // every optimize (q170 runs three of them)
-    val all = if (kept.isEmpty) readPhysical(spark, dir, Some(cur))
-      else readEntries(spark, dir, man, doomed)
-    val physSort = man.cols.collectFirst {
-      case (p, l) if l == sortCol => p }.getOrElse(sortCol)
-    // STRIPING (maxRecordsPerFile) needs a TOTAL order so stripe
-    // boundaries are deterministic and oracle-restatable — the key
-    // tiebreak makes (sortCol, key) total, the optimizeZOrder
-    // discipline applied to single-column clustering. Without
-    // striping the sort stays single-column (existing layouts
-    // byte-stable).
-    val sortCols =
-      if (maxRecordsPerFile.isDefined) Seq(physSort, key)
-      else Seq(physSort)
-    val doomedBuckets = doomed.map(bucketOfEntry).toSet
-    // a FULL-table optimize DECLARES the table's layout as versioned
-    // properties so maintenance that rewrites buckets later
-    // ([[compactDvs]]) can reconstruct it instead of silently
-    // unsorting them; a scoped run changes only part of the table and
-    // leaves the declaration alone
-    val layoutProps =
-      if (buckets.isDefined) man.props
-      else (man.props - "graft.layout.zorder" - "graft.layout.stripe") ++
+    relayout(spark, dir, "optimize", buckets,
         Map("graft.layout.sort" -> sortCol) ++
-        maxRecordsPerFile.map(n => "graft.layout.stripe" -> n.toString)
-    val ec = commitEpoch(spark, dir, next, all, kept,
-      man.hexDigits, () => (), sortCols = sortCols,
-      keptFps = man.fps -- doomedBuckets, tokens = man.tokens,
-      keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
-      maxRecordsPerFile = maxRecordsPerFile, cols = man.cols,
-      keptDvs = man.dvs, keptDvf = man.dvf, props = layoutProps,
-      keptBls = man.bls, keptEschs = man.eschs)
-    CowStats(ec.version, doomedBuckets.size.toLong, doomed.size.toLong,
-      ec.fresh.size.toLong, 0L, 0L)
+          maxRecordsPerFile.map("graft.layout.stripe" -> _.toString)) {
+      (man, key, rows) =>
+        // STRIPING (maxRecordsPerFile) needs a TOTAL order so stripe
+        // boundaries are deterministic and oracle-restatable — the key
+        // tiebreak makes (sortCol, key) total, the optimizeZOrder
+        // discipline applied to single-column clustering. Without
+        // striping the sort stays single-column (existing layouts
+        // byte-stable). The epoch write is the only consumer of the
+        // deterministic snapshot scan, so it is not materialised.
+        EpochRows(rows,
+          sortCols = Seq(physOf(man, sortCol)) ++
+            maxRecordsPerFile.map(_ => key),
+          maxRecordsPerFile = maxRecordsPerFile)
     }
-  }
+
+  /** The physical column a logical name occupies in `man`. */
+  private def physOf(man: ManifestData, logical: String): String =
+    man.cols.collectFirst { case (p, l) if l == logical => p }
+      .getOrElse(logical)
+
+  /** Table properties a full-table OPTIMIZE declares its layout in. */
+  private val LayoutProps =
+    Seq("graft.layout.sort", "graft.layout.zorder", "graft.layout.stripe")
+
+  /** The one body of the OPTIMIZE verbs: rewrites the buckets in scope
+    * (all when `buckets` is None) from their live PHYSICAL rows — a
+    * rewrite must preserve the files' own column names or the
+    * (name-sorted) content fingerprints would shift and the
+    * layout-only commit would stop being CDC-free — in the layout
+    * `shape` gives them. A scoped rewrite lists ONLY the doomed
+    * buckets' files (O(scope), the impacted-bucket read path) — never
+    * a table scan. A FULL-table run also DECLARES `layout` as versioned
+    * properties so maintenance that rewrites buckets later
+    * ([[compactDvs]]) can reconstruct it instead of silently unsorting
+    * them; a scoped run changes only part of the table and leaves the
+    * declaration alone. */
+  private def relayout(spark: SparkSession, dir: String, op: String,
+      buckets: Option[Seq[String]], layout: Map[String, String])(
+      shape: (ManifestData, String, DataFrame) => EpochRows): CowStats =
+    retryOnConflict(op, dir) {
+      val key = keyMeta(spark, dir, None)
+      val cur = versions(spark, dir).lastOption.getOrElse(
+        throw new IllegalArgumentException(s"no MergeTable at $dir"))
+      val man = readManifestFull(spark, dir, cur)
+      val scope = normalizeScope(buckets, man.hexDigits)
+      val doomed = scope.fold(man.entries)(bs =>
+        man.entries.filter(e => bs.contains(bucketOfEntry(e))))
+      if (doomed.isEmpty) CowStats(cur, 0L, 0L, 0L, 0L, 0L)
+      else {
+        val all = if (doomed.size == man.entries.size)
+            readPhysical(spark, dir, Some(cur))
+          else readEntries(spark, dir, man, doomed)
+        val doomedBuckets = doomed.map(bucketOfEntry).toSet
+        val ec = commitEpoch(spark, dir, cur, man,
+          Some(shape(man, key, all)), replaces = doomedBuckets,
+          change = m =>
+            if (buckets.isDefined) m
+            else m.copy(props = m.props -- LayoutProps ++ layout))
+        CowStats(ec.version, doomedBuckets.size.toLong,
+          doomed.size.toLong, ec.fresh.size.toLong, 0L, 0L)
+      }
+    }
 
   /** OPTIMIZE with MULTI-DIMENSIONAL clustering: rewrite every bucket
     * with rows sorted by the Z-ORDER curve of (`xCol`, `yCol`)
@@ -4059,45 +3948,15 @@ object MergeTable {
       zCols: Seq[String], blockBytes: Option[Long] = None,
       maxRecordsPerFile: Option[Long] = None,
       buckets: Option[Seq[String]] = None): CowStats =
-    retryOnConflict("optimizeZOrder", dir) {
-      val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
-      val next = cur + 1
-      val scope = normalizeScope(buckets, man.hexDigits)
-      val (doomed, kept) = scope match {
-        case None => (man.entries, Seq.empty[String])
-        case Some(bs) =>
-          man.entries.partition(e => bs.contains(bucketOfEntry(e)))
-      }
-      if (doomed.isEmpty) CowStats(cur, 0L, 0L, 0L, 0L, 0L)
-      else {
-      def phys(c: String): String = man.cols.collectFirst {
-        case (p, l) if l == c => p }.getOrElse(c)
-      val all = Layout.withZValN(
-        if (kept.isEmpty) readPhysical(spark, dir, Some(cur))
-        else readEntries(spark, dir, man, doomed), zCols.map(phys))
-        .localCheckpoint(true)
-      val doomedBuckets = doomed.map(bucketOfEntry).toSet
-      // the layout declaration, z-order dialect (see [[optimize]])
-      val layoutProps =
-        if (buckets.isDefined) man.props
-        else (man.props - "graft.layout.sort" - "graft.layout.stripe") ++
-          Map("graft.layout.zorder" -> zCols.mkString(",")) ++
-          maxRecordsPerFile.map(n => "graft.layout.stripe" -> n.toString)
-      val ec = commitEpoch(spark, dir, next, all, kept,
-        man.hexDigits, () => (), blockBytes,
-        sortCols = Seq("zval", key),
-        dropAfterSort = Seq("zval"),
-        keptFps = man.fps -- doomedBuckets, tokens = man.tokens,
-        keptSts = man.sts.view.filterKeys(kept.toSet).toMap,
-        maxRecordsPerFile = maxRecordsPerFile, cols = man.cols,
-        keptDvs = man.dvs, keptDvf = man.dvf, props = layoutProps,
-        keptBls = man.bls, keptEschs = man.eschs)
-      CowStats(ec.version, doomedBuckets.size.toLong,
-        doomed.size.toLong, ec.fresh.size.toLong, 0L, 0L)
-      }
+    relayout(spark, dir, "optimizeZOrder", buckets,
+        Map("graft.layout.zorder" -> zCols.mkString(",")) ++
+          maxRecordsPerFile.map("graft.layout.stripe" -> _.toString)) {
+      (man, key, rows) =>
+        EpochRows(
+          Layout.withZValN(rows, zCols.map(physOf(man, _)))
+            .localCheckpoint(true),
+          sortCols = Seq("zval", key), dropAfterSort = Seq("zval"),
+          blockBytes = blockBytes, maxRecordsPerFile = maxRecordsPerFile)
     }
 
   /** REBUCKET — the full-rewrite migration to a new bucket width the
@@ -4122,12 +3981,14 @@ object MergeTable {
       val cur = versions(spark, dir).lastOption.getOrElse(
         throw new IllegalArgumentException(s"no MergeTable at $dir"))
       val man = readManifestFull(spark, dir, cur)
-      val next = cur + 1
       val rehashed = readPhysical(spark, dir, Some(cur)).drop("bucket")
         .withColumn("bucket", bucketCol(col(key), newHexDigits))
-      val ec = commitEpoch(spark, dir, next, rehashed, Seq.empty,
-        newHexDigits, () => (), tokens = man.tokens, cols = man.cols,
-        props = man.props)  // bls rebuild with the rewrite (all fresh)
+      // every old bucket is replaced, and the rewrite materialises every
+      // tombstone
+      val ec = commitEpoch(spark, dir, cur, man, Some(EpochRows(rehashed)),
+        replaces = man.fps.keySet ++ man.entries.map(bucketOfEntry),
+        change = _.copy(hexDigits = newHexDigits, dvs = Nil,
+          dvf = Map.empty))
       CowStats(ec.version, ec.fresh.size.toLong,
         man.entries.size.toLong, ec.fresh.size.toLong, 0L, 0L)
     }
@@ -4168,9 +4029,11 @@ object MergeTable {
     * loudly (epoch deleted, nothing committed) on any mismatch rather
     * than laundering a corrupted bucket into a fresh attestation.
     * Matching fps make the commit provably CDC-FREE: a changefeed
-    * window straddling it prunes every compacted bucket unread. A
-    * bucket whose every row was tombstoned attests as the all-zero
-    * fingerprint, writes no file, and drops out of the manifest.
+    * window straddling it prunes every compacted bucket unread. An
+    * attested bucket keeps the manifest's fingerprint (a legacy
+    * two-component one stays two-component). A bucket whose every row
+    * was tombstoned attests as the all-zero fingerprint, writes no
+    * file, and drops out of the manifest.
     * A legacy UNATTESTED bucket (no `#fp=` line — the state
     * [[fsckDeep]] reports as unattested, not corrupt) has nothing to
     * re-attest: it is rewritten and its read-back fingerprint is
@@ -4183,6 +4046,12 @@ object MergeTable {
   def compactDvs(spark: SparkSession, dir: String,
       maxFilesPerBucket: Int = 1,
       buckets: Option[Seq[String]] = None): DvCompactStats =
+    compactDvsWithHook(spark, dir, maxFilesPerBucket, buckets, () => ())
+
+  /** [[compactDvs]] with the [[upsertWithHook]] injection point. */
+  private[graft] def compactDvsWithHook(spark: SparkSession, dir: String,
+      maxFilesPerBucket: Int, buckets: Option[Seq[String]],
+      beforeCommit: () => Unit): DvCompactStats =
     retryOnConflict("compactDvs", dir) {
       require(maxFilesPerBucket >= 1,
         "a bucket keeps at least one file per epoch written")
@@ -4203,9 +4072,6 @@ object MergeTable {
           target.contains(bucketOfEntry(e)))
         val live = readEntries(spark, dir, man, doomed)
           .localCheckpoint(true)
-        val next = cur + 1
-        val epochName = s"v=$next-${attemptTag()}"
-        val fs = hadoopFs(spark, dir)
         // a table whose last FULL optimize declared a layout
         // (graft.layout.sort / .zorder / .stripe — versioned
         // properties) gets that layout RECONSTRUCTED for the buckets
@@ -4214,80 +4080,32 @@ object MergeTable {
         // fold's fingerprints are order-independent sums, so the
         // re-sort costs nothing of the CDC-free attestation.
         val key = keyMeta(spark, dir, None)
-        def phys(c: String): String = man.cols.collectFirst {
-          case (p, l) if l == c => p }.getOrElse(c)
         val stripe = man.props.get("graft.layout.stripe").map(_.toLong)
-        val (folded, sortCols, dropAfter) =
+        val folded =
           (man.props.get("graft.layout.zorder"),
            man.props.get("graft.layout.sort")) match {
             case (Some(xy), _) if xy.contains(",") =>
               // n-ary declaration: reconstruct the same round-robin
               // curve optimizeZOrderN declared, however many columns
-              val cs = xy.split(",").toSeq.map(c => phys(c.trim))
-              (graft.ext.Layout.withZValN(live, cs),
-                Seq("zval", key), Seq("zval"))
+              EpochRows(graft.ext.Layout.withZValN(live,
+                  xy.split(",").toSeq.map(c => physOf(man, c.trim))),
+                Seq("zval", key), Seq("zval"), maxRecordsPerFile = stripe)
             case (None, Some(sc)) =>
-              (live,
-                if (stripe.isDefined) Seq(phys(sc), key)
-                else Seq(phys(sc)), Nil)
-            case _ => (live, Seq.empty[String], Seq.empty[String])
+              EpochRows(live,
+                Seq(physOf(man, sc)) ++ stripe.map(_ => key),
+                maxRecordsPerFile = stripe)
+            case _ => EpochRows(live, maxRecordsPerFile = stripe)
           }
-        writeEpoch(folded, dir, epochName, man.hexDigits,
-          sortCols = sortCols, dropAfterSort = dropAfter,
-          maxRecordsPerFile = stripe)
-        val fresh = epochEntries(spark, dir, epochName)
-        // blooms fused with the stats read-back (one relation, two
-        // concurrent jobs); on the corrupt-table path below the bloom
-        // work is wasted, but both jobs complete before the gate, so
-        // the failure behavior (delete + throw) is unchanged
-        val (freshFps, freshSts, freshSchema, freshBls) =
-          if (fresh.isEmpty)
-            (Map.empty[String, String], Map.empty[String, String], "",
-              Map.empty[String, String])
-          else epochAnnotations(spark, dir, epochName,
-            widesOf(man.props), man.props)
-        // the attestation gate: read-back == manifest, per bucket —
-        // for ATTESTED buckets only; an unattested (legacy, no #fp=)
-        // bucket has no claim to check and gains one from the rewrite
-        val unattested = target.filterNot(man.fps.contains)
-        val drifted = freshFps.collect {
-          case (b, fp) if man.fps.get(b).exists(!fpAgrees(_, fp)) => b
-        }
-        val vanished = (target -- freshFps.keySet).filter(b =>
-          man.fps.get(b).exists(!_.split(":").forall(c => BigInt(c) == 0)))
-        // an UNATTESTED bucket that vanishes in the fold is
-        // undecidable: with no fingerprint there is no way to prove
-        // its every row was tombstoned rather than lost — refuse
-        // loudly rather than silently drop its entries
-        val vanishedBlind = (target -- freshFps.keySet)
-          .filterNot(man.fps.contains)
-        if (drifted.nonEmpty || vanished.nonEmpty ||
-            vanishedBlind.nonEmpty) {
-          fs.delete(new Path(s"$dir/data/$epochName"), true)
-          throw new IllegalStateException(
-            s"compactDvs at $dir: rewritten bucket(s) " +
-              (drifted ++ vanished ++ vanishedBlind).toSeq.sorted
-                .mkString(", ") +
-              " do not re-attest their manifest fingerprints" +
-              (if (vanishedBlind.nonEmpty)
-                 s" (${vanishedBlind.toSeq.sorted.mkString(", ")}: " +
-                   "unattested AND fully tombstoned — cannot prove " +
-                   "the tombstones covered every row)"
-               else "") +
-              " — the table is corrupt (run fsckDeep); nothing was " +
-              "committed")
-        }
         // DV-file RETENTION: a scoped fold can EXHAUST a tombstone
-        // file (every data file it annotates was just rewritten)
-        // while other DV files still cover out-of-scope dirty
-        // buckets. Re-listing every `#dv=` would keep the exhausted
-        // file on every later DV read's scan and in vacuum's live
-        // set until the whole table is clean — so read the retained
-        // tombstones once (O(DV bytes), the same relation every MOR
-        // read pays) and keep only files annotating a SURVIVING
-        // dirty data file. commitManifest then drops the `#dvf=`
-        // lines of folded files as before; the two prunings together
-        // keep the DV set ∝ live tombstones.
+        // file (every data file it annotates is rewritten here) while
+        // other DV files still cover out-of-scope dirty buckets.
+        // Re-listing every `#dv=` would keep the exhausted file on
+        // every later DV read's scan and in vacuum's live set until
+        // the whole table is clean — so read the retained tombstones
+        // once (O(DV bytes), the same relation every MOR read pays)
+        // and keep only files annotating a SURVIVING dirty data file.
+        // commitManifest drops the `#dvf=` lines of folded files; the
+        // two prunings together keep the DV set ∝ live tombstones.
         val survivingDirty = kept.filter(man.dvf.contains)
         val keepDvs =
           if (man.dvs.isEmpty || survivingDirty.isEmpty) Nil
@@ -4301,25 +4119,44 @@ object MergeTable {
               .select("dvp").distinct().collect().map(_.getString(0))
             man.dvs.filter(p => needed.exists(_.endsWith("/" + p)))
           }
-        try {
-          commitManifest(spark, dir, next, kept ++ fresh,
-            man.hexDigits,
-            (man.fps -- (target -- freshFps.keySet)) ++
-              freshFps.view.filterKeys(unattested).toMap,
-            tokens = man.tokens,
-            sts = man.sts.view.filterKeys(kept.toSet).toMap ++ freshSts,
-            cols = man.cols, dvs = keepDvs, dvf = man.dvf,
-            props = man.props, bls = man.bls ++ freshBls,
-            eschs = man.eschs ++ (if (fresh.isEmpty) Map.empty
-              else Map(epochName -> freshSchema)))
-          DvCompactStats(next, target.size.toLong, doomed.size.toLong,
-            fresh.size.toLong,
-            doomed.flatMap(man.dvf.get).sum)
-        } catch {
-          case e: CommitConflictException =>
-            fs.delete(new Path(s"$dir/data/$epochName"), true)
-            throw e
+        // the attestation gate: read-back == manifest, per bucket —
+        // for ATTESTED buckets only; an unattested (legacy, no #fp=)
+        // bucket has no claim to check and gains one from the rewrite
+        def attests(freshFps: Map[String, String]): Unit = {
+          val drifted = freshFps.collect {
+            case (b, fp) if man.fps.get(b).exists(!fpAgrees(_, fp)) => b
+          }
+          val vanished = (target -- freshFps.keySet).filter(b =>
+            man.fps.get(b).exists(!_.split(":").forall(c => BigInt(c) == 0)))
+          // an UNATTESTED bucket that vanishes in the fold is
+          // undecidable: with no fingerprint there is no way to prove
+          // its every row was tombstoned rather than lost — refuse
+          // loudly rather than silently drop its entries
+          val vanishedBlind = (target -- freshFps.keySet)
+            .filterNot(man.fps.contains)
+          if (drifted.nonEmpty || vanished.nonEmpty ||
+              vanishedBlind.nonEmpty)
+            throw new IllegalStateException(
+              s"compactDvs at $dir: rewritten bucket(s) " +
+                (drifted ++ vanished ++ vanishedBlind).toSeq.sorted
+                  .mkString(", ") +
+                " do not re-attest their manifest fingerprints" +
+                (if (vanishedBlind.nonEmpty)
+                   s" (${vanishedBlind.toSeq.sorted.mkString(", ")}: " +
+                     "unattested AND fully tombstoned — cannot prove " +
+                     "the tombstones covered every row)"
+                 else "") +
+                " — the table is corrupt (run fsckDeep); nothing was " +
+                "committed")
         }
+        val ec = commitEpoch(spark, dir, cur, man, Some(folded),
+          replaces = target, gate = Some(attests),
+          beforeCommit = beforeCommit,
+          change = m => m.copy(dvs = keepDvs,
+            fps = m.fps.map { case (b, fp) =>
+              b -> (if (target(b)) man.fps.getOrElse(b, fp) else fp) }))
+        DvCompactStats(ec.version, target.size.toLong, doomed.size.toLong,
+          ec.fresh.size.toLong, doomed.flatMap(man.dvf.get).sum)
       }
     }
 

@@ -36,14 +36,16 @@ object BronzeCache {
     * @param schema    the bronze record schema, id column included
     * @param fetchMiss given the missed subset of `requested`, produce the
     *                  fetched raw records in `schema`'s column order
-    * @return (batch, hits, misses): the full batch of raw records for the
-    *         requested keys as a local relation in id order, plus hit/miss
-    *         counts for run metrics (cache_hits in the reference's
-    *         envelope, :739)
+    * @return (batch, hits, misses, lastListed): the full batch of raw
+    *         records for the requested keys as a local relation in id
+    *         order, hit/miss counts for run metrics (cache_hits in the
+    *         reference's envelope, :739), and the largest requested id
+    *         (None for an empty request), which the batch lacks when
+    *         that id's fetch failed
     */
   def readThrough(spark: SparkSession, bronzeDir: String, schema: StructType,
       requested: DataFrame, fetchMiss: DataFrame => DataFrame)
-      : (DataFrame, Long, Long) = {
+      : (DataFrame, Long, Long, Option[Long]) = {
     val keys = requested.collect()
     val ids = keys.map(_.getAs[Long]("id"))
     val hits =
@@ -61,6 +63,6 @@ object BronzeCache {
         .write.mode("append").parquet(bronzeDir)
     val batch = (hits ++ fetched).sortBy(_.getAs[Long]("id"))
     (spark.createDataFrame(batch.toSeq.asJava, schema), hits.length.toLong,
-      misses.length.toLong)
+      misses.length.toLong, ids.maxOption)
   }
 }

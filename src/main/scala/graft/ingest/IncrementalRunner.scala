@@ -30,6 +30,11 @@ trait RepoSource {
   /** Cumulative records served from cache instead of the network
     * (reference cache_hits counter, :739). */
   def cacheHits: Long = 0L
+
+  /** The largest id the latest [[fetch]]'s list page consumed, when the
+    * source knows it. It can lie beyond the largest id `fetch` returned:
+    * an id whose detail fetch failed is listed but not returned. */
+  def lastListedId: Option[Long] = None
 }
 
 /** A RepoSource over a fixed raw DataFrame (tests) or JSON path;
@@ -58,11 +63,13 @@ final class CachedDetailRepoSource(
   private var calls = 0L
   private var hits = 0L
   private var failures = 0L
+  private var listed = Option.empty[Long]
 
   def fetch(spark: SparkSession, since: Long, limit: Int): DataFrame = {
     var acc: Option[org.apache.spark.util.LongAccumulator] = None
-    val (batch, nHits, nMisses) = BronzeCache.readThrough(spark, bronzeDir,
-      RepoSchema.raw, list.fetch(spark, since, limit), missKeys => {
+    val (batch, nHits, nMisses, last) = BronzeCache.readThrough(spark,
+      bronzeDir, RepoSchema.raw, list.fetch(spark, since, limit),
+      missKeys => {
         val (enriched, failedAcc) = DetailEnricher.enrich(missKeys, clientFactory)
         acc = Some(failedAcc)
         DetailEnricher.details(enriched)
@@ -73,6 +80,7 @@ final class CachedDetailRepoSource(
     calls += nMisses // one detail request per cache miss
     hits += nHits
     failures += acc.fold(0L)(_.value)
+    listed = last
     batch
   }
 
@@ -80,6 +88,7 @@ final class CachedDetailRepoSource(
   override def apiCalls: Long = calls + list.apiCalls
   override def cacheHits: Long = hits
   override def failedCount: Long = failures
+  override def lastListedId: Option[Long] = listed
 }
 
 /** Incremental micro-batch runner — the engine form of
@@ -117,9 +126,14 @@ final class IncrementalRunner(spark: SparkSession, source: RepoSource,
     * The batch holds at most `budget` rows (the reference's per-run
     * request cap), so it is validated once and collected; the sinks and
     * the envelope are written from that one driver-side copy, each from
-    * one partition, and the source's lineage is never re-run. Returns
-    * the one-row metrics DataFrame, the same row the envelope holds:
-    * sink IO has completed and the cursor has moved when it returns. */
+    * one partition, and the source's lineage is never re-run. The
+    * cursor moves to the last id the list page consumed
+    * ([[RepoSource.lastListedId]]), so ids whose detail fetch failed
+    * are not listed again and a page of failures still advances it; the
+    * envelope's `last_repo_id` stays the largest id that came back.
+    * Returns the one-row metrics DataFrame, the same row the envelope
+    * holds: sink IO has completed and the cursor has moved when it
+    * returns. */
   def runOnce(sinkDir: String, quarantineDir: String, budget: Int,
       testMode: Boolean = false): DataFrame = {
     val t0 = System.nanoTime()
@@ -147,8 +161,9 @@ final class IncrementalRunner(spark: SparkSession, source: RepoSource,
     // doesn't cover (reference metadata block,
     // src/extract_github_data.py:730-742)
     envelope.write.mode("append").json(s"${sinkDir.stripSuffix("/")}_metadata")
-    val lastId = m.getAs[Long]("last_repo_id")
-    if (lastId > since) commitCursor(lastId)
+    val consumed = source.lastListedId
+      .foldLeft(m.getAs[Long]("last_repo_id"))(math.max)
+    if (consumed > since) commitCursor(consumed)
     envelope
   }
 }

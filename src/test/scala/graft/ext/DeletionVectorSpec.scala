@@ -653,4 +653,104 @@ class DeletionVectorSpec extends SparkSpec {
     assert(all.length === 4 && all.toSet.contains((20L, "update")),
       s"the MOR upsert must flow exactly once: ${all.toSeq}")
   }
+
+  /** The table's epoch (`data/v=…`) and tombstone (`_dvs/dv=…`) dirs. */
+  private def attemptDirs(dir: String): Set[String] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("data", "_dvs").flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$d")
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).filter(_.isDirectory)
+        .map(st => s"$d/${st.getPath.getName}").toSeq
+    }.toSet
+  }
+
+  /** Runs `write` with a competing upsert of `winner` committed at its
+    * first beforeCommit; returns the attempt dirs the loser had written
+    * by then. A merge-on-read writer or a gated compaction never takes
+    * the conflict-scoped fast re-commit: it re-runs in full. */
+  private def lostRace(dir: String, winner: Seq[(Long, String, Long)])(
+      write: (() => Unit) => Unit): Set[String] = {
+    import spark.implicits._
+    val before = attemptDirs(dir)
+    val f0 = MergeTable.fastRecommits.get()
+    var loser = Option.empty[Set[String]]
+    write(() => if (loser.isEmpty) {
+      loser = Some(attemptDirs(dir) -- before)
+      MergeTable.upsert(spark, dir,
+        winner.toDF("key", "value", "cents")): Unit
+    })
+    assert(MergeTable.fastRecommits.get() === f0,
+      "the lost race must re-run the writer, not re-commit its attempt")
+    loser.get
+  }
+
+  private def assertRetriedClean(dir: String, loser: Set[String]): Unit = {
+    assert(loser.nonEmpty, "the losing attempt wrote nothing to sweep")
+    assert((loser & attemptDirs(dir)).isEmpty,
+      s"the lost race's attempt dirs must be deleted: $loser")
+    assert(MergeTable.versions(spark, dir) === Seq(1L, 2L, 3L, 4L),
+      "the winner's commit and then the retried one")
+    val deep = MergeTable.fsckDeep(spark, dir)
+    assert(deep.mismatched.isEmpty && deep.unattested.isEmpty)
+  }
+
+  private def valueOf(dir: String, key: Long): String =
+    MergeTable.readTable(spark, dir).filter(col("key") === key)
+      .select("value").collect().head.getString(0)
+
+  test("an upsertMor that loses the commit race deletes its epoch and " +
+      "tombstones, then retries onto the winner's snapshot") {
+    import spark.implicits._
+    val dir = mkTable(10)
+    MergeTable.deleteKeysMor(spark, dir, Seq(9L).toDF("key")): Unit
+    val loser = lostRace(dir, Seq((3L, "w", 30L))) { hook =>
+      val st = MergeTable.upsertMorWithHook(spark, dir,
+        Seq((1L, "a", 1L), (2L, "b", 2L), (11L, "c", 3L))
+          .toDF("key", "value", "cents"), hook)
+      assert(st.version === 4L && st.rowsMatched === 2L &&
+        st.rowsInserted === 1L)
+    }
+    assert(loser.exists(_.startsWith("data/v=")) &&
+      loser.exists(_.startsWith("_dvs/dv=")), loser)
+    assertRetriedClean(dir, loser)
+    assert(keysOf(dir) === (1L to 11L).toSet - 9L)
+    assert(Seq(1L, 2L, 3L, 11L).map(valueOf(dir, _)) ===
+      Seq("a", "b", "w", "c"))
+  }
+
+  test("a deleteKeysMor that loses the commit race deletes its " +
+      "tombstones, then retries onto the winner's snapshot") {
+    import spark.implicits._
+    val dir = mkTable(10)
+    MergeTable.deleteKeysMor(spark, dir, Seq(9L).toDF("key")): Unit
+    val loser = lostRace(dir, Seq((6L, "w", 60L), (4L, "w", 40L))) {
+      hook =>
+        val st = MergeTable.deleteKeysMorWithHook(spark, dir,
+          Seq(4L, 5L).toDF("key"), hook)
+        assert(st.version === 4L && st.rowsDeleted === 2L)
+    }
+    assert(loser.nonEmpty && loser.forall(_.startsWith("_dvs/dv=")), loser)
+    assertRetriedClean(dir, loser)
+    assert(keysOf(dir) === (1L to 10L).toSet -- Set(4L, 5L, 9L))
+    assert(valueOf(dir, 6L) === "w")
+  }
+
+  test("a compactDvs that loses the commit race deletes its epoch, then " +
+      "retries onto the winner's snapshot") {
+    import spark.implicits._
+    val dir = mkTable(10)
+    MergeTable.deleteKeysMor(spark, dir, Seq(7L, 9L).toDF("key")): Unit
+    val loser = lostRace(dir, Seq((8L, "w", 80L))) { hook =>
+      val st = MergeTable.compactDvsWithHook(spark, dir, 1, None, hook)
+      assert(st.version === 4L)
+    }
+    assert(loser.nonEmpty && loser.forall(_.startsWith("data/v=")), loser)
+    assertRetriedClean(dir, loser)
+    assert(keysOf(dir) === (1L to 10L).toSet -- Set(7L, 9L))
+    assert(valueOf(dir, 8L) === "w")
+    assert(MergeTable.detail(spark, dir).collect().head
+      .getAs[Long]("dv_tombstones") === 0L)
+  }
 }

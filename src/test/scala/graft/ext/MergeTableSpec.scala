@@ -140,10 +140,11 @@ class MergeTableSpec extends SparkSpec {
     val dir = mkTable(20)
     // both racers derived version 2 from snapshot 1; the second
     // manifest create must fail, never silently clobber the first
-    MergeTable.commitManifest(spark, dir, 2L, Seq("v=2/bucket=aa/w.parquet"))
+    MergeTable.commitManifest(spark, dir, 2L,
+      MergeTable.ManifestData(entries = Seq("v=2/bucket=aa/w.parquet")))
     val err = intercept[java.io.IOException] {
       MergeTable.commitManifest(spark, dir, 2L,
-        Seq("v=2/bucket=bb/l.parquet"))
+        MergeTable.ManifestData(entries = Seq("v=2/bucket=bb/l.parquet")))
     }
     assert(err.getMessage.contains("commit conflict"))
   }
@@ -719,7 +720,7 @@ class MergeTableSpec extends SparkSpec {
     // different contents the same version id
     val reuse = intercept[IllegalArgumentException] {
       MergeTable.commitManifest(spark, dir, 2L,
-        Seq("v=2-0x0/bucket=aa/w.parquet"))
+        MergeTable.ManifestData(entries = Seq("v=2-0x0/bucket=aa/w.parquet")))
     }
     assert(reuse.getMessage.contains("legacy committed-empty"))
     // the table itself still reads at head and at v1/v3
@@ -738,10 +739,10 @@ class MergeTableSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val err = intercept[MergeTable.CommitConflictException] {
       MergeTable.commitManifest(spark, dir, 2L,
-        Seq("v=2-1x1/bucket=aa/a.parquet"),
+        MergeTable.ManifestData(entries = Seq("v=2-1x1/bucket=aa/a.parquet")),
         beforePromote = () => {
-          MergeTable.commitManifest(spark, dir, 2L,
-            Seq("v=2-2x2/bucket=bb/b.parquet")) // the winner lands
+          MergeTable.commitManifest(spark, dir, 2L, MergeTable.ManifestData(
+            entries = Seq("v=2-2x2/bucket=bb/b.parquet"))) // the winner lands
           // the concurrent vacuum's stale-temp sweep (v2 ≤ cur now)
           fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/_manifests"))
             .filter(_.getPath.getName.endsWith(".tmp"))
@@ -785,16 +786,19 @@ class MergeTableSpec extends SparkSpec {
     // crafted manifests: same rows (2) and same h1 (100) — exactly what
     // two offsetting payload changes whose seed-42 deltas cancel would
     // attest — but the independent fp2 channel disagrees
-    MergeTable.commitManifest(spark, dir, 1L,
-      Seq("v=1-0x0/bucket=aa/a.parquet"), fps = Map("aa" -> "2:100:555"))
-    MergeTable.commitManifest(spark, dir, 2L,
-      Seq("v=2-0x0/bucket=aa/b.parquet"), fps = Map("aa" -> "2:100:666"))
+    MergeTable.commitManifest(spark, dir, 1L, MergeTable.ManifestData(
+      entries = Seq("v=1-0x0/bucket=aa/a.parquet"),
+      fps = Map("aa" -> "2:100:555")))
+    MergeTable.commitManifest(spark, dir, 2L, MergeTable.ManifestData(
+      entries = Seq("v=2-0x0/bucket=aa/b.parquet"),
+      fps = Map("aa" -> "2:100:666")))
     assert(MergeTable.changedBuckets(spark, dir, 1L, 2L) === Seq("aa"),
       "an h1 collision must not slip past the second channel")
     // legacy (pre-upgrade) endpoint: two components compare on the
     // common prefix — the old 64-bit guarantee, not a spurious rescan
-    MergeTable.commitManifest(spark, dir, 3L,
-      Seq("v=2-0x0/bucket=aa/b.parquet"), fps = Map("aa" -> "2:100"))
+    MergeTable.commitManifest(spark, dir, 3L, MergeTable.ManifestData(
+      entries = Seq("v=2-0x0/bucket=aa/b.parquet"),
+      fps = Map("aa" -> "2:100")))
     assert(MergeTable.changedBuckets(spark, dir, 2L, 3L) === Seq.empty,
       "a legacy attestation agreeing on rows+h1 must prune")
     // and a freshly-written table attests THREE components

@@ -3,6 +3,8 @@ package graft.ingest
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -32,13 +34,13 @@ class CacheAndEnrichSpec extends SparkSpec {
     val bronze = Files.createTempDirectory("bronze").toString
     fetchCalls.set(0)
 
-    val (batch1, hits1, miss1) =
+    val (batch1, hits1, miss1, _) =
       BronzeCache.readThrough(spark, bronze, payloadSchema, keyDf(1, 2, 3),
         fakeFetch)
     assert(batch1.count() == 3 && hits1 == 0 && miss1 == 3)
 
     // overlapping request: only id 4 should be fetched
-    val (batch2, hits2, miss2) =
+    val (batch2, hits2, miss2, _) =
       BronzeCache.readThrough(spark, bronze, payloadSchema, keyDf(2, 3, 4),
         fakeFetch)
     assert(batch2.count() == 3 && hits2 == 2 && miss2 == 1)
@@ -46,7 +48,7 @@ class CacheAndEnrichSpec extends SparkSpec {
 
     // fully-cached request: the fetch function must not run at all
     val before = fetchCalls.get()
-    val (batch3, hits3, miss3) =
+    val (batch3, hits3, miss3, _) =
       BronzeCache.readThrough(spark, bronze, payloadSchema, keyDf(1, 4),
         fakeFetch)
     assert(batch3.count() == 2 && hits3 == 2 && miss3 == 0)
@@ -197,6 +199,45 @@ class CacheAndEnrichSpec extends SparkSpec {
     assert(files(bronze, ".parquet") == bronzeFiles + 1)
     assert(runner.cursor == 39L)
   }
+
+  test("the keyset cursor moves past failed detail fetches: over random " +
+      "404 placements, an all-404 page included, every listed id is " +
+      "fetched once, none that resolves is lost, and every run " +
+      "advances the cursor") {
+    val rnd = new scala.util.Random(7)
+    // (ids 1..n, 404'd ids, budget); the first case's second page
+    // (ids 4..6) is all 404s and its last page ends on one
+    val cases = (12L, Set(4L, 5L, 6L, 12L), 3) +: Seq.fill(6) {
+      val n = 6L + rnd.nextInt(8)
+      (n, (1L to n).filter(_ => rnd.nextInt(3) == 0).toSet,
+        1 + rnd.nextInt(4))
+    }
+    for ((n, missing, budget) <- cases) {
+      val asked = spark.sparkContext.collectionAccumulator[Long]("asked")
+      val runner = new IncrementalRunner(spark,
+        new CachedDetailRepoSource(
+          new DataFrameRepoSource(summaries(1L to n: _*)), tmp("bronze"),
+          new RecordingClients(missing, asked)),
+        tmp("state"), _ => None)
+      val sink = tmp("sink")
+      var runs = 0
+      while (runner.cursor < n && runs <= n) {
+        val before = runner.cursor
+        runner.runOnce(sink, tmp("q"), budget): Unit
+        runs += 1
+        assert(runner.cursor > before,
+          s"case ($n, $missing, $budget): run $runs left the cursor at " +
+            before)
+      }
+      val fetched = asked.value.asScala.toSeq
+      assert(fetched.sorted === (1L to n),
+        s"case ($n, $missing, $budget): each listed id is fetched once")
+      val landed = spark.read.schema("id long").json(sink)
+        .collect().map(_.getLong(0)).toSet
+      assert(landed === (1L to n).toSet -- missing,
+        s"case ($n, $missing, $budget): every resolving id lands")
+    }
+  }
 }
 
 object CacheAndEnrichSpec {
@@ -229,6 +270,20 @@ object CacheAndEnrichSpec {
        | "owner": {"login": "$owner", "id": ${id + 1000},
        |  "type": "User", "avatar_url": "a", "html_url": "h"}}"""
       .stripMargin.replaceAll("\n", "")
+
+  /** Fake client that 404s the ids in `missing` and records each id it
+    * is asked for in `asked`. */
+  final class RecordingClients(missing: Set[Long],
+      asked: org.apache.spark.util.CollectionAccumulator[Long])
+      extends DetailEnricher.DetailClientFactory {
+    def apply(): DetailEnricher.DetailClient = new DetailEnricher.DetailClient {
+      def fetchDetail(id: Long, owner: String, name: String): Option[String] = {
+        asked.add(id)
+        if (missing(id)) None
+        else Some(detailJson(id, owner, name, "Scala", 6))
+      }
+    }
+  }
 
   /** Fake client: id % 3 == 0 simulates a 404'd (deleted) repo; ids in
     * `noLanguage` come back without a language, and with `spreadDays`
