@@ -29,8 +29,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       override def preColumnarTransitions = graft.plans.DriverLookup
     })
     // value-predicate FILE pruning on MergeTable scans: manifest #st=
-    // per-file min/max stats drop files a pushed range can never match
-    e.injectOptimizerRule(_ => graft.plans.StatsFilePruning)
+    // per-file min/max stats drop files a pushed range can never match.
+    // Pre-CBO runs once, after the fixed-point batches have pushed the
+    // filters onto the relation
+    e.injectPreCBORule(_ => graft.plans.StatsFilePruning)
+    // prepared key lookups: the parser's lookup leaf resolves to an
+    // optimized fragment, planned by Spark's FileSourceStrategy
+    e.injectResolutionRule(s => graft.plans.ResolveMergeTableLookup(s))
+    e.injectPlannerStrategy(_ => graft.plans.MergeTableLookupStrategy)
     // SQL DML: MERGE INTO merge_table.`/dir` routed to the clause
     // engine (the write-side twin of the merge_table read TVF)
     e.injectResolutionRule(_ => graft.plans.MergeIntoMergeTable)

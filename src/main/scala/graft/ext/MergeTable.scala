@@ -638,20 +638,6 @@ object MergeTable {
           " — nothing was committed")
   }
 
-  /** RESTORE — roll the live table back (or forward) to `toVersion`'s
-    * snapshot by committing a NEW version that re-lists that
-    * snapshot's files: pure metadata, O(manifest), zero rows moved or
-    * rewritten — the Delta RESTORE shape, and the operational answer
-    * to "a bad batch landed an hour ago" on a 100 TB table. History
-    * is untouched (the bad versions stay readable until [[vacuum]]),
-    * and the restored files are RE-REFERENCED by the new manifest, so
-    * the unreferenced-file sweep keeps them live however old their
-    * origin. The changefeed prices the rollback honestly: the diff
-    * from the bad head to the restored head is the real row-level
-    * undo, fingerprint-pruned to the buckets that actually differ.
-    * Bucket width and content fingerprints inherit from the restored
-    * manifest verbatim (later upserts bucket at the restored width —
-    * restore across a [[rebucket]] restores the width too). */
   /** Table PROPERTIES — versioned key:value pairs in the manifest
     * (`#prop=` lines, carried forward by every commit — the Delta
     * log-properties model: atomic with the snapshot, readable at any
@@ -692,6 +678,20 @@ object MergeTable {
       cur + 1
     }
 
+  /** RESTORE — roll the live table back (or forward) to `toVersion`'s
+    * snapshot by committing a NEW version that re-lists that
+    * snapshot's files: pure metadata, O(manifest), zero rows moved or
+    * rewritten — the Delta RESTORE shape, and the operational answer
+    * to "a bad batch landed an hour ago" on a 100 TB table. History
+    * is untouched (the bad versions stay readable until [[vacuum]]),
+    * and the restored files are RE-REFERENCED by the new manifest, so
+    * the unreferenced-file sweep keeps them live however old their
+    * origin. The changefeed prices the rollback honestly: the diff
+    * from the bad head to the restored head is the real row-level
+    * undo, fingerprint-pruned to the buckets that actually differ.
+    * Bucket width and content fingerprints inherit from the restored
+    * manifest verbatim (later upserts bucket at the restored width —
+    * restore across a [[rebucket]] restores the width too). */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long =
     retryOnConflict("restore", dir) {
       val cur = versions(spark, dir).lastOption.getOrElse(
@@ -1150,8 +1150,8 @@ object MergeTable {
 
   /** The two per-row fingerprint hash columns over `payload` (sorted
     * column names) — shared by the epoch write-back and [[fsckDeep]]'s
-    * recompute so the attestation and the audit can never drift. */
-  /** `wides` canonicalizes the hash inputs to the table's DECLARED
+    * recompute so the attestation and the audit can never drift.
+    * `wides` canonicalizes the hash inputs to the table's DECLARED
     * types (xxhash64 is width-sensitive: int 5 and long 5 hash
     * differently), so an epoch physically storing the narrow type
     * still fingerprints identically to the widened read every OTHER
@@ -1268,6 +1268,17 @@ object MergeTable {
     }
   }
 
+  /** PROBE-ONLY flag (`-Dgraft.cow.probe.bareFingerprints=true`):
+    * emulates the round-13 commit shape — bucket-grain grouping, one
+    * hash channel, no per-file stats — so [[graft.tools.ScaleProbe]]
+    * can A/B the write-path cost of the round-14/15 manifest
+    * annotations against a bare upsert. Never set in production: it
+    * writes legacy-format fingerprints and NO `#st=` lines (sound —
+    * unattested files are simply never pruned — but it forfeits file
+    * pruning and 128-bit collision resistance for that epoch). */
+  private def bareFingerprintProbe: Boolean =
+    java.lang.Boolean.getBoolean("graft.cow.probe.bareFingerprints")
+
   /** ONE read-back scan of a just-written epoch serving BOTH manifest
     * annotations: per-BUCKET content fingerprints (`#fp=` — the
     * changefeed short-circuit and fsckDeep's attestation) and per-FILE
@@ -1280,17 +1291,6 @@ object MergeTable {
     * class). Stats cover the integral payload columns; min/max are of
     * non-null values, an all-null file rendering as an empty range a
     * null-rejecting predicate may prune. */
-  /** PROBE-ONLY flag (`-Dgraft.cow.probe.bareFingerprints=true`):
-    * emulates the round-13 commit shape — bucket-grain grouping, one
-    * hash channel, no per-file stats — so [[graft.tools.ScaleProbe]]
-    * can A/B the write-path cost of the round-14/15 manifest
-    * annotations against a bare upsert. Never set in production: it
-    * writes legacy-format fingerprints and NO `#st=` lines (sound —
-    * unattested files are simply never pruned — but it forfeits file
-    * pruning and 128-bit collision resistance for that epoch). */
-  private def bareFingerprintProbe: Boolean =
-    java.lang.Boolean.getBoolean("graft.cow.probe.bareFingerprints")
-
   private def epochStats(spark: SparkSession, dir: String,
       epochName: String,
       wides: Map[String, org.apache.spark.sql.types.DataType] =
@@ -2188,13 +2188,6 @@ object MergeTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** A snapshot restricted to an already-pruned manifest entry list —
-    * the impacted-bucket read path shared by [[upsert]]/[[deleteKeys]]:
-    * listing only those files keeps the mergeSchema footer job AND the
-    * scan O(impacted files); building the full-table relation and
-    * filtering it would pay an O(table-files) footer merge per write
-    * just to plan a 40-file read (measured by the ScaleProbe manifest
-    * leg: 7.6 s/upsert at 4096 buckets before, flat after). */
   /** Extend-only schema union of two epoch schemas: `a`'s fields in
     * order, `b`'s new fields appended; a shared field keeps `a`'s
     * slot (metadata included — every epoch stamps the key, so the
@@ -2326,6 +2319,13 @@ object MergeTable {
       case _ => build()
     }
 
+  /** A snapshot restricted to an already-pruned manifest entry list —
+    * the impacted-bucket read path shared by [[upsert]]/[[deleteKeys]]:
+    * listing only those files keeps the mergeSchema footer job AND the
+    * scan O(impacted files); building the full-table relation and
+    * filtering it would pay an O(table-files) footer merge per write
+    * just to plan a 40-file read (measured by the ScaleProbe manifest
+    * leg: 7.6 s/upsert at 4096 buckets before, flat after). */
   private def scanEntriesRaw(spark: SparkSession, dir: String,
       entries: Seq[String],
       eschs: Map[String, String] = Map.empty,
@@ -2525,13 +2525,6 @@ object MergeTable {
       }
     }: _*)
 
-  /** The inverse boundary: a LOGICALLY-named batch translated to the
-    * table's physical column names before it meets the files. A batch
-    * column that lands on a physical slot whose logical fate is
-    * rename-away or drop is REJECTED loudly — writing it would
-    * silently resurrect dead bytes under a stale name (re-adding a
-    * dropped/renamed name needs an id-based format; this one forbids
-    * it, explicitly). */
   /** TYPE-WIDENING declarations ride table properties
     * (`graft.widen.<physical> = <type DDL>`) — carried forward by
     * every commit, versioned, time-travel-consistent (a pre-widen
@@ -2587,6 +2580,13 @@ object MergeTable {
       wides.get(c).map(dt => col(c).cast(dt).as(c)).getOrElse(col(c))
     }: _*)
 
+  /** The inverse boundary: a LOGICALLY-named batch translated to the
+    * table's physical column names before it meets the files. A batch
+    * column that lands on a physical slot whose logical fate is
+    * rename-away or drop is REJECTED loudly — writing it would
+    * silently resurrect dead bytes under a stale name (re-adding a
+    * dropped/renamed name needs an id-based format; this one forbids
+    * it, explicitly). */
   private def toPhysical(df: DataFrame,
       cols: Map[String, String]): DataFrame =
     if (cols.isEmpty) df
@@ -2810,7 +2810,6 @@ object MergeTable {
       history(spark, dir).queryExecution.logical
   }
 
-  /** The manifest-only version ledger behind `merge_table_history`. */
   /** Effective COMMIT TIMESTAMPS (epoch millis) per retained version,
     * STRICTLY increasing: each version's raw clock is the manifest's
     * own `#ts=` line (in-commit — directory copies cannot shift it;
@@ -2898,6 +2897,7 @@ object MergeTable {
       tsMillis: Long): DataFrame =
     readTable(spark, dir, Some(versionAsOf(spark, dir, tsMillis)))
 
+  /** The manifest-only version ledger behind `merge_table_history`. */
   def history(spark: SparkSession, dir: String): DataFrame = {
     val times = commitTimes(spark, dir).toMap
     val rows = versions(spark, dir).sorted.map { v =>
@@ -2992,11 +2992,14 @@ object MergeTable {
     * [[readTable]] prunes the same partitions through Catalyst); this
     * API form needs no rule registration and returns exactly the
     * matched rows. Integral and string keys only — the types whose
-    * toString equals Spark's CAST AS STRING. Keys confined to one
-    * bucket of a snapshot without tombstones collect on the driver,
-    * with no Spark job ([[graft.plans.DriverLookup]]); more buckets,
-    * or a bucket read through deletion vectors, run a scheduled
-    * scan. */
+    * toString equals Spark's CAST AS STRING. The frame is the prepared
+    * lookup leaf ([[graft.plans.MergeTableLookup]]) over the impacted
+    * buckets' relation: keys confined to one bucket collect on the
+    * driver, with no Spark job ([[graft.plans.DriverLookup]]), and more
+    * buckets run a scheduled scan of the same fragment. A snapshot
+    * with deletion vectors, or a key that does not bind losslessly to
+    * the key column's type, reads through the DV-aware frame
+    * instead. */
   def readKeys(spark: SparkSession, dir: String, keys: Seq[Any],
       version: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "readKeys needs at least one key")
@@ -3004,22 +3007,128 @@ object MergeTable {
     val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no MergeTable at $dir")))
     val man = readManifestFull(spark, dir, v)
-    val strs = keys.map {
+    val lits = keys.map {
       case k @ (_: Long | _: Int | _: Short | _: Byte | _: String) =>
-        k.toString
+        org.apache.spark.sql.catalyst.expressions.Literal(k)
       case k => throw new IllegalArgumentException(
         "readKeys supports integral and string keys, got " +
           (if (k == null) "null" else k.getClass.getName))
     }
-    val buckets = strs
-      .map(s => graft.plans.KeyToBucketPruning.bucketOf(s, man.hexDigits))
+    val buckets = keys
+      .map(k => graft.plans.KeyToBucketPruning.bucketOf(k.toString,
+        man.hexDigits))
       .toSet
     val entries = man.entries.filter(e => buckets.contains(bucketOfEntry(e)))
-    if (entries.isEmpty) readTable(spark, dir, Some(v)).filter(lit(false))
-    else applyLogicalView(
-      readEntries(spark, dir, man, entries)
-        .filter(col(key).isin(keys: _*)),
-      man.cols)
+    lookupLeaf(spark, dir, v, man, Left(key), lits, None,
+        if (entries.isEmpty) man.entries else entries)
+      .map(org.apache.spark.sql.graft.Bridge.ofRows(spark, _))
+      .getOrElse(
+        if (entries.isEmpty) readTable(spark, dir, Some(v)).filter(lit(false))
+        else applyLogicalView(
+          readEntries(spark, dir, man, entries)
+            .filter(col(key).isin(keys: _*)),
+          man.cols))
+  }
+
+  /** The prepared leaf of a parsed SQL lookup
+    * ([[graft.plans.PreparedLookup]]): the version resolved now, as
+    * the `merge_table` TVF resolves it, and the leaf built over the
+    * snapshot's whole relation — the TVF's own cached scan — so the
+    * output schema is the general path's. The compared column is the
+    * key when it carries the footer key stamp at the snapshot's width,
+    * the same test [[graft.plans.KeyToBucketPruning]] applies. None
+    * sends the statement down the general path. */
+  private[graft] def prepareLookup(spark: SparkSession,
+      spec: graft.plans.PreparedLookup.Spec)
+      : Option[graft.plans.MergeTableLookup] = {
+    val v = spec.version match {
+      case None => versions(spark, spec.dir).lastOption
+      case Some(Left(n)) => Some(n)
+      case Some(Right(tag)) => Some(tagVersion(spark, spec.dir, tag))
+    }
+    v.flatMap { v =>
+      val man = readManifestFull(spark, spec.dir, v)
+      lookupLeaf(spark, spec.dir, v, man, Right(spec.column),
+        Seq(spec.value), spec.columns, man.entries)
+    }
+  }
+
+  /** The one builder of [[graft.plans.MergeTableLookup]]: `Project`
+    * over `Filter(key = lit AND bucket = md5prefix(lit))` — `IN` lists
+    * for several keys — over the cached scan relation of `relEntries`
+    * in the snapshot's logical view. `key` is the table's key column
+    * (`readKeys`) or a SQL lookup's compared column, resolved with the
+    * session resolver like the selected `columns` (None: all). Each
+    * literal binds only where that is lossless: an integral literal in
+    * the range of an integral key, or a string on a string key. None,
+    * for the caller's general path, on a snapshot with deletion
+    * vectors, an unbindable literal or an unresolvable column. */
+  private def lookupLeaf(spark: SparkSession, dir: String, v: Long,
+      man: ManifestData, key: Either[String, String],
+      values: Seq[org.apache.spark.sql.catalyst.expressions.Literal],
+      columns: Option[Seq[String]],
+      relEntries: Seq[String]): Option[graft.plans.MergeTableLookup] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, And,
+      Attribute, EqualTo, Expression, In, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.types._
+    if (man.dvf.nonEmpty || relEntries.isEmpty) return None
+    val rel = scanEntriesRaw(spark, dir, relEntries, man.eschs,
+      widesOf(man.props)).queryExecution.analyzed
+    val view =
+      if (man.cols.isEmpty) rel
+      else Project(rel.output.flatMap { a =>
+        man.cols.get(a.name) match {
+          case Some("") => None
+          case Some(l) => Some(Alias(a, l)())
+          case None => Some(a)
+        }
+      }, rel)
+    val resolver = spark.sessionState.conf.resolver
+    def resolve(name: String): Option[Attribute] =
+      view.resolve(Seq(name), resolver).collect { case a: Attribute => a }
+    val stamp = graft.plans.KeyToBucketPruning.KeyHexMeta
+    val keyAttr = key.fold(k => rel.output.find(_.name == k),
+      c => resolve(c).flatMap(a => rel.output.find(_.exprId == a.exprId))
+        .filter(a => a.metadata.contains(stamp) &&
+          a.metadata.getLong(stamp) == man.hexDigits))
+    val bucketAttr = rel.output.find(_.name == "bucket")
+    def bind(l: Literal, dt: DataType): Option[Literal] = (l.value, dt) match {
+      case (n @ (_: java.lang.Long | _: java.lang.Integer |
+          _: java.lang.Short | _: java.lang.Byte), _) =>
+        val x = n.asInstanceOf[Number].longValue
+        dt match {
+          case LongType => Some(Literal(x))
+          case IntegerType if x.isValidInt => Some(Literal(x.toInt))
+          case ShortType if x.isValidShort => Some(Literal(x.toShort))
+          case ByteType if x.isValidByte => Some(Literal(x.toByte))
+          case _ => None
+        }
+      case (_: org.apache.spark.unsafe.types.UTF8String, StringType)
+          if l.dataType == StringType => Some(l)
+      case _ => None
+    }
+    val projection = columns.fold(Option(view.output)) { cs =>
+      val rs = cs.map(resolve)
+      if (rs.forall(_.isDefined)) Some(rs.flatten) else None
+    }
+    for {
+      k <- keyAttr
+      b <- bucketAttr
+      cols <- projection
+      bound = values.map(bind(_, k.dataType))
+      if bound.forall(_.isDefined)
+    } yield {
+      val lits = bound.flatten
+      val buckets = lits.map(l => Literal(graft.plans.KeyToBucketPruning
+        .bucketOf(l.value.toString, man.hexDigits))).distinct
+      def isIn(a: Attribute, ls: Seq[Literal]): Expression = ls match {
+        case Seq(one) => EqualTo(a, one)
+        case _ => In(a, ls)
+      }
+      graft.plans.MergeTableLookup(dir, v, Project(cols,
+        Filter(And(isIn(k, lits), isIn(b, buckets)), view)))
+    }
   }
 
   /** Create the table at `dir` from `df`, keyed (and hash-bucketed) by
@@ -3546,11 +3655,6 @@ object MergeTable {
     mergeWithHook(spark, dir, source, matched, notMatched,
       notMatchedBySource, idempotencyToken, () => ())
 
-  /** [[merge]] with the spec-only injection point between epoch write
-    * and manifest promotion — the window a concurrent committer
-    * exploits; the two-streams spec plants a competing commit there to
-    * prove the retry protocol re-dispatches the clauses against the
-    * winner's snapshot with the idempotency token intact. */
   /** [[merge]] with MERGE-ON-READ writes: same clause algebra, but
     * changed/deleted target rows TOMBSTONE (deletion vectors) and
     * updated/inserted rows land as a small APPEND epoch — zero
@@ -3567,6 +3671,11 @@ object MergeTable {
     mergeWithHook(spark, dir, source, matched, notMatched,
       notMatchedBySource, idempotencyToken, () => (), mor = true)
 
+  /** [[merge]] with the spec-only injection point between epoch write
+    * and manifest promotion — the window a concurrent committer
+    * exploits; the two-streams spec plants a competing commit there to
+    * prove the retry protocol re-dispatches the clauses against the
+    * winner's snapshot with the idempotency token intact. */
   private[graft] def mergeWithHook(spark: SparkSession, dir: String,
       source: DataFrame,
       matched: Seq[MergeWhen],
@@ -3796,16 +3905,6 @@ object MergeTable {
     (last, props.getOrElse(Map.empty))
   }
 
-  /** OPTIMIZE — a contents-invariant, layout-changing version: rewrite
-    * every bucket with rows sorted by `sortCol` (so parquet row-group
-    * min/max stats prune scans on that column WITHIN each hash bucket —
-    * the Layout.zOrderWrite discipline applied inside the table format)
-    * and commit it as a normal snapshot. Readers at older versions are
-    * untouched; the rewrite is priced like any other epoch
-    * (filesWritten = non-empty buckets) and reclaimed by [[vacuum]].
-    * Contents-invariance is the q92/q124 contract: q146 holds the
-    * optimized table to the SAME oracle as the unoptimized q140
-    * state. */
   /** Validate + normalize an OPTIMIZE bucket scope against the table's
     * width; None = whole table. A malformed id is a loud error (a
     * typo'd scope silently rewriting nothing would read as "compacted"
@@ -3823,7 +3922,18 @@ object MergeTable {
       norm
     }
 
-  /** OPTIMIZE, optionally PARTITION-SELECTIVE (`buckets` — the Delta
+  /** OPTIMIZE — a contents-invariant, layout-changing version: rewrite
+    * every bucket with rows sorted by `sortCol` (so parquet row-group
+    * min/max stats prune scans on that column WITHIN each hash bucket —
+    * the Layout.zOrderWrite discipline applied inside the table format)
+    * and commit it as a normal snapshot. Readers at older versions are
+    * untouched; the rewrite is priced like any other epoch
+    * (filesWritten = non-empty buckets) and reclaimed by [[vacuum]].
+    * Contents-invariance is the q92/q124 contract: q146 holds the
+    * optimized table to the SAME oracle as the unoptimized q140
+    * state.
+    *
+    * OPTIMIZE is optionally PARTITION-SELECTIVE (`buckets` — the Delta
     * `OPTIMIZE … WHERE` shape over the table's hash-bucket layout): a
     * 100 TB table compacts INCREMENTALLY, a few buckets per run, and
     * out-of-scope buckets' files are carried into the new manifest
@@ -4405,39 +4515,6 @@ object MergeTable {
       keep.size.toLong)
   }
 
-  /** CHANGEFEED (CDC OUT) — the row-level diff between two committed
-    * versions, classified insert/update/delete, WITHOUT scanning the
-    * table: the two manifests carry a CONTENT FINGERPRINT per bucket
-    * (row count + order-independent payload hash, written at commit
-    * time), so any bucket whose fingerprint is IDENTICAL in both
-    * versions provably holds identical rows and is skipped before a
-    * single byte is read — the diff scans only the buckets some
-    * intervening commit actually CHANGED. Crucially that makes
-    * layout-only maintenance FREE to diff across: [[optimize]] and
-    * [[optimizeZOrder]] rewrite every file but move no row, their
-    * fingerprints compare equal, and a changefeed window straddling
-    * them contributes ZERO changed buckets instead of a table-sized
-    * full-outer join (the manifest-metadata trick Iceberg's
-    * incremental reads play, extended from file identity to content
-    * identity). Changed buckets join full-outer on the key: only-new →
-    * insert, only-old → delete, both-but-payload-differs → update;
-    * payload-identical rows inside a rewritten bucket (the batch's
-    * collateral neighbors) drop out. Cost: O(changed buckets' rows) +
-    * two manifest reads — a changefeed over a quiet 100 TB table is
-    * near-free regardless of its size, even the night after OPTIMIZE.
-    *
-    * [[rebucket]] invalidates bucket IDENTITY (every key re-hashes),
-    * but not content identity: the per-bucket fingerprints are
-    * ADDITIVE (count sum + hash sum), so their TABLE-LEVEL total is
-    * invariant under re-hashing rows into different buckets. A window
-    * whose endpoints disagree on width but agree on the total is a
-    * contents-invariant migration and diffs to ZERO buckets — a
-    * rebucket-only window is as CDC-free as an OPTIMIZE-only one.
-    * Only a window containing BOTH a width change and real row
-    * changes degrades to the keyed full diff — still row-correct
-    * (the rebucket-boundary spec pins the classifications), but
-    * O(table); [[graft.ingest.ChangefeedRunner]] warns loudly when a
-    * publish window pays that. */
   /** Buckets whose CONTENT differs between two versions — the set a
     * version diff must scan; every other bucket is skipped unread.
     * Compared by manifest fingerprint where both versions carry one
@@ -4507,6 +4584,39 @@ object MergeTable {
   private def fpRows(total: String): Long =
     total.split(":")(0).toLong
 
+  /** CHANGEFEED (CDC OUT) — the row-level diff between two committed
+    * versions, classified insert/update/delete, WITHOUT scanning the
+    * table: the two manifests carry a CONTENT FINGERPRINT per bucket
+    * (row count + order-independent payload hash, written at commit
+    * time), so any bucket whose fingerprint is IDENTICAL in both
+    * versions provably holds identical rows and is skipped before a
+    * single byte is read — the diff scans only the buckets some
+    * intervening commit actually CHANGED. Crucially that makes
+    * layout-only maintenance FREE to diff across: [[optimize]] and
+    * [[optimizeZOrder]] rewrite every file but move no row, their
+    * fingerprints compare equal, and a changefeed window straddling
+    * them contributes ZERO changed buckets instead of a table-sized
+    * full-outer join (the manifest-metadata trick Iceberg's
+    * incremental reads play, extended from file identity to content
+    * identity). Changed buckets join full-outer on the key: only-new →
+    * insert, only-old → delete, both-but-payload-differs → update;
+    * payload-identical rows inside a rewritten bucket (the batch's
+    * collateral neighbors) drop out. Cost: O(changed buckets' rows) +
+    * two manifest reads — a changefeed over a quiet 100 TB table is
+    * near-free regardless of its size, even the night after OPTIMIZE.
+    *
+    * [[rebucket]] invalidates bucket IDENTITY (every key re-hashes),
+    * but not content identity: the per-bucket fingerprints are
+    * ADDITIVE (count sum + hash sum), so their TABLE-LEVEL total is
+    * invariant under re-hashing rows into different buckets. A window
+    * whose endpoints disagree on width but agree on the total is a
+    * contents-invariant migration and diffs to ZERO buckets — a
+    * rebucket-only window is as CDC-free as an OPTIMIZE-only one.
+    * Only a window containing BOTH a width change and real row
+    * changes degrades to the keyed full diff — still row-correct
+    * (the rebucket-boundary spec pins the classifications), but
+    * O(table); [[graft.ingest.ChangefeedRunner]] warns loudly when a
+    * publish window pays that. */
   def changes(spark: SparkSession, dir: String, fromV: Long,
       toV: Long): DataFrame = {
     val key = keyMeta(spark, dir, None)
@@ -4671,13 +4781,6 @@ object MergeTable {
   private def runLifecycle(s: SparkSession, dir: String,
       tag: String): String = runLifecycleStats(s, dir, tag)._1
 
-  /** q140 — the COW upsert LIFECYCLE, gated on the full final table
-    * state: create from orders, apply two overlapping absolute-row
-    * batches, dump every row (key, cust, status, cents, bucket). The
-    * oracle rebuilds the final state straight from orders with CASE
-    * arithmetic + the insert union + the md5 bucket restatement —
-    * latest-wins sequencing, insert placement, and bucket assignment
-    * are all hash-gated row for row. */
   /** The lifecycle's final-state oracle, shared verbatim by q140 (the
     * plain lifecycle) and q146 (lifecycle + OPTIMIZE) — the
     * rewrite-proven-result-identical discipline of q92/q124: optimize
@@ -4710,6 +4813,13 @@ object MergeTable {
       .select("key", "cust", "status", "cents", "bucket")
       .orderBy("key")
 
+  /** q140 — the COW upsert LIFECYCLE, gated on the full final table
+    * state: create from orders, apply two overlapping absolute-row
+    * batches, dump every row (key, cust, status, cents, bucket). The
+    * oracle rebuilds the final state straight from orders with CASE
+    * arithmetic + the insert union + the md5 bucket restatement —
+    * latest-wins sequencing, insert placement, and bucket assignment
+    * are all hash-gated row for row. */
   private val q140CowUpsert = QueryDef(
     (s, dir) => lifecycleState(s, memoLifecycle(s, dir)._1),
     lifecycleStateSql(HEX_DIGITS))

@@ -32,6 +32,10 @@ import org.apache.spark.paths.SparkPath
   *
   * Eligibility is the plan itself — no option, no size threshold: the
   * bucket pin bounds the read by MergeTable's table-sized bucket width.
+  * A prepared lookup ([[MergeTableLookup]], from SQL or
+  * [[graft.ext.MergeTable.readKeys]]) plans to the same shape through
+  * `FileSourceStrategy`, with its bucket conjunct as the partition
+  * filter, and is wrapped by this same matcher.
   *
   * Registration: injected by [[graft.GraftExtensions]] as a columnar
   * rule's pre-transition pass — the one physical-plan hook Spark runs

@@ -22,7 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * of every file in the snapshot. A lookup so pruned to a single
   * bucket then collects on the DRIVER, without a Spark job
   * ([[DriverLookup]]): one bucket's files are too small to pay for
-  * scheduling a task.
+  * scheduling a task. A SQL `merge_table` key lookup of the prepared
+  * shape, and [[graft.ext.MergeTable.readKeys]], never reach this rule:
+  * they arrive as one [[MergeTableLookup]] leaf whose fragment already
+  * carries the same `bucket` conjunct, computed by [[bucketOf]].
   *
   * The key ↔ bucket contract travels IN THE PARQUET FOOTERS: the
   * table's write path stamps the key column's field metadata with the
@@ -68,9 +71,8 @@ object KeyToBucketPruning extends Rule[LogicalPlan] with PredicateHelper {
   /** Driver-side restatement of the write path's
     * `substring(md5(cast(key as string)), 1, hex)`. */
   private[graft] def bucketOf(keyAsString: String, hex: Int): String =
-    MessageDigest.getInstance("MD5")
-      .digest(keyAsString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(hex)
+    java.util.HexFormat.of().formatHex(MessageDigest.getInstance("MD5")
+      .digest(keyAsString.getBytes("UTF-8"))).take(hex)
 
   /** Spark's CAST(key AS STRING) for the supported key types; None =
     * unsupported (floating/decimal/date render differently — the rule

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute,
   AttributeReference, Expression}
-import org.apache.spark.sql.catalyst.parser.ParserInterface
+import org.apache.spark.sql.catalyst.parser.{ParameterContext,
+  ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
@@ -44,7 +45,13 @@ import graft.ext.MergeTable
   * Recognition is conservative: the statement must match the shape
   * END-TO-END (anchored regex over the whole text) or it is delegated
   * — a table named `optimize` or a column named `vacuum` parses
-  * exactly as before. */
+  * exactly as before.
+  *
+  * Every other statement is parsed by the delegate, and a plan whose
+  * top is a `merge_table` key lookup comes back as the prepared leaf
+  * ([[PreparedLookup]], resolved to a [[MergeTableLookup]] in
+  * analysis); the match reads the parsed plan, not the text, and does
+  * no I/O. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   // optional partition scope, the Delta `OPTIMIZE … WHERE` position:
@@ -155,7 +162,20 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     keys
   }
 
-  override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
+  override def parsePlan(sqlText: String): LogicalPlan =
+    statement(sqlText).getOrElse(
+      PreparedLookup.prepare(delegate.parsePlan(sqlText)))
+
+  /** The entry point `spark.sql` calls: parameters stay the
+    * delegate's to bind. */
+  override def parsePlanWithParameters(sqlText: String,
+      params: ParameterContext): LogicalPlan =
+    statement(sqlText).getOrElse(PreparedLookup.prepare(
+      delegate.parsePlanWithParameters(sqlText, params)))
+
+  /** One of this parser's own statements, or None. */
+  private def statement(sqlText: String): Option[LogicalPlan] =
+    Some(sqlText match {
     case OptimizeSort(dir, where, col, stripe) =>
       GraftOptimizeCommand(dir, Left(col),
         Option(stripe).map(_.toLong), scopeOf(where))
@@ -216,8 +236,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case ShowProps(dir) => GraftShowPropertiesCommand(dir)
     case WidenCol(dir, column, tpe) =>
       GraftWidenColumnCommand(dir, column, tpe.trim)
-    case _ => delegate.parsePlan(sqlText)
-  }
+    case _ => return None
+  })
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)

@@ -50,15 +50,20 @@ import graft.ext.StatBound
   * Everything off-pattern keeps the file or silences the rule
   * entirely: a file without stats (legacy manifest, post-evolution
   * column), an unsupported or kind-mismatched literal, a non-MergeTable
-  * scan (the `<dir>/data/v=…/bucket=…` path shape plus `_manifests`
-  * and `_graft_meta` must all be present), a relation whose files span
-  * two table dirs. The rewrite swaps ONLY the file index — same
+  * scan (a `bucket` partition column, the footer key stamp and the
+  * `<dir>/data/v=…/bucket=…` path shape must all be present, checked
+  * in that order and before any file system call), a relation whose
+  * files span two table dirs. The rewrite swaps ONLY the file index — same
   * schema, same output attribute ids, condition kept for row-level
   * evaluation — so the rule can never change results, only the files
   * scheduled.
   *
-  * Registration: injected by [[graft.GraftExtensions]], or per-session
-  * via [[StatsFilePruning.enable]]. */
+  * Registration: injected by [[graft.GraftExtensions]] as a pre-CBO
+  * rule, which Spark runs once per plan after the operator batches
+  * have pushed every filter onto its relation, or per-session via
+  * [[StatsFilePruning.enable]]. A prepared lookup
+  * ([[MergeTableLookup]]) reaches the optimizer as one leaf, so the
+  * rule has nothing to match in it. */
 object StatsFilePruning extends Rule[LogicalPlan] with PredicateHelper {
 
   private val EntryPath = "^(.*)/data/(v=[^/]+/bucket=[^/]+/[^/]+)$".r
@@ -281,6 +286,13 @@ object StatsFilePruning extends Rule[LogicalPlan] with PredicateHelper {
       lr: LogicalRelation, hfs: HadoopFsRelation): LogicalPlan = {
     val rs = ranges(cond, lr)
     if (rs.isEmpty) return f
+    // a MergeTable relation is known by its layout and key stamp, as
+    // DriverLookup knows it: every other scan leaves before any path
+    // is matched or any file system is asked
+    if (!hfs.partitionSchema.fieldNames.contains(
+          KeyToBucketPruning.BucketColName) ||
+        !hfs.dataSchema.exists(_.metadata.contains(
+          KeyToBucketPruning.KeyHexMeta))) return f
     val files = hfs.location.inputFiles
     if (files.isEmpty) return f
     // cheap shape probe FIRST: a foreign parquet scan must reject on
@@ -300,10 +312,8 @@ object StatsFilePruning extends Rule[LogicalPlan] with PredicateHelper {
     if (dirs.length != 1) return f
     val dir = dirs.head
     val spark = hfs.sparkSession
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(dir, "_manifests")) ||
-        !fs.exists(new Path(dir, "_graft_meta"))) return f
+    // a directory without manifests has no stats and no blooms, so
+    // nothing below can drop a file
     val stats = graft.ext.MergeTable.fileStatsIndex(spark, dir)
     // BLOOM skipping: an attested file drops when EVERY value of some
     // equality conjunct provably misses its filter (all-probe-bits
