@@ -45,19 +45,6 @@ object Skew {
     saltedProbe.join(replicatedBuild, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** HYBRID hot-key salted join — the production refinement of
-    * [[saltedJoin]], whose whole-build replication is `salts`× the
-    * ENTIRE build side: at 100 TB with a large build table that is a new
-    * bottleneck, not a mitigation. Here the probe side's key histogram
-    * (one map-side-combinable count aggregation) decides which keys are
-    * actually hot (count > `hotThreshold`); ONLY those go through the
-    * salted path — replicating just the hot slice of the build side,
-    * ≤ |probe|/hotThreshold keys by construction, broadcast-small — and
-    * every other row takes the plain equi-join Spark would have planned
-    * anyway. Build replication becomes `salts` × (hot-key build rows)
-    * instead of `salts` × |build|; the result is EXACTLY the plain join
-    * (the two probe slices partition the probe rows, and each joins the
-    * full set of its keys' build rows). */
   /** Plain per-user sessionization — q29's lag/cumsum shape factored to
     * one definition (the ground truth [[chunkedSessionize]] and
     * [[hybridChunkedSessionize]] must equal): flag gap-starts with lag()
@@ -191,6 +178,19 @@ object Skew {
       .unionByName(sessionize(coldEvents, gapSec))
   }
 
+  /** HYBRID hot-key salted join — the production refinement of
+    * [[saltedJoin]], whose whole-build replication is `salts`× the
+    * ENTIRE build side: at 100 TB with a large build table that is a new
+    * bottleneck, not a mitigation. Here the probe side's key histogram
+    * (one map-side-combinable count aggregation) decides which keys are
+    * actually hot (count > `hotThreshold`); ONLY those go through the
+    * salted path — replicating just the hot slice of the build side,
+    * ≤ |probe|/hotThreshold keys by construction, broadcast-small — and
+    * every other row takes the plain equi-join Spark would have planned
+    * anyway. Build replication becomes `salts` × (hot-key build rows)
+    * instead of `salts` × |build|; the result is EXACTLY the plain join
+    * (the two probe slices partition the probe rows, and each joins the
+    * full set of its keys' build rows). */
   def hybridSaltedJoin(probe: DataFrame, build: DataFrame, key: String,
       saltSource: Column, salts: Int, hotThreshold: Long,
       maxHotKeys: Int = 1 << 20): DataFrame = {

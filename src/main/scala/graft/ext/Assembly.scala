@@ -209,14 +209,6 @@ object Assembly {
       |  ) * 1000000) / 1000000 AS score
       |FROM t, g ORDER BY score DESC, doc_id LIMIT 50""")
 
-  /** The curation pipeline as ONE declarative query — exact dedup →
-    * marker language-ID → quality gate → length gate → reproducible
-    * split, i.e. the operator families q30/q36/q37/q56 composed the way
-    * a production corpus-curation DAG actually runs them. Single logical
-    * pass: one window shuffle on the content fingerprint (dedup), then
-    * pure per-row expressions; Catalyst pipelines the whole filter chain
-    * into the scan stage. Thresholds (quality ≥ 0.5, 10–200 tokens,
-    * 12/16 train) are the pipeline's config surface. */
   /** The per-row gate chain of the curation pipeline (lang-ID → quality
     * gate → length gate → reproducible split) over any (doc_id, lang,
     * text) relation — batch OR streaming: every gate is a pure per-row
@@ -249,6 +241,14 @@ object Assembly {
       .select("doc_id", "lang", "n_tokens", "quality", "split")
   }
 
+  /** The curation pipeline as ONE declarative query — exact dedup →
+    * marker language-ID → quality gate → length gate → reproducible
+    * split, i.e. the operator families q30/q36/q37/q56 composed the way
+    * a production corpus-curation DAG actually runs them. Single logical
+    * pass: one window shuffle on the content fingerprint (dedup), then
+    * pure per-row expressions; Catalyst pipelines the whole filter chain
+    * into the scan stage. Thresholds (quality ≥ 0.5, 10–200 tokens,
+    * 12/16 train) are the pipeline's config surface. */
   private val q68CurationPipeline = QueryDef(
     (s, dir) => {
       val wDedup = Window.partitionBy(md5(col("text"))).orderBy("doc_id")

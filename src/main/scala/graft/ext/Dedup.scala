@@ -379,26 +379,6 @@ object Dedup {
       |SELECT a_id, b_id, round(c, 6) AS cosine
       |FROM p WHERE c >= 0.4 ORDER BY a_id, b_id""")
 
-  /** Multi-probe near-dup pair join — q74's Hamming-1 probe ball applied
-    * to q55's PAIR join, the recall lever q78 proved necessary: at the
-    * 0.4 cosine bar single-bucket LSH co-buckets only ~16% of true pairs
-    * ((1−θ/π)^planes theory, measured 0.17–0.22), because a planes-bit
-    * sign signature splits similar-but-not-identical vectors across
-    * adjacent buckets. Probing each vector's home bucket PLUS every
-    * one-bit flip admits any pair whose signatures differ by ≤ 1
-    * hyperplane — measured pair recall rises 2.6–3.4× (0.58 at sf0.01) for
-    * (planes+1)× candidate cost, still a vanishing corpus fraction
-    * ((planes+1)/2^planes, shrinking as planes grow with N).
-    *
-    * Scale shape: the probe side explodes to planes+1 rows per vector
-    * and the join stays an EQUI-join on the integer bucket (shuffle
-    * hash — never a theta/cross join), so the plan is q55's with
-    * (planes+1)× map-side fan-out. Each qualifying pair matches on
-    * EXACTLY one probe (signatures at Hamming distance d agree with the
-    * probe set for d=0 via the home probe, d=1 via that bit's flip, and
-    * never twice), so no post-join dedup is needed — the pair set is
-    * exactly {(a,b) : hamming(sig_a, sig_b) ≤ 1, cosine ≥ 0.4}, which is
-    * what the DuckDB oracle states declaratively via BIGINT xor. */
   /** ID-ONLY PROBE EXCHANGE — the scale discipline of this whole family:
     * the exploded probe side carries (a_id, probe_bucket) and NOTHING
     * else, so the (planes+1)× map-side fan-out replicates ~12 bytes/row,
@@ -475,6 +455,26 @@ object Dedup {
       |    ON a.vec_id < b.vec_id
       |   AND bit_count(xor(a.bucket, b.bucket)) <= 1)""".stripMargin
 
+  /** Multi-probe near-dup pair join — q74's Hamming-1 probe ball applied
+    * to q55's PAIR join, the recall lever q78 proved necessary: at the
+    * 0.4 cosine bar single-bucket LSH co-buckets only ~16% of true pairs
+    * ((1−θ/π)^planes theory, measured 0.17–0.22), because a planes-bit
+    * sign signature splits similar-but-not-identical vectors across
+    * adjacent buckets. Probing each vector's home bucket PLUS every
+    * one-bit flip admits any pair whose signatures differ by ≤ 1
+    * hyperplane — measured pair recall rises 2.6–3.4× (0.58 at sf0.01) for
+    * (planes+1)× candidate cost, still a vanishing corpus fraction
+    * ((planes+1)/2^planes, shrinking as planes grow with N).
+    *
+    * Scale shape: the probe side explodes to planes+1 rows per vector
+    * and the join stays an EQUI-join on the integer bucket (shuffle
+    * hash — never a theta/cross join), so the plan is q55's with
+    * (planes+1)× map-side fan-out. Each qualifying pair matches on
+    * EXACTLY one probe (signatures at Hamming distance d agree with the
+    * probe set for d=0 via the home probe, d=1 via that bit's flip, and
+    * never twice), so no post-join dedup is needed — the pair set is
+    * exactly {(a,b) : hamming(sig_a, sig_b) ≤ 1, cosine ≥ 0.4}, which is
+    * what the DuckDB oracle states declaratively via BIGINT xor. */
   private val q79NeardupMultiprobe = QueryDef(
     (s, dir) => multiProbePairs(s, dir).orderBy("a_id", "b_id"),
     s"""WITH $multiProbePairSql
@@ -1193,34 +1193,6 @@ object Dedup {
       |       END AS inflation
       |FROM ag ORDER BY source""".stripMargin)
 
-  /** EXACT repeated-substring EXCISION — the suffix-array dedup of
-    * "Deduplicating Training Data Makes Language Models Better" (Lee et
-    * al., ACL 2022, public) re-expressed as Spark dataflow: any ≥8-token
-    * run that appears VERBATIM in more than one document is cut out of
-    * every document mid-paragraph, and maximal overlapping repeats merge
-    * into single excised spans. This is the sub-segment-granularity op
-    * the rest of the family cannot express: q105 tiles FIXED 3-word
-    * segments (a repeat offset by one word straddles two tiles and
-    * survives), q107 flags chunks, q58/q69 flag docs — none excises at
-    * token positions.
-    *
-    * Dataflow (suffix arrays don't distribute; overlapping shingles +
-    * interval algebra do, same observation as the paper's own MinHash
-    * fallback): (1) every token position opens an 8-token shingle,
-    * md5-fingerprinted; (2) one fp-keyed shuffle computes cross-doc
-    * document frequency, df ≥ 2 marks the shingle start duplicated
-    * (left_semi back — flags travel as (doc, position) pairs, never
-    * text); (3) a position is COVERED iff some duplicated shingle
-    * starting in the previous 8 positions spans it — a windowed
-    * running max over the per-doc position order; (4) covered runs
-    * merge into maximal spans by the lag-boundary trick (q29's
-    * sessionization shape on token positions); (5) per doc: counts,
-    * span count, removed ratio, and the md5 of the CLEANED text
-    * (surviving tokens rejoined in order — the q105 reconstruction
-    * discipline, so the oracle proves the excision itself, not just
-    * its bookkeeping). Two shuffles total (fp-keyed df, doc-keyed
-    * window+agg), both linear in corpus tokens at 100 TB; per-doc
-    * window state is bounded by document length. */
   /** (doc_id, t, word) token positions (1-based) of a (doc_id, text)
     * frame — the q134 family's row shape. */
   private[graft] def docTokens(docs: DataFrame): DataFrame =
@@ -1290,6 +1262,34 @@ object Dedup {
         .orderBy("doc_id")
   }
 
+  /** EXACT repeated-substring EXCISION — the suffix-array dedup of
+    * "Deduplicating Training Data Makes Language Models Better" (Lee et
+    * al., ACL 2022, public) re-expressed as Spark dataflow: any ≥8-token
+    * run that appears VERBATIM in more than one document is cut out of
+    * every document mid-paragraph, and maximal overlapping repeats merge
+    * into single excised spans. This is the sub-segment-granularity op
+    * the rest of the family cannot express: q105 tiles FIXED 3-word
+    * segments (a repeat offset by one word straddles two tiles and
+    * survives), q107 flags chunks, q58/q69 flag docs — none excises at
+    * token positions.
+    *
+    * Dataflow (suffix arrays don't distribute; overlapping shingles +
+    * interval algebra do, same observation as the paper's own MinHash
+    * fallback): (1) every token position opens an 8-token shingle,
+    * md5-fingerprinted; (2) one fp-keyed shuffle computes cross-doc
+    * document frequency, df ≥ 2 marks the shingle start duplicated
+    * (left_semi back — flags travel as (doc, position) pairs, never
+    * text); (3) a position is COVERED iff some duplicated shingle
+    * starting in the previous 8 positions spans it — a windowed
+    * running max over the per-doc position order; (4) covered runs
+    * merge into maximal spans by the lag-boundary trick (q29's
+    * sessionization shape on token positions); (5) per doc: counts,
+    * span count, removed ratio, and the md5 of the CLEANED text
+    * (surviving tokens rejoined in order — the q105 reconstruction
+    * discipline, so the oracle proves the excision itself, not just
+    * its bookkeeping). Two shuffles total (fp-keyed df, doc-keyed
+    * window+agg), both linear in corpus tokens at 100 TB; per-doc
+    * window state is bounded by document length. */
   private val q134SubstringDedup = QueryDef(
     (s, dir) => substringExcise(Tables(s, dir, "documents"), k = 8),
     """WITH w AS (SELECT doc_id, string_split(text, ' ') AS l

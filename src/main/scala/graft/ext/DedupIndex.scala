@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental exact-dedup index — the production form of q30 for the
   * reference's incremental path (SURVEY §2.3: hourly cron, only new
@@ -19,10 +20,12 @@ import org.apache.spark.sql.functions._
   * double-checks both the index and the in-batch window; a dup index
   * row only costs probe space and is ignored by the anti-join).
   *
-  * Scale shape: the index probe is a hash join keyed on the 128-bit
-  * digest (never text); the in-batch dedup is q30's window. At real
-  * scale the index table is bucketed by fp so the probe join co-locates
-  * without a shuffle of the (much larger) index side.
+  * Scale shape: the index probe is keyed on the 128-bit digest, never
+  * the text; the in-batch dedup is q30's window. A batch already on the
+  * driver probes with one `fp IN` scan; any other batch takes a hash
+  * anti-join (see [[admit]]). At real scale the index table is bucketed
+  * by fp so the probe co-locates without a shuffle of the (much larger)
+  * index side.
   */
 object DedupIndex {
 
@@ -42,8 +45,59 @@ object DedupIndex {
   /** Admit the not-seen-before documents of `batch` against the index at
     * `indexDir`, append their fingerprints, and return the admitted rows
     * (with their `fp`). Duplicate texts WITHIN the batch collapse to the
-    * min doc_id, exactly like q30. */
+    * min doc_id, exactly like q30. Its jobs run under the `graft.op`
+    * label `dedup.exact_admit`.
+    *
+    * Scale shape: a batch already on the driver (every leaf of its
+    * optimized plan a local relation; see [[DriverBatch]]) takes the
+    * driver path. Its md5 fingerprints fold on the driver, the window's
+    * min-id collapse runs over O(batch) driver rows, one index scan
+    * pre-filtered by `fp IN (batch fps)` returns the known
+    * fingerprints, and one append writes one file; no checkpoint, no
+    * shuffle. A batch read from files, tables or a stream (the streaming
+    * twin's micro-batches, q85, q95, q126) keeps the relational path
+    * below: the window and a hash anti-join keyed on the 128-bit digest,
+    * one checkpoint, one append per task. */
   def admit(spark: SparkSession, indexDir: String,
+      batch: DataFrame): DataFrame =
+    graft.core.OpLabel(spark, "dedup.exact_admit") {
+      DriverBatch.of(batch) match {
+        case Some(local) => admitOnDriver(spark, indexDir, local)
+        case None => admitRelational(spark, indexDir, batch)
+      }
+    }
+
+  private def admitOnDriver(spark: SparkSession, indexDir: String,
+      batch: DataFrame): DataFrame = {
+    val fingerprinted = batch.withColumn("fp", md5(col("text")))
+    val rows = fingerprinted.collect() // a local projection: no job
+    val schema = fingerprinted.schema
+    val fpAt = schema.fieldIndex("fp")
+    val idAt = schema.fieldIndex("doc_id")
+    // q30's window: per fp the first row by doc_id, nulls first
+    val canonical = rows.indices.groupBy(i => rows(i).getString(fpAt))
+      .values.map(_.minBy(i => Option(rows(i).get(idAt))
+        .map(_.asInstanceOf[Number].longValue)))
+      .toSet
+    val fps = canonical.toSeq.flatMap(i => Option(rows(i).getString(fpAt)))
+    val known =
+      if (fps.isEmpty || !exists(spark, indexDir)) Set.empty[String]
+      else readIndex(spark, indexDir).filter(col("fp").isin(fps: _*))
+        .select("fp").collect().map(_.getString(0)).toSet
+    val admitted = rows.indices.filter(i => canonical(i) &&
+      !known(rows(i).getString(fpAt))).map(rows(_))
+    if (admitted.nonEmpty)
+      DriverBatch.clustered(spark, StructType(Seq(schema(fpAt),
+          schema(idAt).copy(name = "canonical_id"))),
+        Seq(admitted.map(r => Row(r.get(fpAt), r.get(idAt)))))
+        .write.mode("append").parquet(indexDir)
+    // the relational path's column order: the USING key first
+    val order = fpAt +: schema.indices.filter(_ != fpAt)
+    DriverBatch.frame(spark, admitted.map(r => Row.fromSeq(order.map(r.get))),
+      StructType(order.map(schema(_))))
+  }
+
+  private def admitRelational(spark: SparkSession, indexDir: String,
       batch: DataFrame): DataFrame = {
     val fingerprinted = batch.withColumn("fp", md5(col("text")))
     // in-batch dedup first (q30's canonical window), then the index probe
@@ -189,6 +243,12 @@ object DedupIndex {
       org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("canonical_id",
       org.apache.spark.sql.types.LongType)))
+
+  /** Whether anything is stored at `indexDir` yet. */
+  private[ext] def exists(spark: SparkSession, indexDir: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(indexDir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+  }
 
   /** The current index (empty relation when no run has committed yet). */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =

@@ -119,11 +119,40 @@ object IvfPqIndex {
     * `indexDir/batch=<runId>/` — idempotent per run id, so a replay
     * rewrites the same rows instead of appending duplicates. Returns
     * the written (vec_id, codes, cell) rows. Throws if [[create]]
-    * never ran, or on the reserved runId -1 (the compacted epoch). */
+    * never ran, or on the reserved runId -1 (the compacted epoch). Its
+    * jobs run under the `graft.op` label `ivfpq.add`.
+    *
+    * Scale shape: a batch already on the driver (see [[DriverBatch]])
+    * takes the driver path: the grid, residual and PQ-code projections
+    * fold on the driver over O(batch) rows, and one write puts one file
+    * per cell; no checkpoint, no shuffle. A batch read from files,
+    * tables or a stream (the streaming twin's micro-batches, q97,
+    * `ScaleProbe`) keeps the relational path: a spread grid frame and a
+    * residual frame, each checkpointed, the coded rows checkpointed, and
+    * a shuffle by cell before the write. */
   def add(spark: SparkSession, indexDir: String, batch: DataFrame,
       runId: Long): DataFrame =
-    addFromGrid(spark, indexDir, Similarity.gridFrame(spark, batch),
-      runId)
+    graft.core.OpLabel(spark, "ivfpq.add") {
+      DriverBatch.of(batch) match {
+        case Some(local) => addOnDriver(spark, indexDir, local, runId)
+        case None => addFromGrid(spark, indexDir,
+          Similarity.gridFrame(spark, batch), runId)
+      }
+    }
+
+  private def addOnDriver(spark: SparkSession, indexDir: String,
+      batch: DataFrame, runId: Long): DataFrame = {
+    require(runId >= 0, "runId -1 is reserved for the compacted epoch")
+    val Codebooks(coarse, subcents) = readMeta(spark, indexDir)
+    val coded = Similarity.pqCodes(Similarity.residualProjection(coarse,
+        Similarity.gridProjection(batch)), subcents)
+      .select("vec_id", "codes", "cell")
+    val rows = coded.collect().toSeq // local projections: no job
+    DriverBatch.clustered(spark, coded.schema, rows.groupBy(_.get(2)).values)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$indexDir/batch=$runId")
+    DriverBatch.frame(spark, rows, coded.schema)
+  }
 
   private def addFromGrid(spark: SparkSession, indexDir: String,
       eg: DataFrame, runId: Long): DataFrame = {

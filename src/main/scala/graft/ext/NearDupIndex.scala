@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType,
   LongType, StructField, StructType}
@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType,
   *  5. the admitted survivors are appended to the index, so a retry of a
   *     failed run re-derives the same buckets deterministically.
   *
+  * A batch already on the driver runs the same five steps over
+  * driver-held rows, with one pruned probe scan and one append (see
+  * [[admit]]).
+  *
   * `planes` is part of the index's identity: bucket keys must be stable
   * across runs, so it is fixed at index creation and PERSISTED in a
   * `_graft_meta` file next to the index data. Every admit checks it and
@@ -45,10 +49,69 @@ object NearDupIndex {
 
   /** Admit the vectors of `batch` (vec_id, embedding) that have no
     * verified near-dup (cosine ≥ `bar`) in the index or among
-    * smaller-id batch members; append them to the index; return them. */
+    * smaller-id batch members; append them to the index; return them.
+    * Its jobs run under the `graft.op` label `dedup.vec_admit`.
+    *
+    * Scale shape: a batch already on the driver (see [[DriverBatch]])
+    * takes the driver path. Buckets fold on the driver (O(batch) rows),
+    * and the driver builds the Hamming-1 probe ball, at most
+    * O(2^planes) buckets. ONE job scans the index with that ball as a
+    * static `bucket IN` partition filter, unioned with the batch's own
+    * postings, verifies each candidate with the codegen cosine against
+    * the batch's probe rows planted as a map literal, and returns only
+    * the rejected ids. One append writes one file per touched bucket;
+    * no checkpoint, no shuffle. A batch read from files, tables or a
+    * stream (the streaming twin's micro-batches, q84, q92) keeps the
+    * relational path below. */
   def admit(spark: SparkSession, indexDir: String, batch: DataFrame,
-      planes: Int, bar: Double = 0.9): DataFrame = {
-    checkPlanesMeta(spark, indexDir, planes)
+      planes: Int, bar: Double = 0.9): DataFrame =
+    graft.core.OpLabel(spark, "dedup.vec_admit") {
+      checkPlanesMeta(spark, indexDir, planes)
+      DriverBatch.of(batch) match {
+        case Some(local) => admitOnDriver(spark, indexDir, local, planes, bar)
+        case None => admitRelational(spark, indexDir, batch, planes, bar)
+      }
+    }
+
+  private def admitOnDriver(spark: SparkSession, indexDir: String,
+      batch: DataFrame, planes: Int, bar: Double): DataFrame = {
+    val b = batch.select(col("vec_id"), col("embedding"),
+      graft.functions.HyperplaneBucket.bucket(col("embedding"), planes)
+        .as("bucket"))
+    val rows = b.collect().toSeq // a local projection: no job
+    val schema = b.schema
+    // Hamming-0/1 probe ball per batch vector (q79's recall discipline)
+    val probes = rows.filter(r => !r.isNullAt(2)).flatMap { r =>
+      val home = r.getInt(2)
+      (home +: (0 until planes).map(p => home ^ (1 << p)))
+        .map(_ -> Row(r.get(0), r.get(1)))
+    }
+    val rejected = if (probes.isEmpty) Set.empty[Any] else {
+      val probe = DriverBatch.probes(schema("bucket").dataType,
+        StructType(Seq(schema("vec_id"), schema("embedding"))),
+        probes.groupMap(_._1: Any)(_._2))
+      val index = readIndex(spark, indexDir)
+        .filter(col("bucket").isin(probes.map(_._1).distinct: _*))
+      // the relational path's postings: the index's and the batch's own
+      val postings = index
+        .select(col("bucket").as("pb"), col("vec_id").as("i_id"),
+          col("embedding").as("i_emb"), lit(true).as("from_index"))
+        .unionByName(DriverBatch.frame(spark, rows, schema)
+          .select(col("bucket").as("pb"), col("vec_id").as("i_id"),
+            col("embedding").as("i_emb"), lit(false).as("from_index")))
+      DriverBatch.rejected(postings, probe(col("pb")), "vec_id",
+        graft.functions.CosineSimilarity.cosineSim(
+          col("p.embedding"), col("i_emb")) >= bar)
+    }
+    val admitted = rows.filterNot(r => rejected(r.get(0)))
+    if (admitted.nonEmpty)
+      DriverBatch.clustered(spark, schema, admitted.groupBy(_.get(2)).values)
+        .write.mode("append").partitionBy("bucket").parquet(indexDir)
+    DriverBatch.frame(spark, admitted, schema)
+  }
+
+  private def admitRelational(spark: SparkSession, indexDir: String,
+      batch: DataFrame, planes: Int, bar: Double): DataFrame = {
     // bucket computation is per-row dot-product work; spread narrow
     // batches (e.g. a single input split) across the cluster first
     val np = spark.sparkContext.defaultParallelism

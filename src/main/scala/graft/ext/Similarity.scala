@@ -629,31 +629,6 @@ object Similarity {
       |FROM tr LEFT JOIN sq s ON tr.q_id = s.q_id AND tr.n_id = s.n_id"""
       .stripMargin)
 
-  /** k-means codebook TRAINING — the piece q59's IVF deliberately faked
-    * (its codebook is the first 8 vectors): two Lloyd iterations that
-    * both engines compute BIT-IDENTICALLY, so even an iterative
-    * float-native algorithm stays inside the oracle gate. The trick is
-    * the same integer discipline as the LSH buckets:
-    *
-    *  - points live on the round(x·1000) integer grid (exact f32→f64
-    *    widening + one half-away-from-zero round in both engines);
-    *  - assignment is argmin of SQUARED L2 distance — pure BIGINT
-    *    sums of squares, no sqrt, no float, ties broken by cell id;
-    *  - the centroid update c' = mean(members) is rounded back to the
-    *    grid with round-half-up computed EXACTLY in integers:
-    *    c' = floordiv(2·s + n, 2·n) (s = member sum, n = count) — no
-    *    division ever happens in floating point.
-    *
-    * Output is the trained assignment: (vec_id, cell, d2, cell_size) —
-    * d2 the integer distortion each pipeline monitors (inertia), sizes
-    * the cell-balance signal that decides nprobe.
-    *
-    * Scale shape: points are (vec_id, dim, q) rows; each round is one
-    * broadcast join against the ≤ k·dims centroid table, one
-    * (vec_id, cell) partial-agg shuffle, one vec_id window, one
-    * (cell, dim) partial-agg shuffle — all map-side combinable, nothing
-    * ∝ N² anywhere. Two rounds unrolled keep lineage flat (a long
-    * k-means would localCheckpoint per round, q67's discipline). */
   /** The trained (vec_id, cell, d2) assignment after two Lloyd rounds —
     * shared by q81 (the training verdict table) and q82 (the trained-IVF
     * probe). See q81's Scaladoc for the integer-exact discipline. */
@@ -668,13 +643,19 @@ object Similarity {
   private[ext] val gridSql =
     "transform(embedding, x -> cast(round(cast(x as double) * 1000, 0) as bigint))"
 
-  /** The checkpointed (vec_id, qa) grid frame over a (vec_id,
-    * embedding) relation: round(x·1000) longs, spread across the
-    * cluster and materialized once — seed, every update round and the
-    * final assignment all read this 2-column frame instead of
-    * re-scanning + re-transforming the parquet per round. */
-  private[ext] def gridFrame(s: SparkSession, vecs: DataFrame): DataFrame =
+  /** The (vec_id, qa) grid projection of a (vec_id, embedding)
+    * relation: round(x·1000) longs, with no spread or checkpoint (over
+    * a local batch it folds on the driver; IvfPqIndex.add). */
+  private[ext] def gridProjection(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), expr(gridSql).as("qa"))
+
+  /** The checkpointed [[gridProjection]] of a (vec_id, embedding)
+    * relation, spread across the cluster and materialized once — seed,
+    * every update round and the final assignment all read this 2-column
+    * frame instead of re-scanning + re-transforming the parquet per
+    * round. */
+  private[ext] def gridFrame(s: SparkSession, vecs: DataFrame): DataFrame =
+    gridProjection(vecs)
       .repartition(s.sparkContext.defaultParallelism)
       .localCheckpoint(true)
 
@@ -795,6 +776,31 @@ object Similarity {
       |            ORDER BY d2, cell) AS rn
       |        FROM df) WHERE rn = 1)""".stripMargin
 
+  /** k-means codebook TRAINING — the piece q59's IVF deliberately faked
+    * (its codebook is the first 8 vectors): two Lloyd iterations that
+    * both engines compute BIT-IDENTICALLY, so even an iterative
+    * float-native algorithm stays inside the oracle gate. The trick is
+    * the same integer discipline as the LSH buckets:
+    *
+    *  - points live on the round(x·1000) integer grid (exact f32→f64
+    *    widening + one half-away-from-zero round in both engines);
+    *  - assignment is argmin of SQUARED L2 distance — pure BIGINT
+    *    sums of squares, no sqrt, no float, ties broken by cell id;
+    *  - the centroid update c' = mean(members) is rounded back to the
+    *    grid with round-half-up computed EXACTLY in integers:
+    *    c' = floordiv(2·s + n, 2·n) (s = member sum, n = count) — no
+    *    division ever happens in floating point.
+    *
+    * Output is the trained assignment: (vec_id, cell, d2, cell_size) —
+    * d2 the integer distortion each pipeline monitors (inertia), sizes
+    * the cell-balance signal that decides nprobe.
+    *
+    * Scale shape: points are (vec_id, dim, q) rows; each round is one
+    * broadcast join against the ≤ k·dims centroid table, one
+    * (vec_id, cell) partial-agg shuffle, one vec_id window, one
+    * (cell, dim) partial-agg shuffle — all map-side combinable, nothing
+    * ∝ N² anywhere. Two rounds unrolled keep lineage flat (a long
+    * k-means would localCheckpoint per round, q67's discipline). */
   private val q81KmeansCodebook = QueryDef(
     (s, dir) => {
       val wn = Window.partitionBy("cell")
@@ -1331,12 +1337,17 @@ object Similarity {
     * assignment and silently diverge from this identity. */
   private[ext] def residualFrame(coarse: Seq[(Int, Seq[Long])],
       eg: DataFrame): DataFrame =
+    residualProjection(coarse, eg).localCheckpoint(true)
+
+  /** [[residualFrame]]'s projection with no checkpoint (over a local
+    * batch it folds on the driver; IvfPqIndex.add). */
+  private[ext] def residualProjection(coarse: Seq[(Int, Seq[Long])],
+      eg: DataFrame): DataFrame =
     eg.withColumn("__cents", typedLit(coarse))
       .withColumn("best", expr(bestSql))
       .select(col("vec_id"), col("best.cell").as("cell"), expr(
         "zip_with(qa, filter(__cents, c -> c._1 = best.cell)[0]._2, (a, b) -> a - b)")
         .as("qa"))
-      .localCheckpoint(true)
 
   /** Query-side ADC lookup-table entries over a residual/grid column
     * `qa` and a planted sub-codebook `__pc`: one (sub, code, d2q) struct

@@ -422,24 +422,6 @@ object TextAnalytics {
       |WHERE s.doc_id % 50 <> 7
       |GROUP BY s.doc_id ORDER BY doc_id""")
 
-  /** CHUNK-level decontamination — the surgical composition of q103's
-    * sliding-window chunking with q69's two-corpus shielding: doc-level
-    * decontamination (q69) throws away an entire training document when
-    * one paragraph overlaps the eval benchmark, which at corpus scale
-    * discards real signal. Here the eval corpus' verbatim-8-gram shield
-    * is applied PER CHUNK (50 tokens, stride 40), and the verdict keeps
-    * every clean chunk of a contaminated doc: per doc, the chunk counts
-    * and the surviving clean-chunk token mass a trainer still gets.
-    * Output rows only for docs with at least one contaminated chunk
-    * (clean docs pass untouched — output ∝ contamination, q69's
-    * discipline).
-    *
-    * Scale shape: the eval shingle-hash set broadcasts (benchmarks are
-    * MBs); training chunks probe it map-side, so clean chunks never
-    * reach an exchange; the contaminated (doc_id, chunk_id) set — ∝
-    * contamination, not corpus — broadcasts back against the chunk
-    * table; one per-doc rollup. 8-byte xxhash64 keys cross the join,
-    * never shingle text (q58's discipline). */
   /** The q107 dataflow over any (doc_id, text) relation — factored out
     * so TextAnalyticsSpec can drive the clean-chunks-survive case the
     * fixture's short contaminated docs never reach (their only chunk is
@@ -482,6 +464,24 @@ object TextAnalytics {
         .orderBy("doc_id")
   }
 
+  /** CHUNK-level decontamination — the surgical composition of q103's
+    * sliding-window chunking with q69's two-corpus shielding: doc-level
+    * decontamination (q69) throws away an entire training document when
+    * one paragraph overlaps the eval benchmark, which at corpus scale
+    * discards real signal. Here the eval corpus' verbatim-8-gram shield
+    * is applied PER CHUNK (50 tokens, stride 40), and the verdict keeps
+    * every clean chunk of a contaminated doc: per doc, the chunk counts
+    * and the surviving clean-chunk token mass a trainer still gets.
+    * Output rows only for docs with at least one contaminated chunk
+    * (clean docs pass untouched — output ∝ contamination, q69's
+    * discipline).
+    *
+    * Scale shape: the eval shingle-hash set broadcasts (benchmarks are
+    * MBs); training chunks probe it map-side, so clean chunks never
+    * reach an exchange; the contaminated (doc_id, chunk_id) set — ∝
+    * contamination, not corpus — broadcasts back against the chunk
+    * table; one per-doc rollup. 8-byte xxhash64 keys cross the join,
+    * never shingle text (q58's discipline). */
   private val q107ChunkDecontamination = QueryDef(
     (s, dir) => chunkDecon(Tables(s, dir, "documents")),
     """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StringType, StructField, StructType}
@@ -31,6 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   *     verdict discipline); self-matches are excluded so a replayed
   *     batch re-derives identical admissions (the foreachBatch retry
   *     contract shared with NearDupIndex).
+  *
+  * A batch already on the driver runs the same steps over driver-held
+  * rows, with one pruned probe scan and one append (see [[admit]]).
   */
 object TextNearDupIndex {
 
@@ -65,14 +68,15 @@ object TextNearDupIndex {
   /** Explode a signature into its (band, band_key) rows: 2 bands x 8
     * rows, key = comma-joined minhash values of the band. */
   private def bandKeys(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("sig"),
-        explode(expr(
-          """transform(sequence(0, 1), b -> struct(cast(b AS int) AS band,
-            |  array_join(transform(slice(sig, b * 8 + 1, 8),
-            |    x -> cast(x AS string)), ',') AS band_key))""".stripMargin))
-          .as("bk"))
+    sigs.select(col("doc_id"), col("sig"), explode(bandKeyArray).as("bk"))
       .select(col("doc_id"), col("sig"),
         col("bk.band").as("band"), col("bk.band_key").as("band_key"))
+
+  /** A signature's (band, band_key) structs as one array column. */
+  private def bandKeyArray: Column = expr(
+    """transform(sequence(0, 1), b -> struct(cast(b AS int) AS band,
+      |  array_join(transform(slice(sig, b * 8 + 1, 8),
+      |    x -> cast(x AS string)), ',') AS band_key))""".stripMargin)
 
   /** Matching-position count between two 16-value signatures. */
   private def sigMatches(a: Column, b: Column): Column =
@@ -82,9 +86,67 @@ object TextNearDupIndex {
   /** Admit the documents of `batch` (doc_id, text) with no verified
     * near-dup (signature agreement ≥ `minMatches`/16) in the index or
     * among smaller-id batch members; append their signatures; return
-    * the admitted (doc_id, sig) rows. */
+    * the admitted (doc_id, sig) rows. Its jobs run under the `graft.op`
+    * label `dedup.text_admit`.
+    *
+    * Scale shape: a batch already on the driver (see [[DriverBatch]])
+    * takes the driver path. Signatures and band keys fold on the driver
+    * (O(batch) rows), and ONE job scans the index pre-filtered by
+    * `band_key IN (batch keys)`, unioned with the batch's own postings,
+    * verifies each candidate against the batch's probe rows planted as
+    * a map literal, and returns only the rejected ids. One append writes
+    * one file; no checkpoint, no shuffle. A batch read from files,
+    * tables or a stream (the streaming twin's micro-batches, q88) keeps
+    * the relational path below: a spread, two checkpoints and a shuffle
+    * join on (band, band_key). */
   def admit(spark: SparkSession, indexDir: String, batch: DataFrame,
-      minMatches: Int = 15): DataFrame = {
+      minMatches: Int = 15): DataFrame =
+    graft.core.OpLabel(spark, "dedup.text_admit") {
+      DriverBatch.of(batch) match {
+        case Some(local) => admitOnDriver(spark, indexDir, local, minMatches)
+        case None => admitRelational(spark, indexDir, batch, minMatches)
+      }
+    }
+
+  private def admitOnDriver(spark: SparkSession, indexDir: String,
+      batch: DataFrame, minMatches: Int): DataFrame = {
+    val sigs = signatures(batch)
+    val schema = bandKeys(sigs).schema // (doc_id, sig, band, band_key)
+    // explode's rows, from the band-key array folded on the driver
+    val keyed = sigs.select(col("doc_id"), col("sig"), bandKeyArray)
+      .collect().toSeq.flatMap { r =>
+        Option(r.getSeq[Row](2)).getOrElse(Nil)
+          .map(bk => Row(r.get(0), r.get(1), bk.get(0), bk.get(1)))
+      }
+    val rejected = if (keyed.isEmpty) Set.empty[Any] else {
+      val keys = keyed.flatMap(r => Option(r.getString(3))).distinct
+      val probe = DriverBatch.probes(schema("band_key").dataType,
+        StructType(Seq(schema("band"), schema("doc_id"), schema("sig"))),
+        keyed.groupBy(_.get(3)).map { case (k, rs) =>
+          k -> rs.map(r => Row(r.get(2), r.get(0), r.get(1))) })
+      val index = readIndex(spark, indexDir)
+        .filter(col("band_key").isin(keys: _*))
+      // the relational path's postings: the index's and the batch's own
+      val postings = index
+        .select(col("band"), col("band_key"), col("doc_id").as("i_id"),
+          col("sig").as("i_sig"), lit(true).as("from_index"))
+        .unionByName(DriverBatch.frame(spark, keyed, schema)
+          .select(col("band"), col("band_key"), col("doc_id").as("i_id"),
+            col("sig").as("i_sig"), lit(false).as("from_index")))
+      DriverBatch.rejected(postings, probe(col("band_key")), "doc_id",
+        col("p.band") === col("band") &&
+          sigMatches(col("p.sig"), col("i_sig")) >= minMatches)
+    }
+    val admitted = keyed.filterNot(r => rejected(r.get(0)))
+    if (admitted.nonEmpty)
+      DriverBatch.clustered(spark, schema, Seq(admitted))
+        .write.mode("append").parquet(indexDir)
+    DriverBatch.frame(spark, admitted.map(r => Row(r.get(0), r.get(1))).distinct,
+      StructType(Seq(schema("doc_id"), schema("sig"))))
+  }
+
+  private def admitRelational(spark: SparkSession, indexDir: String,
+      batch: DataFrame, minMatches: Int): DataFrame = {
     // the signature is CPU-bound per-row work (16 hash passes over the
     // token set); a batch arriving as a handful of input splits would
     // serialize it, so spread narrow batches across the cluster first —

@@ -117,21 +117,6 @@ object EventsStream {
         "click_ts")
   }
 
-  /** One FINAL attribution row per purchase (streaming argmax) — the
-    * half of q117 [[attributionPairs]] provably cannot deliver: an
-    * append-mode stream-stream join emits candidate pairs (every click
-    * in the window), because "most recent" over an unbounded stream is
-    * a per-purchase argmax that append mode cannot retract. This
-    * operator keeps the argmax itself as state instead: ONE ValueState
-    * per user holding the latest click seen — O(1) per user, unlike
-    * the pair join's O(clicks-in-window) buffered rows — and each
-    * purchase emits exactly once, reading that state. Batch rows are
-    * processed in (ts, event_id) composite order, so the emitted
-    * attribution equals q117's batch argmax whenever events arrive in
-    * event-time order across batches (the differential spec's
-    * contract); a click arriving AFTER its purchase's batch cannot
-    * retro-attribute — the documented as-of-processing semantics every
-    * streaming attribution system carries. */
   /** True microseconds since the epoch from a [[java.sql.Timestamp]].
     * `getTime` alone is MILLIS — the events fixture is physical
     * timestamp[us], and `getTime * 1000` would manufacture zeros where
@@ -187,6 +172,21 @@ object EventsStream {
     }
   }
 
+  /** One FINAL attribution row per purchase (streaming argmax) — the
+    * half of q117 [[attributionPairs]] provably cannot deliver: an
+    * append-mode stream-stream join emits candidate pairs (every click
+    * in the window), because "most recent" over an unbounded stream is
+    * a per-purchase argmax that append mode cannot retract. This
+    * operator keeps the argmax itself as state instead: ONE ValueState
+    * per user holding the latest click seen — O(1) per user, unlike
+    * the pair join's O(clicks-in-window) buffered rows — and each
+    * purchase emits exactly once, reading that state. Batch rows are
+    * processed in (ts, event_id) composite order, so the emitted
+    * attribution equals q117's batch argmax whenever events arrive in
+    * event-time order across batches (the differential spec's
+    * contract); a click arriving AFTER its purchase's batch cannot
+    * retro-attribute — the documented as-of-processing semantics every
+    * streaming attribution system carries. */
   def attributionLatest(events: Dataset[Event]): Dataset[Attribution] = {
     import events.sparkSession.implicits._
     events
