@@ -254,9 +254,10 @@ object MergeTable {
     * (dir, v) — but a table directory can be deleted and re-created at
     * the same path (tests, external tools), so every hit re-validates
     * against the file's (length, modTime) from the getFileStatus call
-    * the uncached path already paid. The lifecycle verbs re-read the
-    * head manifest many times per action (43 call sites); without this
-    * each read re-parses O(entries + stats + bloom lines) of text.
+    * the uncached path already paid. Every read and write resolves its
+    * manifest through [[snapshot]], often several times per action;
+    * without this each read re-parses O(entries + stats + bloom lines)
+    * of text.
     * Expired versions are dropped by [[vacuum]]. */
   private val manifestCache =
     new BoundedCache[(String, Long), (Long, Long, ManifestData)](1 << 12)
@@ -363,7 +364,7 @@ object MergeTable {
     // tombstone parquet files (paths relative to <dir>), `#dvf=` the
     // data files they mask with each file's tombstone count — the
     // read path scans clean files verbatim and anti-joins only the
-    // dirty ones (see applyDv).
+    // dirty ones (see readEntries).
     val dvs = lines.collect {
       case l if l.startsWith("#dv=") => l.drop(4).trim
     }
@@ -436,6 +437,22 @@ object MergeTable {
   private[graft] def readManifest(spark: SparkSession, dir: String,
       v: Long): Seq[String] = readManifestFull(spark, dir, v).entries
 
+  /** The version a read or write starts from: `version`, or the
+    * latest committed one — loud when `dir` holds no table. */
+  private[graft] def resolveVersion(spark: SparkSession, dir: String,
+      version: Option[Long] = None): Long =
+    version.getOrElse(versions(spark, dir).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"no MergeTable at $dir")))
+
+  /** The snapshot a read or write starts from: [[resolveVersion]]'s
+    * version and its parsed manifest (loud when vacuumed or never
+    * committed). */
+  private[ext] def snapshot(spark: SparkSession, dir: String,
+      version: Option[Long] = None): (Long, ManifestData) = {
+    val v = resolveVersion(spark, dir, version)
+    (v, readManifestFull(spark, dir, v))
+  }
+
   /** The key column an existing table at `dir` is keyed by. */
   def keyOf(spark: SparkSession, dir: String): String =
     keyMeta(spark, dir, None)
@@ -444,11 +461,8 @@ object MergeTable {
     * latest) — every write path buckets against this, and [[rebucket]]
     * changes it under a normal manifest commit. */
   def bucketWidth(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Int = {
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    readManifestFull(spark, dir, v).hexDigits
-  }
+      version: Option[Long] = None): Int =
+    snapshot(spark, dir, version)._2.hexDigits
 
   // ── Named tags: immutable version pins ──────────────────────────
 
@@ -469,9 +483,7 @@ object MergeTable {
       version: Option[Long] = None): Long = {
     require(TagName.matches(name),
       s"tag name '$name' must match ${TagName.regex}")
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    readManifestFull(spark, dir, v): Unit // loud on vacuumed/uncommitted
+    val (v, _) = snapshot(spark, dir, version) // loud on vacuumed
     val fs = hadoopFs(spark, dir)
     fs.mkdirs(tagsDir(dir)): Unit
     val p = new Path(tagsDir(dir), name)
@@ -645,11 +657,8 @@ object MergeTable {
     * them for routing (e.g. `graft.deletes.mode = mor` switches SQL
     * DELETE to [[deleteKeysMor]]/[[deleteWhereMor]]). */
   def properties(spark: SparkSession, dir: String,
-      version: Option[Long] = None): Map[String, String] = {
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    readManifestFull(spark, dir, v).props
-  }
+      version: Option[Long] = None): Map[String, String] =
+    snapshot(spark, dir, version)._2.props
 
   /** Set (or overwrite) table properties — one metadata-only commit:
     * same entries, fingerprints, stats, mapping and tombstones,
@@ -658,9 +667,7 @@ object MergeTable {
       kvs: Map[String, String]): Long =
     retryOnConflict("setProperties", dir) {
       require(kvs.nonEmpty, "no properties to set")
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       commitManifest(spark, dir, cur + 1, man.copy(props = man.props ++ kvs))
       cur + 1
     }
@@ -671,9 +678,7 @@ object MergeTable {
       keys: Seq[String]): Long =
     retryOnConflict("unsetProperties", dir) {
       require(keys.nonEmpty, "no properties to unset")
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       commitManifest(spark, dir, cur + 1, man.copy(props = man.props -- keys))
       cur + 1
     }
@@ -694,9 +699,7 @@ object MergeTable {
     * restore across a [[rebucket]] restores the width too). */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long =
     retryOnConflict("restore", dir) {
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val head = readManifestFull(spark, dir, cur)
+      val (cur, head) = snapshot(spark, dir)
       val old = readManifestFull(spark, dir, toVersion)
       // CHECK constraints live UNVERSIONED in _constraints/, so a
       // restore to a pre-constraint snapshot could silently publish a
@@ -796,9 +799,7 @@ object MergeTable {
           s"column name '$to' may not be empty or contain ':', '|', " +
             "or line breaks")
       }
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       val logical = readTable(spark, dir, Some(cur)).columns.toSet -
         "bucket"
       require(logical.contains(name),
@@ -832,7 +833,7 @@ object MergeTable {
       // expressions (the extend-only rationale), so letting a rename/
       // drop orphan one would disable it without a trace
       val post = applyLogicalView(
-        readPhysical(spark, dir, Some(cur)).limit(0), newCols)
+        readEntries(spark, dir, man, man.entries).limit(0), newCols)
       constraints(spark, dir).foreach { case (n, e) =>
         require(scala.util.Try(post.select(expr(e))).isSuccess,
           s"$op: CHECK constraint '$n' ($e) references '$name' — drop " +
@@ -892,9 +893,7 @@ object MergeTable {
       target: String): Long =
     retryOnConflict("widenColumn", dir) {
       val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       val phys = physOf(man, name)
       require(!man.cols.get(phys).contains(""),
         s"widenColumn: '$name' was dropped from this table")
@@ -904,7 +903,8 @@ object MergeTable {
       val to = org.apache.spark.sql.types.DataType.fromDDL(target)
       // current EFFECTIVE type: the head read's schema (any prior
       // widening already applied) — widening is monotone
-      val schema = readPhysical(spark, dir, Some(cur)).schema
+      val schema =
+        readEntries(spark, dir, man, liveEntries(dir, cur, man)).schema
       require(schema.fieldNames.contains(phys),
         s"widenColumn: no column '$name' in the current snapshot " +
           s"(${schema.fieldNames.mkString(",")})")
@@ -1268,17 +1268,6 @@ object MergeTable {
     }
   }
 
-  /** PROBE-ONLY flag (`-Dgraft.cow.probe.bareFingerprints=true`):
-    * emulates the round-13 commit shape — bucket-grain grouping, one
-    * hash channel, no per-file stats — so [[graft.tools.ScaleProbe]]
-    * can A/B the write-path cost of the round-14/15 manifest
-    * annotations against a bare upsert. Never set in production: it
-    * writes legacy-format fingerprints and NO `#st=` lines (sound —
-    * unattested files are simply never pruned — but it forfeits file
-    * pruning and 128-bit collision resistance for that epoch). */
-  private def bareFingerprintProbe: Boolean =
-    java.lang.Boolean.getBoolean("graft.cow.probe.bareFingerprints")
-
   /** ONE read-back scan of a just-written epoch serving BOTH manifest
     * annotations: per-BUCKET content fingerprints (`#fp=` — the
     * changefeed short-circuit and fsckDeep's attestation) and per-FILE
@@ -1306,19 +1295,6 @@ object MergeTable {
     val schemaJson = org.apache.spark.sql.types.StructType(
       df.schema.filterNot(_.name == "bucket")).json
     val payload = df.columns.filter(_ != "bucket").sorted
-    if (bareFingerprintProbe) {
-      // r13 shape: per-BUCKET single-channel fingerprints, no stats
-      val rows = df.select(
-          regexp_extract(col("_metadata.file_path"),
-            "bucket=([0-9a-f]+)/", 1).as("fp_bucket"),
-          xxhash64(payload.map(col): _*).cast("decimal(38,0)").as("fp_h"))
-        .groupBy("fp_bucket")
-        .agg(count(lit(1)).as("n"), sum("fp_h").as("h"))
-        .collect()
-      return (rows.map(r => r.getString(0) ->
-        s"${r.getLong(1)}:${BigInt(r.getDecimal(2).toBigInteger)}").toMap,
-        Map.empty, schemaJson)
-    }
     val stCols = statColumns(df.schema)
     // the bucket id comes from the FILE PATH, not the inferred
     // partition column: partition-type inference turns an epoch whose
@@ -1821,9 +1797,7 @@ object MergeTable {
     * boundary (same discipline as the write-side fingerprint). */
   def fsckDeep(spark: SparkSession, dir: String,
       version: Option[Long] = None): FsckDeepReport = {
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    val man = readManifestFull(spark, dir, v)
+    val (v, man) = snapshot(spark, dir, version)
     if (man.entries.isEmpty)
       return FsckDeepReport(0L, Seq.empty, Seq.empty)
     val df = readEntries(spark, dir, man, man.entries)
@@ -2319,13 +2293,17 @@ object MergeTable {
       case _ => build()
     }
 
-  /** A snapshot restricted to an already-pruned manifest entry list —
-    * the impacted-bucket read path shared by [[upsert]]/[[deleteKeys]]:
-    * listing only those files keeps the mergeSchema footer job AND the
-    * scan O(impacted files); building the full-table relation and
-    * filtering it would pay an O(table-files) footer merge per write
-    * just to plan a 40-file read (measured by the ScaleProbe manifest
-    * leg: 7.6 s/upsert at 4096 buckets before, flat after). */
+  /** The scan of exactly `entries` — the one relation every read
+    * builds: [[readEntries]] (clean files, and through
+    * [[liveWithIdentity]] the dirty ones), the MOR writers and the
+    * lookup leaf. Callers pass an already-pruned entry list (a whole
+    * snapshot, or the impacted buckets of a write): listing only those
+    * files keeps the schema resolution AND the scan O(listed files);
+    * building the full-table relation and filtering it would pay an
+    * O(table-files) footer merge per write just to plan a 40-file read
+    * (measured by the ScaleProbe manifest leg: 7.6 s/upsert at 4096
+    * buckets before, flat after). Cached per session (see
+    * [[SessionCaches]]). */
   private def scanEntriesRaw(spark: SparkSession, dir: String,
       entries: Seq[String],
       eschs: Map[String, String] = Map.empty,
@@ -2491,8 +2469,14 @@ object MergeTable {
     }
   }
 
-  /** DV-aware entry read: clean files (no tombstones) scan verbatim;
-    * dirty files are read through [[liveWithIdentity]]. */
+  /** The one DV-aware read of a snapshot's files, in their PHYSICAL
+    * column names (the mapping is the caller's: rewrites must keep
+    * physical names, since fingerprints sort them). Clean files (no
+    * tombstones) scan verbatim; dirty files are read through
+    * [[liveWithIdentity]]. Both go through [[scanEntriesRaw]], so
+    * `bucket` is a STRING partition column with or without tombstones
+    * and [[graft.plans.KeyToBucketPruning]] prunes either scan. Older
+    * files of a schema-evolved snapshot read null for newer columns. */
   private def readEntries(spark: SparkSession, dir: String,
       man: ManifestData, entries: Seq[String]): DataFrame = {
     val wides = widesOf(man.props)
@@ -2508,22 +2492,39 @@ object MergeTable {
     }
   }
 
+  /** A snapshot's whole file list — loud when it lists none: a
+    * version whose every row died has no schema to read, so name the
+    * state instead of surfacing Spark's opaque unable-to-infer error. */
+  private def liveEntries(dir: String, v: Long,
+      man: ManifestData): Seq[String] =
+    if (man.entries.nonEmpty) man.entries
+    else throw new IllegalStateException(
+      s"version $v of the MergeTable at $dir is EMPTY (every row " +
+        "deleted): an empty snapshot carries no schema; read an " +
+        "earlier version or re-create the table")
+
+  /** The COLUMN MAPPING at the read boundary: the logical name a
+    * snapshot's `#col=` mapping gives the physical column `c` — its
+    * new name, itself, or None when dropped. The layout columns
+    * (`bucket`, `v`) are never mapped. */
+  private def logicalName(cols: Map[String, String],
+      c: String): Option[String] =
+    if (c == "bucket" || c == "v") Some(c)
+    else cols.get(c) match {
+      case Some("") => None
+      case Some(l) => Some(l)
+      case None => Some(c)
+    }
+
   /** The snapshot's LOGICAL view of a physically-named frame: one
     * projection renaming mapped physicals and excluding dropped ones
     * (a single select, so a rename landing on a still-occupied
-    * physical name can never alias-collide mid-rewrite). The layout
-    * columns (`bucket`, `v`) are never mapped. */
+    * physical name can never alias-collide mid-rewrite). */
   private def applyLogicalView(df: DataFrame,
       cols: Map[String, String]): DataFrame =
     if (cols.isEmpty) df
-    else df.select(df.columns.toSeq.flatMap { c =>
-      if (c == "bucket" || c == "v") Some(col(c))
-      else cols.get(c) match {
-        case Some("") => None // dropped
-        case Some(l) => Some(col(c).as(l))
-        case None => Some(col(c))
-      }
-    }: _*)
+    else df.select(df.columns.toSeq.flatMap(c => logicalName(cols, c)
+      .map(l => if (l == c) col(c) else col(c).as(l))): _*)
 
   /** TYPE-WIDENING declarations ride table properties
     * (`graft.widen.<physical> = <type DDL>`) — carried forward by
@@ -2602,40 +2603,6 @@ object MergeTable {
       }: _*)
     }
 
-  /** The PHYSICAL snapshot (files' own column names, mapping not
-    * applied) — the internal read every rewrite path must use:
-    * fingerprints sort physical names, so a layout rewrite that
-    * silently materialized the logical names would break content
-    * identity (and CDC-freeness) for no user-visible gain. */
-  private def readPhysical(spark: SparkSession, dir: String,
-      version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    val man = readManifestFull(spark, dir, v)
-    if (man.entries.isEmpty)
-      // a version whose every row died lists no files — there is no
-      // schema to infer, so name the state instead of surfacing
-      // Spark's opaque unable-to-infer error
-      throw new IllegalStateException(
-        s"version $v of the MergeTable at $dir is EMPTY (every row " +
-          "deleted): an empty snapshot carries no schema; read an " +
-          "earlier version or re-create the table")
-    // mergeSchema: snapshots may mix pre- and post-evolution files
-    // (upsert allows EXTEND-only schema changes); merging footers is
-    // manifest-sized work, and older files' rows read null for newer
-    // columns — the standard parquet evolution contract.
-    // BOTH branches read through [[scanEntriesRaw]]'s explicit-schema
-    // scan, so `bucket` is a STRING-typed partition column whether or
-    // not the snapshot carries tombstones — one type contract across
-    // DV/non-DV versions, and [[graft.plans.KeyToBucketPruning]]'s
-    // partition filter prunes the dirty-file scan exactly as it does
-    // the clean one (the DV read's extra cost is the row-identity
-    // anti-join, never a lost pruning property).
-    if (man.dvf.isEmpty) scanEntriesRaw(spark, dir, man.entries,
-      man.eschs, widesOf(man.props))
-    else readEntries(spark, dir, man, man.entries)
-  }
-
   /** The table at a version (default: latest) — resolves that
     * version's manifest, scans exactly its files, and applies the
     * version's own COLUMN MAPPING (renames/drops are metadata the
@@ -2644,21 +2611,12 @@ object MergeTable {
     * (the key a reader may prune on). */
   def readTable(spark: SparkSession, dir: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    applyLogicalView(readPhysical(spark, dir, Some(v)),
-      readManifestFull(spark, dir, v).cols)
+    val (v, man) = snapshot(spark, dir, version)
+    applyLogicalView(readEntries(spark, dir, man, liveEntries(dir, v, man)),
+      man.cols)
   }
 
-  /** Builder for the `merge_table(dir[, version])` SQL table-valued
-    * function: resolves the snapshot through [[readTable]] at analysis
-    * time, so plain SQL reads the table — time travel via the second
-    * argument, and `WHERE key = <lit>` point lookups prune through
-    * [[graft.plans.KeyToBucketPruning]] exactly as the DataFrame path
-    * does (the TVF splices the same scan plan, footer metadata and
-    * all). Registered per-session by [[registerSql]] or for every
-    * session by [[graft.GraftExtensions]]. Arguments must be literals
-    * (a plan must resolve before any row exists to evaluate them). */
+  /** A SQL string argument, which must be a literal. */
   private def litString(fn: String,
       e: org.apache.spark.sql.catalyst.expressions.Expression,
       what: String): String = {
@@ -2670,18 +2628,35 @@ object MergeTable {
     }
   }
 
-  private def litLong(fn: String,
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      what: String): Long = {
+  /** The version a SQL version argument names: an integer literal is
+    * a version number, a string literal a tag name — resolved through
+    * the immutable pin, so `merge_table(dir, 'train-2026-08')` re-reads
+    * the exact snapshot that run pinned. Shared by `merge_table`, both
+    * `table_changes` endpoints and the prepared lookup. */
+  private[graft] def versionArg(spark: SparkSession, dir: String,
+      fn: String, what: String,
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Long = {
     require(e.foldable, s"$fn: $what must be a literal")
     e.eval() match {
       case i: java.lang.Integer => i.longValue
       case l: java.lang.Long => l.longValue
+      case s: org.apache.spark.unsafe.types.UTF8String =>
+        tagVersion(spark, dir, s.toString)
       case other => throw new IllegalArgumentException(
-        s"$fn: $what must be an integer literal, got $other")
+        s"$fn: $what must be an integer version or a string tag name, " +
+          s"got $other")
     }
   }
 
+  /** Builder for the `merge_table(dir[, version])` SQL table-valued
+    * function: resolves the snapshot through [[readTable]] at analysis
+    * time, so plain SQL reads the table — time travel via the second
+    * argument, and `WHERE key = <lit>` point lookups prune through
+    * [[graft.plans.KeyToBucketPruning]] exactly as the DataFrame path
+    * does (the TVF splices the same scan plan, footer metadata and
+    * all). Registered per-session by [[registerSql]] or for every
+    * session by [[graft.GraftExtensions]]. Arguments must be literals
+    * (a plan must resolve before any row exists to evaluate them). */
   private[graft] val tableFunctionBuilder
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -2690,22 +2665,8 @@ object MergeTable {
         s"merge_table(dir[, version]) takes 1-2 arguments, got ${exprs.length}")
       val dir = litString("merge_table", exprs.head, "dir")
       val spark = org.apache.spark.sql.SparkSession.active
-      // the version argument is an integer literal (a version number)
-      // or a string literal (a tag name — resolved through the
-      // immutable pin, so `merge_table(dir, 'train-2026-08')` re-reads
-      // the exact snapshot that run pinned)
-      val version = exprs.drop(1).headOption.map { e =>
-        require(e.foldable, "merge_table: version must be a literal")
-        e.eval() match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long => l.longValue
-          case s: org.apache.spark.unsafe.types.UTF8String =>
-            tagVersion(spark, dir, s.toString)
-          case other => throw new IllegalArgumentException(
-            "merge_table: version must be an integer version or a " +
-              s"string tag name, got $other")
-        }
-      }
+      val version = exprs.drop(1).headOption
+        .map(versionArg(spark, dir, "merge_table", "version", _))
       readTable(spark, dir, version).queryExecution.logical
   }
 
@@ -2773,21 +2734,9 @@ object MergeTable {
       // endpoints are integer versions or string TAG names — so
       // `table_changes(dir, 'release-7', 'release-8')` is the diff
       // between two pinned snapshots, the release-note idiom
-      def endpoint(e: org.apache.spark.sql.catalyst.expressions
-          .Expression, what: String): Long = {
-        require(e.foldable, s"table_changes: $what must be a literal")
-        e.eval() match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long => l.longValue
-          case s: org.apache.spark.unsafe.types.UTF8String =>
-            tagVersion(spark, dir, s.toString)
-          case other => throw new IllegalArgumentException(
-            s"table_changes: $what must be an integer version or a " +
-              s"string tag name, got $other")
-        }
-      }
-      val fromV = endpoint(exprs(1), "fromV")
-      val toV = exprs.drop(2).headOption.map(endpoint(_, "toV"))
+      val fromV = versionArg(spark, dir, "table_changes", "fromV", exprs(1))
+      val toV = exprs.drop(2).headOption
+        .map(versionArg(spark, dir, "table_changes", "toV", _))
         .getOrElse(versions(spark, dir).max)
       changes(spark, dir, fromV, toV).queryExecution.logical
   }
@@ -2931,9 +2880,7 @@ object MergeTable {
   /** The metadata-only table detail behind `merge_table_detail`. */
   def detail(spark: SparkSession, dir: String): DataFrame = {
     val vs = versions(spark, dir)
-    val cur = vs.lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir"))
-    val md = readManifestFull(spark, dir, cur)
+    val (cur, md) = snapshot(spark, dir, vs.lastOption)
     val buckets = md.entries.map(bucketOfEntry).distinct
     val attested = fpTotal(md.fps, buckets.toSet)
     import spark.implicits._
@@ -3004,9 +2951,7 @@ object MergeTable {
       version: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "readKeys needs at least one key")
     val key = keyMeta(spark, dir, None)
-    val v = version.getOrElse(versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir")))
-    val man = readManifestFull(spark, dir, v)
+    val (v, man) = snapshot(spark, dir, version)
     val lits = keys.map {
       case k @ (_: Long | _: Int | _: Short | _: Byte | _: String) =>
         org.apache.spark.sql.catalyst.expressions.Literal(k)
@@ -3041,16 +2986,10 @@ object MergeTable {
   private[graft] def prepareLookup(spark: SparkSession,
       spec: graft.plans.PreparedLookup.Spec)
       : Option[graft.plans.MergeTableLookup] = {
-    val v = spec.version match {
-      case None => versions(spark, spec.dir).lastOption
-      case Some(Left(n)) => Some(n)
-      case Some(Right(tag)) => Some(tagVersion(spark, spec.dir, tag))
-    }
-    v.flatMap { v =>
-      val man = readManifestFull(spark, spec.dir, v)
-      lookupLeaf(spark, spec.dir, v, man, Right(spec.column),
-        Seq(spec.value), spec.columns, man.entries)
-    }
+    val (v, man) = snapshot(spark, spec.dir, spec.version.map(
+      versionArg(spark, spec.dir, "merge_table", "version", _)))
+    lookupLeaf(spark, spec.dir, v, man, Right(spec.column),
+      Seq(spec.value), spec.columns, man.entries)
   }
 
   /** The one builder of [[graft.plans.MergeTableLookup]]: `Project`
@@ -3077,13 +3016,8 @@ object MergeTable {
       widesOf(man.props)).queryExecution.analyzed
     val view =
       if (man.cols.isEmpty) rel
-      else Project(rel.output.flatMap { a =>
-        man.cols.get(a.name) match {
-          case Some("") => None
-          case Some(l) => Some(Alias(a, l)())
-          case None => Some(a)
-        }
-      }, rel)
+      else Project(rel.output.flatMap(a => logicalName(man.cols, a.name)
+        .map(l => if (l == a.name) a else Alias(a, l)())), rel)
     val resolver = spark.sessionState.conf.resolver
     def resolve(name: String): Option[Attribute] =
       view.resolve(Seq(name), resolver).collect { case a: Attribute => a }
@@ -3273,9 +3207,7 @@ object MergeTable {
         "column name v is reserved for the table layout (version " +
           "epoch) — rename before upsert")
       val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       // the batch arrives in LOGICAL names; the files speak physical
       val (batch, impacted, nBatch) = bucketed(
         applyWidesCast(toPhysical(updates, man.cols), widesOf(man.props)),
@@ -3413,9 +3345,7 @@ object MergeTable {
       beforeCommit: () => Unit, mor: Boolean): Written =
     retryOnConflict(if (mor) "deleteKeysMor" else "deleteKeys", dir) {
       val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       val (ks, impacted, _) = bucketed(
         keys.select(col(keys.columns.head).as(key)), key, man.hexDigits,
         None)
@@ -3463,9 +3393,7 @@ object MergeTable {
   def deleteWhereMor(spark: SparkSession, dir: String,
       cond: Column): MorDeleteStats =
     retryOnConflict("deleteWhereMor", dir) {
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       val plan = morTombstonePlan(spark, dir, cur, man, man.entries, { live =>
         // the predicate resolves against the LOGICAL view, but the
         // fingerprint decrement must hash PHYSICAL columns (names
@@ -3710,9 +3638,7 @@ object MergeTable {
           "row belongs to a different bucket; delete + insert instead")
       require(!setNames.exists(Set("v", "bucket")),
         "v and bucket are reserved layout column names")
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       // one aggregate job: the source's bucket set AND the
       // at-most-one-row-per-key gate (the upsert discipline)
       val (batch, srcBuckets, _) = bucketed(source.drop("bucket"), key,
@@ -3986,17 +3912,13 @@ object MergeTable {
       shape: (ManifestData, String, DataFrame) => EpochRows): CowStats =
     retryOnConflict(op, dir) {
       val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       val scope = normalizeScope(buckets, man.hexDigits)
       val doomed = scope.fold(man.entries)(bs =>
         man.entries.filter(e => bs.contains(bucketOfEntry(e))))
       if (doomed.isEmpty) CowStats(cur, 0L, 0L, 0L, 0L, 0L)
       else {
-        val all = if (doomed.size == man.entries.size)
-            readPhysical(spark, dir, Some(cur))
-          else readEntries(spark, dir, man, doomed)
+        val all = readEntries(spark, dir, man, doomed)
         val doomedBuckets = doomed.map(bucketOfEntry).toSet
         val ec = commitEpoch(spark, dir, cur, man,
           Some(shape(man, key, all)), replaces = doomedBuckets,
@@ -4088,10 +4010,9 @@ object MergeTable {
       s"bucket width must be 1..8 hex digits, got $newHexDigits")
     retryOnConflict("rebucket", dir) {
       val key = keyMeta(spark, dir, None)
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
-      val rehashed = readPhysical(spark, dir, Some(cur)).drop("bucket")
+      val (cur, man) = snapshot(spark, dir)
+      val rehashed = readEntries(spark, dir, man, liveEntries(dir, cur, man))
+        .drop("bucket")
         .withColumn("bucket", bucketCol(col(key), newHexDigits))
       // every old bucket is replaced, and the rewrite materialises every
       // tombstone
@@ -4165,9 +4086,7 @@ object MergeTable {
     retryOnConflict("compactDvs", dir) {
       require(maxFilesPerBucket >= 1,
         "a bucket keeps at least one file per epoch written")
-      val cur = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
-      val man = readManifestFull(spark, dir, cur)
+      val (cur, man) = snapshot(spark, dir)
       val scope = normalizeScope(buckets, man.hexDigits)
       val target = man.entries.groupBy(bucketOfEntry).collect {
         case (b, es) if scope.forall(_.contains(b)) &&
@@ -4301,9 +4220,7 @@ object MergeTable {
     * maintenance verb here keeps. */
   def maintenanceAdvice(spark: SparkSession, dir: String)
       : Seq[MaintenanceAdvice] = {
-    val cur = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no MergeTable at $dir"))
-    val man = readManifestFull(spark, dir, cur)
+    val (cur, man) = snapshot(spark, dir)
     val p = man.props
     def prop(k: String, dflt: Double): Double =
       p.get(k).map(_.toDouble).getOrElse(dflt)
@@ -4645,23 +4562,21 @@ object MergeTable {
       // changefeed run straddling OPTIMIZE): zero rows, and the cost
       // is two manifest reads plus ONE footer for the schema. The
       // schema probe is the newest version's first live file, so the
-      // empty batch carries the current physical payload columns a
-      // chained consumer selects on (representative, not the
-      // mergeSchema union — a zero-row batch has no values to lose).
+      // empty batch carries the current payload columns a chained
+      // consumer selects on (representative, not the mergeSchema
+      // union — a zero-row batch has no values to lose), under the
+      // destination's declared widenings and names, as a non-empty
+      // batch reads them.
       import org.apache.spark.sql.types.{StructField, StructType,
         StringType, LongType}
-      val probe = readManifest(spark, dir, toV).headOption
-        .orElse(readManifest(spark, dir, fromV).headOption)
+      val probe = manTo.entries.headOption.orElse(manFrom.entries.headOption)
       val fields = probe match {
-        case Some(e) => spark.read.parquet(s"$dir/data/$e").schema.fields
-          .filterNot(f => f.name == "v" || f.name == "bucket")
-          .flatMap { f =>
-            viewCols.get(f.name) match {
-              case Some("") => None
-              case Some(l) => Some(f.copy(name = l))
-              case None => Some(f)
-            }
-          }
+        case Some(e) => applyWidesTo(StructType(
+            spark.read.parquet(s"$dir/data/$e").schema.fields
+              .filterNot(f => f.name == "v" || f.name == "bucket")),
+            widesOf(manTo.props)).fields
+          .flatMap(f => logicalName(viewCols, f.name)
+            .map(l => f.copy(name = l)))
         case None => Array(StructField(key, LongType))
       }
       val keyField = fields.find(_.name == key)

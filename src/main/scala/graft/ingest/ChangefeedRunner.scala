@@ -121,9 +121,7 @@ object ChangefeedRunner {
     * batch — see below). */
   def runOnce(spark: SparkSession, tableDir: String, sinkDir: String,
       cursor: CursorStore): Option[RunResult] = {
-    val cur = graft.ext.MergeTable.versions(spark, tableDir).lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"no MergeTable at $tableDir"))
+    val cur = graft.ext.MergeTable.resolveVersion(spark, tableDir)
     cursor.read() match {
       case None =>
         cursor.commit(cur) // bootstrap: pin the snapshot, publish nothing

@@ -54,9 +54,11 @@ import org.apache.spark.unsafe.types.UTF8String
 object PreparedLookup {
 
   /** The lookup the parser matched: the table dir, the version
-    * argument (a number or a tag), the selected column names (None for
-    * `*`), the compared column's name and the literal it equals. */
-  final case class Spec(dir: String, version: Option[Either[Long, String]],
+    * argument (an integer or string literal, which
+    * [[graft.ext.MergeTable.versionArg]] reads as the `merge_table` TVF
+    * does), the selected column names (None for `*`), the compared
+    * column's name and the literal it equals. */
+  final case class Spec(dir: String, version: Option[Literal],
       columns: Option[Seq[String]], column: String, value: Literal)
 
   /** `parsed` as an [[UnresolvedMergeTableLookup]] when its top is the
@@ -76,16 +78,11 @@ object PreparedLookup {
   }
 
   private def tableArgs(args: Seq[Expression])
-      : Option[(String, Option[Either[Long, String]])] = args match {
+      : Option[(String, Option[Literal])] = args match {
     case Seq(Literal(d: UTF8String, StringType)) => Some((d.toString, None))
-    case Seq(Literal(d: UTF8String, StringType), Literal(v, t)) =>
-      val version = (v, t) match {
-        case (i: java.lang.Integer, IntegerType) => Some(Left(i.longValue))
-        case (l: java.lang.Long, LongType) => Some(Left(l.longValue))
-        case (s: UTF8String, StringType) => Some(Right(s.toString))
-        case _ => None
-      }
-      version.map(v => (d.toString, Some(v)))
+    case Seq(Literal(d: UTF8String, StringType),
+        v @ Literal(_, IntegerType | LongType | StringType)) =>
+      Some((d.toString, Some(v)))
     case _ => None
   }
 

@@ -106,10 +106,8 @@ object ChangefeedSourceProvider {
 
   private[sources] def startOf(spark: SparkSession, dir: String,
       options: CaseInsensitiveStringMap): Long =
-    Option(options.get("initialVersion")).map(_.trim.toLong).getOrElse(
-      MergeTable.versions(spark, dir).lastOption
-        .getOrElse(throw new IllegalArgumentException(
-          s"no MergeTable at $dir")))
+    MergeTable.resolveVersion(spark, dir,
+      Option(options.get("initialVersion")).map(_.trim.toLong))
 
   /** The changefeed schema is stable per table (key + old_row/new_row
     * payload structs + change class); probed via a self-diff — two
@@ -124,8 +122,8 @@ object ChangefeedSourceProvider {
     val vs = MergeTable.versions(spark, dir)
     val probe =
       if (vs.contains(v)) v
-      else vs.headOption.getOrElse(
-        throw new IllegalArgumentException(s"no MergeTable at $dir"))
+      // no version at all: the resolver names the missing table
+      else vs.headOption.getOrElse(MergeTable.resolveVersion(spark, dir))
     MergeTable.changes(spark, dir, probe, probe).schema
   }
 }
