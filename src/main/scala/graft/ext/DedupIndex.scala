@@ -53,11 +53,12 @@ object DedupIndex {
     * driver path. Its md5 fingerprints fold on the driver, the window's
     * min-id collapse runs over O(batch) driver rows, one index scan
     * pre-filtered by `fp IN (batch fps)` returns the known
-    * fingerprints, and one append writes one file; no checkpoint, no
-    * shuffle. A batch read from files, tables or a stream (the streaming
-    * twin's micro-batches, q85, q95, q126) keeps the relational path
-    * below: the window and a hash anti-join keyed on the 128-bit digest,
-    * one checkpoint, one append per task. */
+    * fingerprints, and one file is appended from the driver
+    * ([[DriverFiles]]); no checkpoint, no shuffle, no write job. A
+    * batch read from files, tables or a stream (the streaming twin's
+    * micro-batches, q85, q95, q126) keeps the relational path below:
+    * the window and a hash anti-join keyed on the 128-bit digest, one
+    * checkpoint, one append per task. */
   def admit(spark: SparkSession, indexDir: String,
       batch: DataFrame): DataFrame =
     graft.core.OpLabel(spark, "dedup.exact_admit") {
@@ -86,11 +87,9 @@ object DedupIndex {
         .select("fp").collect().map(_.getString(0)).toSet
     val admitted = rows.indices.filter(i => canonical(i) &&
       !known(rows(i).getString(fpAt))).map(rows(_))
-    if (admitted.nonEmpty)
-      DriverBatch.clustered(spark, StructType(Seq(schema(fpAt),
-          schema(idAt).copy(name = "canonical_id"))),
-        Seq(admitted.map(r => Row(r.get(fpAt), r.get(idAt)))))
-        .write.mode("append").parquet(indexDir)
+    DriverFiles.write(spark, indexDir, StructType(Seq(schema(fpAt),
+        schema(idAt).copy(name = "canonical_id"))), Nil,
+      admitted.map(r => Row(r.get(fpAt), r.get(idAt))))
     // the relational path's column order: the USING key first
     val order = fpAt +: schema.indices.filter(_ != fpAt)
     DriverBatch.frame(spark, admitted.map(r => Row.fromSeq(order.map(r.get))),

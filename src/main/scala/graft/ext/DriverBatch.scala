@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * relation with no job. It then scans the index once, pre-filtered by
   * the batch's keys, and verifies the candidates in that same job
   * against the probe rows planted as a map literal (`probes`). It
-  * appends the admitted rows once, with no exchange (`clustered`), and
-  * returns them as a local relation, so the next verb's batch is on the
-  * driver too. A batch read from files, tables or a stream keeps the
-  * relational path, which stays the row-for-row test reference. */
+  * appends the admitted rows from the driver with no job
+  * ([[DriverFiles]]) and returns them as a local relation, so the next
+  * verb's batch is on the driver too. A batch read from files, tables
+  * or a stream keeps the relational path, which stays the row-for-row
+  * test reference. */
 private[ext] object DriverBatch {
 
   /** `batch` as a frame whose rows are on the driver, or None when some
@@ -73,18 +74,4 @@ private[ext] object DriverBatch {
         (!col("from_index") && col("i_id") < col(s"p.$id")))
       .filter(verify)
       .select(col(s"p.$id")).collect().map(_.get(0)).toSet
-
-  /** `groups` as a frame of at most defaultParallelism partitions, each
-    * group whole in one partition: a `partitionBy` write of it puts one
-    * file per group, without the shuffle that `repartition(n, col)`
-    * costs. */
-  def clustered(spark: SparkSession, schema: StructType,
-      groups: Iterable[Seq[Row]]): DataFrame = {
-    val n = math.max(1, math.min(groups.size,
-      spark.sparkContext.defaultParallelism))
-    val slices = groups.toSeq.zipWithIndex
-      .groupMap(_._2 % n)(_._1).values.map(_.flatten).toSeq
-    spark.createDataFrame(spark.sparkContext
-      .parallelize(slices, n).flatMap(identity), schema)
-  }
 }

@@ -124,12 +124,13 @@ object IvfPqIndex {
     *
     * Scale shape: a batch already on the driver (see [[DriverBatch]])
     * takes the driver path: the grid, residual and PQ-code projections
-    * fold on the driver over O(batch) rows, and one write puts one file
-    * per cell; no checkpoint, no shuffle. A batch read from files,
-    * tables or a stream (the streaming twin's micro-batches, q97,
-    * `ScaleProbe`) keeps the relational path: a spread grid frame and a
-    * residual frame, each checkpointed, the coded rows checkpointed, and
-    * a shuffle by cell before the write. */
+    * fold on the driver over O(batch) rows, and the run is written from
+    * the driver ([[DriverFiles.replace]]), one file per cell, staged and
+    * then swapped in for `batch=<runId>`; no checkpoint, no shuffle, no
+    * job. A batch read from files, tables or a stream (the streaming
+    * twin's micro-batches, q97, `ScaleProbe`) keeps the relational path:
+    * a spread grid frame and a residual frame, each checkpointed, the
+    * coded rows checkpointed, and a shuffle by cell before the write. */
   def add(spark: SparkSession, indexDir: String, batch: DataFrame,
       runId: Long): DataFrame =
     graft.core.OpLabel(spark, "ivfpq.add") {
@@ -148,9 +149,8 @@ object IvfPqIndex {
         Similarity.gridProjection(batch)), subcents)
       .select("vec_id", "codes", "cell")
     val rows = coded.collect().toSeq // local projections: no job
-    DriverBatch.clustered(spark, coded.schema, rows.groupBy(_.get(2)).values)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/batch=$runId")
+    DriverFiles.replace(spark, s"$indexDir/batch=$runId", coded.schema,
+      Seq("cell"), rows)
     DriverBatch.frame(spark, rows, coded.schema)
   }
 

@@ -129,7 +129,8 @@ object MergeTable {
       }
       stored
     } else {
-      val k = keyCol.getOrElse(sys.error(s"no MergeTable at $dir"))
+      val k = keyCol.getOrElse(
+        throw new IllegalArgumentException(s"no MergeTable at $dir"))
       fs.mkdirs(path.getParent)
       val out = fs.create(path, false)
       try out.write(k.getBytes("UTF-8")) finally out.close()
@@ -2648,6 +2649,21 @@ object MergeTable {
     }
   }
 
+  /** The version a string option names, by [[versionArg]]'s rule: an
+    * integer is a version number, any other value a tag name. A value
+    * that names no tag fails naming the missing tag, or, if it is a
+    * number (`1.5`), naming `what` and the table. */
+  private[graft] def versionOption(spark: SparkSession, dir: String,
+      fn: String, what: String, raw: String): Long = {
+    val s = raw.trim
+    s.toLongOption.orElse(tags(spark, dir).get(s)).getOrElse {
+      if (scala.util.Try(BigDecimal(s)).isSuccess)
+        throw new IllegalArgumentException(s"$fn: $what of $dir must be " +
+          s"an integer version or a tag name, got $s")
+      tagVersion(spark, dir, s)
+    }
+  }
+
   /** Builder for the `merge_table(dir[, version])` SQL table-valued
     * function: resolves the snapshot through [[readTable]] at analysis
     * time, so plain SQL reads the table — time travel via the second
@@ -2737,7 +2753,7 @@ object MergeTable {
       val fromV = versionArg(spark, dir, "table_changes", "fromV", exprs(1))
       val toV = exprs.drop(2).headOption
         .map(versionArg(spark, dir, "table_changes", "toV", _))
-        .getOrElse(versions(spark, dir).max)
+        .getOrElse(resolveVersion(spark, dir))
       changes(spark, dir, fromV, toV).queryExecution.logical
   }
 

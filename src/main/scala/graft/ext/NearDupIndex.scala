@@ -59,10 +59,10 @@ object NearDupIndex {
     * static `bucket IN` partition filter, unioned with the batch's own
     * postings, verifies each candidate with the codegen cosine against
     * the batch's probe rows planted as a map literal, and returns only
-    * the rejected ids. One append writes one file per touched bucket;
-    * no checkpoint, no shuffle. A batch read from files, tables or a
-    * stream (the streaming twin's micro-batches, q84, q92) keeps the
-    * relational path below. */
+    * the rejected ids. One file per touched bucket is appended from the
+    * driver ([[DriverFiles]]); no checkpoint, no shuffle, no write job.
+    * A batch read from files, tables or a stream (the streaming twin's
+    * micro-batches, q84, q92) keeps the relational path below. */
   def admit(spark: SparkSession, indexDir: String, batch: DataFrame,
       planes: Int, bar: Double = 0.9): DataFrame =
     graft.core.OpLabel(spark, "dedup.vec_admit") {
@@ -104,9 +104,7 @@ object NearDupIndex {
           col("p.embedding"), col("i_emb")) >= bar)
     }
     val admitted = rows.filterNot(r => rejected(r.get(0)))
-    if (admitted.nonEmpty)
-      DriverBatch.clustered(spark, schema, admitted.groupBy(_.get(2)).values)
-        .write.mode("append").partitionBy("bucket").parquet(indexDir)
+    DriverFiles.write(spark, indexDir, schema, Seq("bucket"), admitted)
     DriverBatch.frame(spark, admitted, schema)
   }
 

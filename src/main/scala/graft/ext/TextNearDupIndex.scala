@@ -94,11 +94,12 @@ object TextNearDupIndex {
     * (O(batch) rows), and ONE job scans the index pre-filtered by
     * `band_key IN (batch keys)`, unioned with the batch's own postings,
     * verifies each candidate against the batch's probe rows planted as
-    * a map literal, and returns only the rejected ids. One append writes
-    * one file; no checkpoint, no shuffle. A batch read from files,
-    * tables or a stream (the streaming twin's micro-batches, q88) keeps
-    * the relational path below: a spread, two checkpoints and a shuffle
-    * join on (band, band_key). */
+    * a map literal, and returns only the rejected ids. One file is
+    * appended from the driver ([[DriverFiles]]); no checkpoint, no
+    * shuffle, no write job. A batch read from files, tables or a stream
+    * (the streaming twin's micro-batches, q88) keeps the relational path
+    * below: a spread, two checkpoints and a shuffle join on (band,
+    * band_key). */
   def admit(spark: SparkSession, indexDir: String, batch: DataFrame,
       minMatches: Int = 15): DataFrame =
     graft.core.OpLabel(spark, "dedup.text_admit") {
@@ -138,9 +139,7 @@ object TextNearDupIndex {
           sigMatches(col("p.sig"), col("i_sig")) >= minMatches)
     }
     val admitted = keyed.filterNot(r => rejected(r.get(0)))
-    if (admitted.nonEmpty)
-      DriverBatch.clustered(spark, schema, Seq(admitted))
-        .write.mode("append").parquet(indexDir)
+    DriverFiles.write(spark, indexDir, schema, Nil, admitted)
     DriverBatch.frame(spark, admitted.map(r => Row(r.get(0), r.get(1))).distinct,
       StructType(Seq(schema("doc_id"), schema("sig"))))
   }

@@ -59,7 +59,8 @@ import graft.ext.MergeTable
   * `(initialVersion, latest]`, so a consumer initialized from version
   * V's snapshot passes V and never double-counts the bootstrap
   * (default: the newest committed version when the source is created —
-  * "changes from now on"). RETENTION contract, loud: vacuum must
+  * "changes from now on"). It takes a version number or a tag name,
+  * as `merge_table` does. RETENTION contract, loud: vacuum must
   * retain any version still unconsumed by the stream's checkpoint —
   * [[MergeTable.changes]] on a vacuumed endpoint names the missing
   * version rather than silently skipping rows. `pinFrontier=true`
@@ -107,7 +108,8 @@ object ChangefeedSourceProvider {
   private[sources] def startOf(spark: SparkSession, dir: String,
       options: CaseInsensitiveStringMap): Long =
     MergeTable.resolveVersion(spark, dir,
-      Option(options.get("initialVersion")).map(_.trim.toLong))
+      Option(options.get("initialVersion")).map(MergeTable.versionOption(
+        spark, dir, "merge-table-changes", "initialVersion", _)))
 
   /** The changefeed schema is stable per table (key + old_row/new_row
     * payload structs + change class); probed via a self-diff — two

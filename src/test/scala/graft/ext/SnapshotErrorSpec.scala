@@ -129,29 +129,25 @@ object SnapshotErrorSpec {
     s"$fn: $what must be an integer version or a string tag name, got 1.5"
   private def nonNumeric(s: String) =
     ISE -> s"KV cursor 'cursor' holds a non-numeric value: '$s'"
-  private def numberFormat(s: String) =
-    "java.lang.NumberFormatException" -> s"""For input string: "$s""""
 
   private def row(surface: String, outcomes: (String, String)*) =
     Inputs.zip(outcomes).map { case (bad, o) => (surface, bad) -> o }
 
-  /** What each surface throws — readKeys resolves the key column
-    * before the version, table_changes takes its default end version
-    * as the largest listed one, and the changefeed entry points parse
-    * their cursor or option before any table is read. */
+  /** What each surface throws — the changefeed runner parses its
+    * cursor before any table is read, and the changefeed source reads
+    * its option by the SQL version argument's rule. */
   private val Expected: Map[(String, String), (String, String)] = (
     Seq("readTable", "properties", "bucketWidth").flatMap(s =>
       row(s, NoTable, noVersion(1), NoTag, noVersion(-1))) ++
-    row("readKeys", "java.lang.RuntimeException" -> "no MergeTable at <dir>",
-      noVersion(1), NoTag, noVersion(-1)) ++
+    row("readKeys", NoTable, noVersion(1), NoTag, noVersion(-1)) ++
     Seq("merge_table", "prepared lookup").flatMap(s =>
       row(s, NoTable, noVersion(1), NoTag,
         notAVersion("merge_table", "version"))) ++
-    row("table_changes",
-      "java.lang.UnsupportedOperationException" -> "empty.max",
-      noVersion(1), NoTag, notAVersion("table_changes", "fromV")) ++
+    row("table_changes", NoTable, noVersion(1), NoTag,
+      notAVersion("table_changes", "fromV")) ++
     row("ChangefeedRunner.runOnce", NoTable, noVersion(1),
       nonNumeric("no-such-tag"), nonNumeric("1.5")) ++
-    row("ChangefeedSource", NoTable, noVersion(1),
-      numberFormat("no-such-tag"), numberFormat("1.5"))).toMap
+    row("ChangefeedSource", NoTable, noVersion(1), NoTag,
+      IAE -> ("merge-table-changes: initialVersion of <dir> must be an " +
+        "integer version or a tag name, got 1.5"))).toMap
 }

@@ -208,6 +208,34 @@ class ChangefeedSourceSpec extends SparkSpec {
     }
   }
 
+  test("a tag name as initialVersion starts the stream at the tag's " +
+      "version, as the same version number does") {
+    import spark.implicits._
+    val (dir, _) = mkTable(50)
+    MergeTable.upsert(spark, dir, Seq((1L, "Z", 1L))
+      .toDF("key", "status", "cents"))
+    MergeTable.tag(spark, dir, "release", Some(2L))
+    MergeTable.upsert(spark, dir, Seq((5L, "Z", 5L))
+      .toDF("key", "status", "cents"))
+    def drained(initial: String): Seq[(Long, String)] = {
+      val root = java.nio.file.Files.createTempDirectory("graft-cfs-tag")
+      val sink = root.resolve("sink").toString
+      spark.readStream.format("merge-table-changes")
+        .option("dir", dir).option("initialVersion", initial).load()
+        .writeStream.format("parquet").option("path", sink)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      spark.read.parquet(sink).select("key", "change").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    }
+    assert(drained("release") === Seq((5L, "update")))
+    assert(drained("2") === drained("release"))
+    // a tag may look like a number; it still names the tag
+    MergeTable.tag(spark, dir, "1.5", Some(2L))
+    assert(drained("1.5") === drained("release"))
+  }
+
   test("the provider is loud on a missing dir option and derives the " +
       "changefeed schema (key, old_row, new_row, change)") {
     val (dir, _) = mkTable(20)
